@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 /** Per-round benchmark main. Emits ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{name:min_sec,...},
   *  "median":{name:median_sec,...},"samples":{name:actual_runs,...},
@@ -79,7 +82,7 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           None
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
         }
         val t = (System.nanoTime() - t0) / 1e9
@@ -209,7 +212,7 @@ object Bench {
                     if (v > 0 && acc.get(k).forall(v < _)) acc(k) = v
                   }
                 }
-          } catch { case _: Throwable => () } // a malformed file just contributes nothing
+          } catch { case NonFatal(_) => () } // a malformed file just contributes nothing
         }
       acc.toMap
     }
@@ -354,7 +357,7 @@ object Bench {
         "^\\| ((?:q|op)[a-z0-9_]+) ".r.findFirstMatchIn(l).map(_.group(1))
       }.toVector.distinct
       finally src.close()
-    } catch { case _: Throwable => Vector.empty }
+    } catch { case NonFatal(_) => Vector.empty }
     val byName = results.map(r => r._1 -> r).toMap
     val pinned = baselineNames.flatMap(byName.get)
     val rest = results.filterNot(r => baselineNames.contains(r._1))

@@ -26,45 +26,19 @@ object GraftSession {
       // these are safe to leave on unconditionally.
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // Let AQE coalesce the materialization of CACHED plans too (r21
-      // optimization round, guide §2.2/§2.4): with the Spark default
-      // (false) every persist() freezes at the full shuffle-partition
-      // count no matter how small the table is, so the round-loop ops
-      // (PageRank, BPE, Lloyd fits) re-scan a node/vocab-sized cache at
-      // 32 tasks per round — PERF_r20's scaling sweep showed op_textrank
-      // running 2.2× FASTER at 8 cores than 32 for exactly this reason.
-      // With AQE deciding from actual sizes the setting is scale-adaptive
-      // by construction: tiny caches collapse to a few tasks locally,
-      // 100 TB caches keep full parallelism. Measured at sf0.1 (same-JVM
-      // A/B ×2): op_textrank 0.50×, op_bpe_train 0.68×, op_corr_spearman
-      // ~0.9×, components/gini/mad/weighted_median 5–20% down, rest
-      // parity. The one hazard — an AMPLIFYING join above a
-      // now-tiny cache losing its parallelism (the r12 op_simhash_pairs
-      // mode) — is closed at the two affected sites by the established
-      // pinJoinParallelism idiom (user-specified partition counts are
-      // exempt from AQE coalescing); rangePrefixN's load-bearing pid
-      // persist is unaffected (pids are stamped inside the one frozen
-      // materialization both consumers read; coalescing only merges
-      // ADJACENT range partitions, preserving the __pid order the
-      // offsets fold relies on — re-gated against the full oracle).
+      // AQE sizes the materialization of cached plans from their actual
+      // bytes, so a persist() in a round loop (PageRank, BPE, Lloyd fits)
+      // is scanned by as many tasks as its size needs, not by the full
+      // shuffle-partition count. An amplifying join above a tiny cache
+      // pins its own partition count (pinJoinParallelism); rangePrefixN's
+      // pid persist stays ordered because coalescing merges only adjacent
+      // range partitions.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Generated-class cache sized to the workload (r21 optimization
-      // round, second session; guide §1.2 step 3). Spark's default of 100
-      // compiled classes is smaller than ONE expression-heavy query here:
-      // a single op_sim_topk_ivfpq execution generates ~160 distinct
-      // sources (48 AQE stages × WSCG + projections/orderings/predicates),
-      // so the LRU cache evicts everything before any rerun can hit it —
-      // measured ~160 fresh Janino compilations on EVERY run of the same
-      // query (CodegenMetrics), ~2 s of a 6 s wall at sf0.1. 4096 entries
-      // let structurally identical plans (re-runs, shared operator shapes
-      // across queries, per-round Lloyd/BPE stages) reuse their compiled
-      // classes; bytecode for 4096 classes is tens of MB — noise against
-      // executor memory at any scale, and the value is scale-neutral (a
-      // cluster profits identically; compilation happens per-JVM there
-      // too). Static conf, so it must be set HERE, not post-session
-      // (SPARK_GRAFT_CODEGEN_CACHE overrides for per-JVM A/Bs).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // The generated-class cache holds every class of one expression-heavy
+      // query (op_sim_topk_ivfpq alone generates ~160), so a rerun or a
+      // structurally identical plan reuses its compiled classes instead of
+      // recompiling them. Static conf: it can only be set here.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       .config("spark.ui.enabled", "false")
 

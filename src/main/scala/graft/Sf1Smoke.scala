@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** sf1 invariant smoke gate (VERDICT r14 #6). The r14 sf1 checkpoint
   * caught op_corr_spearman's BIGINT moment overflow only because a human
   * ran a measurement at 6M rows — no automated check ran any oracle above
@@ -51,7 +53,7 @@ object Sf1Smoke {
             else "ok"
         }
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           "fail: " + Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
       (name, verdict)

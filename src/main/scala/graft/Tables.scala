@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Fixture-table loader for the driver-generated parquet tables
   * (`/root/repo/TESTDATA.md`, `/root/repo/FIXTURES.md`).
@@ -17,44 +18,30 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val all: Seq[String] = relational ++ Seq("events", "documents", "embeddings")
 
-  /** Round-robin a SUB-SPLIT table across the cores once at load —
-    * guide §2.5's "one huge unsplittable file → repartition immediately
-    * after the read", applied to the fixture shape (r21 optimization
-    * round): every fixture parquet is ONE row group, so any file under
+  /** Round-robin a SUB-SPLIT table across the cores once at load. Every
+    * fixture parquet is one row group, so a file under
     * `spark.sql.files.maxPartitionBytes` scans as a single task and the
     * per-row-heavy heads above it (tokenize, md5 shingles, PII regex)
-    * run serially no matter how many cores the session has. Measured at
-    * sf0.1 (same-JVM A/B, min of 3): piiScrub 0.44 → 0.11 s, textStats
-    * 0.50 → 0.25 s, the shingle head 0.78 → 0.34 s — the one-table
-    * exchange (≤ a few MB by the gate) costs far less than the serial
-    * head it removes.
+    * would run serially whatever the core count.
     *
-    * The gate keeps the exchange exactly where the scan cannot feed the
-    * cores: tables under 256 KiB pass through (dimension tables — their
-    * scan is trivial and the exchange would be pure overhead), and
-    * tables at/above one split size pass through (real split
-    * parallelism exists; at production scale every table lands here, so
-    * the node vanishes from cluster plans — nothing is tuned to
-    * local[32]). Filters and column pruning push through a Repartition
-    * node, so PushedFilters/ReadSchema at the scan are unchanged;
-    * round-robin placement is retry-safe under the default
-    * sortBeforeRepartition (SPARK-38388); results are identical — the
-    * full oracle gate re-ran green under this change. */
+    * The size rule keeps the exchange exactly where the scan cannot feed
+    * the cores: a single file of at least 256 KiB and under one split.
+    * Smaller files are dimension tables whose scan is trivial; a file of
+    * one split or more, or a directory table, already has split
+    * parallelism, so at production scale the node never appears. Filters
+    * and column pruning push through a Repartition node, so the scan's
+    * PushedFilters/ReadSchema are unchanged; round-robin placement is
+    * retry-safe under the default sortBeforeRepartition (SPARK-38388). */
   private def splitNormalized(spark: SparkSession, df: DataFrame,
                               path: String): DataFrame = {
-    // single FILE only: a directory table (the Spark-written sf1/sf3
-    // fixtures are 32-part directories) already scans with file-level
-    // parallelism, so the exchange would be pure overhead there
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
         val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getFileStatus(p)
         if (st.isFile) st.getLen else Long.MaxValue
-      } catch { case _: Throwable => Long.MaxValue }
-    val oneSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val enabled = spark.conf.get("graft.splitNormalize", "true").toBoolean
-    if (enabled && bytes >= 256L * 1024 && bytes < oneSplit)
+      } catch { case NonFatal(_) => Long.MaxValue }
+    if (bytes >= 256L * 1024 && bytes < spark.sessionState.conf.filesMaxPartitionBytes)
       df.repartition(spark.sparkContext.defaultParallelism)
     else df
   }

@@ -1,5 +1,9 @@
 package graft.ops
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,19 +43,42 @@ object ClusterOps {
   private val SCALE = "1048576.0" // 2^20: quantization step ≈ 1e-6 per unit
 
   /** One shared daemon thread for overlapping independent eager actions
-    * (localCheckpoint materializations) with driver-thread work — guide
-    * §2.6 "overlap independent jobs". Spark's scheduler runs concurrent
-    * jobs FIFO; the side job back-fills task slots the main chain leaves
-    * idle (these segments are scheduling-latency-bound, not
-    * compute-bound). Daemon so it never blocks JVM exit; one thread is
-    * enough — the point is overlap, not fan-out. */
-  private[ops] lazy val overlapEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-ckpt-overlap")
-        t.setDaemon(true)
-        t
-      }))
+    * (localCheckpoint materializations) with driver-thread work. Spark's
+    * scheduler runs concurrent jobs FIFO; the side job back-fills task
+    * slots the main chain leaves idle (these segments are
+    * scheduling-latency-bound, not compute-bound). Daemon so it never
+    * blocks JVM exit; one thread is enough — the point is overlap, not
+    * fan-out. */
+  private lazy val overlapPool =
+    java.util.concurrent.Executors.newFixedThreadPool(1, r => {
+      val t = new Thread(r, "graft-ckpt-overlap")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Spark's local properties that make a job part of its caller's query. */
+  private val jobIdentity = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags")
+
+  /** [[overlapPool]] running each task under the job identity of the
+    * thread that calls this — job group, description, interrupt flag and
+    * tags — so side jobs are reported with, and cancelled with, the query
+    * that started them. A pool thread inherits the local properties of
+    * whichever thread created it, so the identity is captured here and
+    * set around each task. The SQL execution id belongs to one thread's
+    * running query and is never copied. */
+  private[ops] def overlapEc(sc: SparkContext): ExecutionContext = {
+    val identity = jobIdentity.map(k => k -> sc.getLocalProperty(k))
+    new ExecutionContext {
+      def execute(task: Runnable): Unit = overlapPool.execute { () =>
+        val before = jobIdentity.map(k => k -> sc.getLocalProperty(k))
+        identity.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        try task.run()
+        finally before.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      }
+      def reportFailure(t: Throwable): Unit = ExecutionContext.defaultReporter(t)
+    }
+  }
 
   /** (vec_id, cluster) after `iters` Lloyd update rounds from a
     * deterministic seed (the `k` lowest-vec_id vectors), distances against
@@ -77,12 +104,13 @@ object ClusterOps {
 
   /** The quantize step shared by every exact embedding op: integer vector
     * `xq = ⌊double(x)·2²⁰⌋`, its exact double image `xd`, and the
-    * fixed-order self-dot `xx`. */
-  private[ops] def quantized(emb: DataFrame): DataFrame =
-    emb.selectExpr("vec_id",
-        s"transform(embedding, x -> cast(floor(cast(x as double) * $SCALE) as bigint)) as xq")
-      .selectExpr("vec_id", "xq", "transform(xq, v -> cast(v as double)) as xd")
-      .selectExpr("vec_id", "xq", "xd", "array_dot(xd, xd) as xx")
+    * fixed-order self-dot `xx`, next to the row's `keys`. */
+  private[ops] def quantized(emb: DataFrame,
+                             keys: Seq[String] = Seq("vec_id")): DataFrame =
+    emb.selectExpr(keys :+
+        s"transform(embedding, x -> cast(floor(cast(x as double) * $SCALE) as bigint)) as xq": _*)
+      .selectExpr(keys ++ Seq("xq", "transform(xq, v -> cast(v as double)) as xd"): _*)
+      .selectExpr(keys ++ Seq("xq", "xd", "array_dot(xd, xd) as xx"): _*)
 
   /** The full Lloyd run behind [[kmeansAssign]], exposing the fitted model:
     * returns (centroids `(cid, m)` after `iters` rounds, assignment
@@ -190,19 +218,12 @@ object ClusterOps {
     * The centroid broadcast is m rows (one packed array per subspace) and
     * assignment is a broadcast hash join on `ss` — still map-side only.
     */
-  /** [[quantized]] for `(vec_id, ss, embedding)` subspace rows. */
-  private def quantizedKeyed(sub: DataFrame): DataFrame =
-    sub.selectExpr("vec_id", "ss",
-        s"transform(embedding, x -> cast(floor(cast(x as double) * $SCALE) as bigint)) as xq")
-      .selectExpr("vec_id", "ss", "xq", "transform(xq, v -> cast(v as double)) as xd")
-      .selectExpr("vec_id", "ss", "xq", "xd", "array_dot(xd, xd) as xx")
-
   private[ops] def kmeansFitKeyed(sub: DataFrame, k: Int,
                                   iters: Int): (DataFrame, DataFrame) = {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got k=$k iters=$iters")
     // LIFETIME: same adjudication as kmeansFit's q — read lazily by the
     // returned plan, session-cleared
-    val q = quantizedKeyed(sub).persist()
+    val q = quantized(sub, Seq("vec_id", "ss")).persist()
 
     // per-subspace seed: the k lowest vec_ids of that subspace. The
     // filter sits DIRECTLY on the row_number attribute (cid derives
@@ -247,16 +268,17 @@ object ClusterOps {
     (cells, assign(pack(cells)))
   }
 
-  /** `(vec_id, ss, embedding)` rows: each vector exploded into its m
+  /** `(keys…, ss, embedding)` rows: each vector exploded into its m
     * contiguous subspace slices. Slicing commutes with the elementwise
     * quantization, so clustering these equals clustering per-subspace
     * slices of the raw vectors. */
-  private def explodeSubs(emb: DataFrame, m: Int, d: Int): DataFrame =
-    emb.selectExpr("vec_id",
+  private def explodeSubs(emb: DataFrame, m: Int, d: Int,
+                          keys: Seq[String] = Seq("vec_id")): DataFrame =
+    emb.selectExpr(keys :+
         s"""explode(transform(sequence(0, ${m - 1}),
            |  s -> struct(cast(s as bigint) as ss,
-           |              slice(embedding, cast(s * $d + 1 as int), $d) as e))) as p""".stripMargin)
-      .selectExpr("vec_id", "p.ss as ss", "p.e as embedding")
+           |              slice(embedding, cast(s * $d + 1 as int), $d) as e))) as p""".stripMargin: _*)
+      .selectExpr(keys ++ Seq("p.ss as ss", "p.e as embedding"): _*)
 
   /** [[kmeansAssign]] plus a deterministic secondary split of oversized
     * clusters: a cluster of n rows is divided into `⌈n/maxClusterSize⌉`
@@ -398,6 +420,83 @@ object ClusterOps {
       .orderBy("vec_id", "subspace")
   }
 
+  // ---- search stages: the top-k entry points below compose these ----
+
+  /** Lloyd-path probe set: each query row of `qq` (a [[quantized]] frame)
+    * keeps its `nprobe` nearest cells of `cCells` under the assignment's
+    * exact distance tree and `(dist, cid)` tie-break. The centroid side is
+    * a kc-row broadcast; the output is `(qid, carry…, cell)`,
+    * nQueries·nprobe rows, where `carry` names columns of `qq` that ride
+    * along. */
+  private def probeSet(qq: DataFrame, cCells: DataFrame, nprobe: Int,
+                       carry: Seq[String] = Nil): DataFrame =
+    qq.crossJoin(broadcast(cCells.selectExpr("cid", "m", "array_dot(m, m) as mm")))
+      .selectExpr(("vec_id as qid" +: carry) ++
+        Seq("cid", "xx - 2 * array_dot(xd, m) + mm as dist"): _*)
+      .withColumn("pr", row_number().over(
+        Window.partitionBy("qid").orderBy(col("dist").asc, col("cid"))))
+      .filter(col("pr") <= nprobe)
+      .selectExpr(("qid" +: carry) :+ "cid as cell": _*)
+
+  /** The corpus code tuple: one row per vector holding its m codes in
+    * subspace order — one groupBy(vec_id), the only data-sized exchange
+    * before the final top-k. With a coarse assignment `cAsg` the cell id
+    * rides the same groupBy as subspace -1, sorted first, so `codes[0]`
+    * is the cell and `codes[s + 1]` the subspace-s code. */
+  private def codeTuples(asg: DataFrame, cAsg: Option[DataFrame]): DataFrame = {
+    val pq = asg.selectExpr("vec_id", "ss as subspace", "cluster as code")
+    cAsg.fold(pq)(c => pq.unionAll(c.selectExpr("vec_id",
+        "cast(-1 as bigint) as subspace", "cluster as code")))
+      .groupBy("vec_id")
+      .agg(expr("transform(array_sort(collect_list(struct(subspace, code)))," +
+        " t -> cast(t.code as int))").as("codes"))
+  }
+
+  /** ADC lookup tables: `qsub` holds quantized query sub-vectors
+    * `(keys…, ss, xd, xx)`; per key, an array by subspace of arrays by
+    * centroid id of the terms `x·x − 2·x·m + m·m` against the subspace
+    * centroids `cells` — the clustering's own distance tree. ONE shuffle
+    * builds each table: the subspace nesting is an in-row regroup of the
+    * collected terms (the struct sort is (subspace, cid, …) order, so each
+    * subspace's terms come out cid-sorted). */
+  private def adcTables(qsub: DataFrame, keys: Seq[String], cells: DataFrame,
+                        m: Int): DataFrame =
+    qsub.join(broadcast(
+        cells.selectExpr("ss", "cid", "m", "array_dot(m, m) as mm")), Seq("ss"))
+      .selectExpr(keys ++ Seq("ss as subspace",
+        "cid", "xx - 2 * array_dot(xd, m) + mm as term"): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(expr("array_sort(collect_list(struct(subspace, cid, term)))").as("ps"))
+      .selectExpr(keys :+
+        s"""transform(sequence(0, ${m - 1}), s ->
+           |  transform(filter(ps, p -> p.subspace = s), t -> t.term)) as luts""".stripMargin: _*)
+
+  /** The product quantizer over raw vectors: all m subspace fits as one
+    * keyed Lloyd chain ([[kmeansFitKeyed]]) and the ADC tables of the
+    * queries (vec_id < nQueries) against them. Returns (assignment,
+    * `(qid, luts)`). */
+  private def pqFit(emb: DataFrame, m: Int, d: Int, ksub: Int, iters: Int,
+                    nQueries: Int): (DataFrame, DataFrame) = {
+    val sub = explodeSubs(emb, m, d)
+    val (cells, asg) = kmeansFitKeyed(sub, ksub, iters)
+    val qsub = quantized(sub, Seq("vec_id", "ss")).filter(col("vec_id") < nQueries)
+      .withColumnRenamed("vec_id", "qid")
+    (asg, adcTables(qsub, Seq("qid"), cells, m))
+  }
+
+  /** Map-only ADC scoring: every corpus code tuple meets every query of
+    * the one-row broadcast `qs` (exploded in-row, no join, no shuffle);
+    * `keep` narrows the pairs before any distance work, and the distance
+    * folds `term` — the table entry of subspace `s` for the row's own
+    * code — in subspace order (an exact fixed-order IEEE sum). */
+  private def adcScore(codes: DataFrame, qs: DataFrame, m: Int, term: String,
+                       keep: DataFrame => DataFrame = identity): DataFrame =
+    keep(codes.crossJoin(broadcast(qs))
+        .select(col("vec_id").as("nid"), col("codes"), explode(col("qs")).as("q"))
+        .filter(expr("q.qid <> nid")))
+      .selectExpr("q.qid as qid", "nid",
+        s"aggregate(sequence(0, ${m - 1}), cast(0 as double), (a, s) -> a + $term) as dist")
+
   /** PQ asymmetric-distance top-k (ADC): each query keeps its EXACT
     * sub-vectors and scores a corpus vector by summing, over subspaces,
     * the squared-L2 distance from the query sub-vector to the corpus
@@ -412,11 +511,10 @@ object ClusterOps {
     * Scale shape (the part that matters at 10⁹ vectors):
     *  - the lookup tables (query × subspace × ksub term matrix) collapse
     *    to ONE broadcast row — nQueries·m·ksub doubles, KBs;
-    *  - the corpus side reduces to its code tuple (one groupBy(vec_id) of
-    *    m-row groups, the only data-sized exchange), then scoring is
-    *    MAP-ONLY: explode the broadcast queries, index the table with the
-    *    row's own codes, fold — no join, no shuffle of scored pairs
-    *    before the final per-query top-k;
+    *  - the corpus side reduces to its code tuple ([[codeTuples]], the
+    *    only data-sized exchange), then scoring is MAP-ONLY
+    *    ([[adcScore]]) — no join, no shuffle of scored pairs before the
+    *    final per-query top-k;
     *  - the top-k window sees nQueries·N rows; swapping it for
     *    [[VectorOps.TopKAgg]] bounds that too (same contract as
     *    op_sim_topk vs op_sim_topk_agg).
@@ -424,57 +522,22 @@ object ClusterOps {
   def pqTopK(emb: DataFrame, dim: Int = 64, m: Int = 4, ksub: Int = 8,
              iters: Int = 2, k: Int = 5, nQueries: Int = 20): DataFrame = {
     require(m > 0 && dim % m == 0, s"need m dividing dim; got dim=$dim m=$m")
-    // all m subspace fits as one keyed Lloyd chain (see kmeansFitKeyed)
-    val sub = explodeSubs(emb, m, dim / m)
-    val (cells, asg) = kmeansFitKeyed(sub, ksub, iters)
-    // corpus → one row per vector holding its m codes in subspace order
-    val codes = asg.selectExpr("vec_id", "ss as subspace", "cluster as code")
-      .groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(subspace, code)))," +
-        " t -> cast(t.code as int))").as("codes"))
-    // per-query distance to every centroid of its subspace: the ADC lookup
-    // table rows (nQueries · m · ksub of them — tiny; the centroid side is
-    // an m·ksub-row broadcast joined on ss)
-    // all lookup tables → ONE broadcast row: per query, an array (by
-    // subspace) of arrays (by centroid id) of distance terms
-    val luts = quantizedKeyed(sub).filter(col("vec_id") < nQueries)
-      .join(broadcast(
-        cells.selectExpr("ss", "cid", "m", "array_dot(m, m) as mm")), Seq("ss"))
-      .selectExpr("vec_id as qid", "ss as subspace",
-        "cid", "xx - 2 * array_dot(xd, m) + mm as term")
-      .groupBy("qid", "subspace")
-      .agg(expr("transform(array_sort(collect_list(struct(cid, term)))," +
-        " t -> t.term)").as("lt"))
-      .groupBy("qid")
-      .agg(expr("transform(array_sort(collect_list(struct(subspace, lt)))," +
-        " t -> t.lt)").as("luts"))
-      .agg(collect_list(struct(col("qid"), col("luts"))).as("qs"))
-    // map-only ADC scoring: fold the row's codes through the broadcast
-    // tables in subspace order (exact fixed-order IEEE sum)
-    val scored = codes.crossJoin(broadcast(luts))
-      .select(col("vec_id").as("nid"), col("codes"),
-        explode(col("qs")).as("q"))
-      .filter(expr("q.qid <> nid"))
-      .selectExpr("q.qid as qid", "nid",
-        s"""aggregate(sequence(0, ${m - 1}), cast(0 as double),
-           |  (a, s) -> a + q.luts[s][codes[s]]) as dist""".stripMargin)
-    val w = Window.partitionBy("qid").orderBy(col("dist").asc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "dist")
-      .orderBy("qid", "rank")
+    val (asg, luts) = pqFit(emb, m, dim / m, ksub, iters, nQueries)
+    val qs = luts.agg(collect_list(struct(col("qid"), col("luts"))).as("qs"))
+    VectorOps.topKPerQuery(
+      adcScore(codeTuples(asg, None), qs, m, "q.luts[s][codes[s]]"), k, "dist")
   }
 
   /** Plain-IVF top-k on the exact deterministic Lloyd path — the gated
-    * twin of [[VectorOps.cosineTopKIvf]] (VERDICT r14 #3): the coarse
-    * quantizer is [[kmeansFit]] (integer-quantized vectors, exact BIGINT
-    * centroid sums, fixed-order double distances), each query probes its
-    * `nprobe` nearest cells under the same `(dist, cid)` tie-break, and
-    * vectors in probed cells are ranked by the EXACT squared-L2 distance
-    * in the quantized-double space — every number a fixed-order IEEE
-    * computation, so probe sets, the scored pair set, distances and ranks
-    * all hash-gate against an independent DuckDB implementation (the same
-    * unrolled-CTE recipe as op_sim_topk_ivfpq, minus the PQ codes).
+    * twin of [[VectorOps.cosineTopKIvf]]: the coarse quantizer is
+    * [[kmeansFit]] (integer-quantized vectors, exact BIGINT centroid sums,
+    * fixed-order double distances), each query probes its `nprobe`
+    * nearest cells ([[probeSet]]), and vectors in probed cells are ranked
+    * by the EXACT squared-L2 distance in the quantized-double space —
+    * every number a fixed-order IEEE computation, so probe sets, the
+    * scored pair set, distances and ranks all hash-gate against an
+    * independent DuckDB implementation (the same unrolled-CTE recipe as
+    * op_sim_topk_ivfpq, minus the PQ codes).
     *
     * Scale shape: the centroid table is a kc-row broadcast; probe sets
     * ride a broadcast of nQueries·nprobe query rows onto the
@@ -486,34 +549,19 @@ object ClusterOps {
               k: Int = 5, nQueries: Int = 20): DataFrame = {
     require(nprobe > 0 && nprobe <= kc, s"need 0 < nprobe <= kc; got $nprobe/$kc")
     val (cCells, cAsg) = kmeansFit(emb, kc, iters)
-    val cPacked = cCells.selectExpr("cid", "m", "array_dot(m, m) as mm")
-
-    // per-query probe set + the query's quantized-double image (the probe
-    // rows are the broadcast unit: nQueries·nprobe of them)
-    val probe = quantized(emb).filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cPacked))
-      .selectExpr("vec_id as qid", "xd as qd", "xx as qx", "cid",
-        "xx - 2 * array_dot(xd, m) + mm as dist")
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("qid").orderBy(col("dist").asc, col("cid"))))
-      .filter(col("pr") <= nprobe)
-      .selectExpr("qid", "qd", "qx", "cid as cell")
-
+    // probe rows carry the query's quantized-double image (the broadcast
+    // unit: nQueries·nprobe rows)
+    val probe = probeSet(quantized(emb).filter(col("vec_id") < nQueries),
+      cCells, nprobe, carry = Seq("xd", "xx"))
     // corpus side: the assignment already carries xq — rebuild the exact
     // double image once, keyed by its cell
     val corpus = cAsg.selectExpr("vec_id as nid",
         "transform(xq, v -> cast(v as double)) as nd", "cluster as cell")
       .selectExpr("nid", "nd", "array_dot(nd, nd) as nx", "cell")
-
-    val w = Window.partitionBy("qid").orderBy(col("dist").asc, col("nid"))
-    corpus.join(broadcast(probe), Seq("cell"))
+    VectorOps.topKPerQuery(corpus.join(broadcast(probe), Seq("cell"))
       .filter(expr("qid <> nid"))
-      // term order matches the oracle exactly: (qx − 2·dot) + nx
-      .selectExpr("qid", "nid", "qx - 2 * array_dot(qd, nd) + nx as dist")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "dist")
-      .orderBy("qid", "rank")
+      // term order matches the oracle exactly: (xx − 2·dot) + nx
+      .selectExpr("qid", "nid", "xx - 2 * array_dot(xd, nd) + nx as dist"), k, "dist")
   }
 
   /** IVF-PQ search (the composite every billion-vector ANN system runs,
@@ -522,9 +570,7 @@ object ClusterOps {
     * and only vectors IN probed cells are ADC-scored against the PQ
     * codes — the scan shrinks to ~nprobe/kc of the corpus ON TOP of PQ's
     * per-vector compression. This variant codes the original vectors
-    * (IVFADC-without-residuals); residual coding is the next refinement
-    * and slots into the same structure (subtract the broadcast cell
-    * centroid before [[pqCodes]]' slices).
+    * (IVFADC-without-residuals); [[pqTopKIvfRes]] codes residuals.
     *
     * Everything stays exact-deterministic (coarse assignment, probe
     * sets, lookup tables, the subspace-order fold), so the whole result
@@ -532,71 +578,26 @@ object ClusterOps {
     * hash-gates against an independent DuckDB implementation.
     *
     * Scale shape, one step past [[pqTopK]]: the corpus row's cell id
-    * rides the SAME groupBy(vec_id) as its PQ codes (a subspace -1 entry
-    * — no extra join), probe sets ride the one-row query broadcast, and
-    * cell filtering is an in-row array_contains BEFORE any distance work
-    * — still zero shuffles between the code aggregation and the final
-    * per-query top-k.
+    * rides the SAME groupBy(vec_id) as its PQ codes, probe sets ride the
+    * one-row query broadcast, and cell filtering is an in-row
+    * array_contains BEFORE any distance work — still zero shuffles
+    * between the code aggregation and the final per-query top-k.
     */
   def pqTopKIvf(emb: DataFrame, dim: Int = 64, m: Int = 4, ksub: Int = 8,
                 kc: Int = 8, nprobe: Int = 2, iters: Int = 2, k: Int = 5,
                 nQueries: Int = 20): DataFrame = {
     require(m > 0 && dim % m == 0, s"need m dividing dim; got dim=$dim m=$m")
     require(nprobe > 0 && nprobe <= kc, s"need 0 < nprobe <= kc; got $nprobe/$kc")
-    val d = dim / m
-
-    // coarse quantizer: full-dim cells; the corpus keeps (vec_id, cell)
     val (cCells, cAsg) = kmeansFit(emb, kc, iters)
-    val cPacked = cCells.selectExpr("cid", "m", "array_dot(m, m) as mm")
-
-    // per-query probe set: the nprobe nearest cells under the same exact
-    // distance tree / (dist, cid) tie-break as assignment (nQ·kc rows)
-    val probe = quantized(emb).filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cPacked))
-      .selectExpr("vec_id as qid", "cid",
-        "xx - 2 * array_dot(xd, m) + mm as dist")
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("qid").orderBy(col("dist").asc, col("cid"))))
-      .filter(col("pr") <= nprobe)
-      .groupBy("qid").agg(expr("array_sort(collect_list(cid))").as("probe"))
-
-    // PQ codes + lookup tables, all subspaces in one keyed fit (as pqTopK)
-    val sub = explodeSubs(emb, m, d)
-    val (cells, asg) = kmeansFitKeyed(sub, ksub, iters)
-    // the cell id joins the code tuple as subspace -1 — sorted first, so
-    // codes[0] = cell and codes[i+1] = subspace-i code; ONE shuffle total
-    val codes = asg.selectExpr("vec_id", "ss as subspace", "cluster as code")
-      .unionAll(cAsg.selectExpr("vec_id",
-        "cast(-1 as bigint) as subspace", "cluster as code"))
-      .groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(subspace, code)))," +
-        " t -> cast(t.code as int))").as("codes"))
-    val luts = quantizedKeyed(sub).filter(col("vec_id") < nQueries)
-      .join(broadcast(
-        cells.selectExpr("ss", "cid", "m", "array_dot(m, m) as mm")), Seq("ss"))
-      .selectExpr("vec_id as qid", "ss as subspace",
-        "cid", "xx - 2 * array_dot(xd, m) + mm as term")
-      .groupBy("qid", "subspace")
-      .agg(expr("transform(array_sort(collect_list(struct(cid, term)))," +
-        " t -> t.term)").as("lt"))
-      .groupBy("qid")
-      .agg(expr("transform(array_sort(collect_list(struct(subspace, lt)))," +
-        " t -> t.lt)").as("luts"))
-      .join(probe, Seq("qid"))
+    val probe = probeSet(quantized(emb).filter(col("vec_id") < nQueries), cCells, nprobe)
+      .groupBy("qid").agg(expr("array_sort(collect_list(cell))").as("probe"))
+    val (asg, luts) = pqFit(emb, m, dim / m, ksub, iters, nQueries)
+    val qs = luts.join(probe, Seq("qid"))
       .agg(collect_list(struct(col("qid"), col("luts"), col("probe"))).as("qs"))
-
-    val scored = codes.crossJoin(broadcast(luts))
-      .select(col("vec_id").as("nid"), col("codes"),
-        explode(col("qs")).as("q"))
-      .filter(expr("q.qid <> nid and array_contains(q.probe, cast(codes[0] as bigint))"))
-      .selectExpr("q.qid as qid", "nid",
-        s"""aggregate(sequence(0, ${m - 1}), cast(0 as double),
-           |  (a, s) -> a + q.luts[s][codes[s + 1]]) as dist""".stripMargin)
-    val w = Window.partitionBy("qid").orderBy(col("dist").asc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "dist")
-      .orderBy("qid", "rank")
+    VectorOps.topKPerQuery(
+      adcScore(codeTuples(asg, Some(cAsg)), qs, m, "q.luts[s][codes[s + 1]]",
+        _.filter(expr("array_contains(q.probe, cast(codes[0] as bigint))"))),
+      k, "dist")
   }
 
   /** Residual IVF-PQ — the full IVFADC of Jégou et al. TPAMI 2011 §IV:
@@ -633,64 +634,34 @@ object ClusterOps {
     // not persist): every residual-side consumer — the m subspace Lloyd
     // chains, per-round mean updates, probe/LUT joins — would otherwise
     // carry the full coarse-Lloyd logical tree inside its own plan, and
-    // with ~10 actions over those trees the r10 bench spent 10× the
-    // non-residual twin's time in pure plan analysis/codegen (Spark's
-    // "truncated the string representation of a plan" warning). The
-    // checkpointed state is tiny-or-one-pass: kc centroid rows, the
-    // (vec_id, cluster) assignment, the residual corpus, and
+    // with ~10 actions over those trees plan analysis and codegen swamp
+    // the run. The checkpointed state is tiny-or-one-pass: kc centroid
+    // rows, the (vec_id, cluster) assignment, the residual corpus, and
     // nQueries·nprobe query-residual rows.
     //
-    // OVERLAP (r21 optimization round, guide §2.6): these eager
-    // checkpoint actions used to run back-to-back on the driver thread,
-    // serializing independent work — the query-row cut touches only
-    // `emb`, and the per-(query, cell) residual chain only the coarse
-    // centroids + query rows, neither needs the corpus assignment or the
-    // residual corpus. The two independent actions now run on a side
-    // thread, back-filling task slots the (scheduling-latency-bound)
-    // coarse chain leaves idle. Job-SUBMISSION order is the only change;
-    // every checkpoint's content is the same deterministic plan, so
-    // results are bit-identical. The checkpoints themselves stay
-    // load-bearing (the r10 plan-bloat adjudication above) — only their
-    // scheduling overlaps. `graft.ckptOverlap=false` restores the serial
-    // order (the same-JVM A/B toggle; default on).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val overlap = emb.sparkSession.conf
-      .get("graft.ckptOverlap", "true").toBoolean
-
-    // the quantized QUERY rows — computed once (nQueries rows), reused by
-    // the probe set and the per-cell query residuals (the r10 plan
-    // recomputed quantized(emb) in both)
-    def buildQq(): DataFrame =
-      quantized(emb).filter(col("vec_id") < nQueries).localCheckpoint()
-
+    // The query-row cut touches only `emb`, and the per-(query, cell)
+    // residuals only the coarse centroids and query rows, so those two
+    // run on the side thread ([[overlapEc]]) while the driver thread cuts
+    // the coarse chain. Only job submission order depends on the overlap;
+    // every checkpoint's content is the same deterministic plan.
+    val side = overlapEc(emb.sparkSession.sparkContext)
     val (cCells0, cAsg0) = kmeansFit(emb, kc, iters) // lazy: plans only
-    // overlap mode: qq materializes concurrently with the coarse chain
-    val qqF = if (overlap) Some(Future(buildQq())(ClusterOps.overlapEc)) else None
+    // the quantized QUERY rows — computed once (nQueries rows), reused by
+    // the probe set and the per-cell query residuals
+    val qqF = Future(
+      quantized(emb).filter(col("vec_id") < nQueries).localCheckpoint())(side)
     val cCells = cCells0.localCheckpoint() // kc rows; huge Lloyd lineage
-    val cPacked = cCells.selectExpr("cid", "m", "array_dot(m, m) as mm")
 
     // probe set over the ORIGINAL vectors (the coarse index is unchanged),
-    // then per-(query, probed cell) residuals — one tiny row each; needs
-    // (qq, cCells) only, so in overlap mode it runs concurrently with the
-    // assignment/residual chain below
-    def buildQres(qq: DataFrame): DataFrame = {
-      val probePairs = qq
-        .crossJoin(broadcast(cPacked))
-        .selectExpr("vec_id as qid", "cid",
-          "xx - 2 * array_dot(xd, m) + mm as dist")
-        .withColumn("pr", row_number().over(
-          Window.partitionBy("qid").orderBy(col("dist").asc, col("cid"))))
-        .filter(col("pr") <= nprobe)
-        .selectExpr("qid", "cid as cell")
-      probePairs
+    // then per-(query, probed cell) residuals — one tiny row each
+    val qresF = qqF.map { qq =>
+      probeSet(qq, cCells, nprobe)
         .join(qq.selectExpr("vec_id as qid", "xd"), Seq("qid"))
         .join(broadcast(cCells.withColumnRenamed("cid", "cell")), Seq("cell"))
         .selectExpr("qid", "cell",
           s"zip_with(xd, m, (a, b) -> (a - b) / $SCALE) as embedding")
         .localCheckpoint() // nQueries·nprobe rows, read by every subspace LUT chain
-    }
-    val qresF = qqF.map(_.map(buildQres)(ClusterOps.overlapEc))
+    }(side)
 
     val cAsg = cAsg0.localCheckpoint() // feeds the residuals AND the -1 code union
 
@@ -703,8 +674,7 @@ object ClusterOps {
           s" (a, b) -> (a - b) / $SCALE) as embedding")
       .localCheckpoint() // each of the m subspace fits re-reads the residual corpus
 
-    val qres = qresF.map(Await.result(_, Duration.Inf))
-      .getOrElse(buildQres(buildQq()))
+    val qres = Await.result(qresF, Duration.Inf)
 
     // subspace chains over the residual corpus, one keyed fit; ADC tables
     // per (qid, probed cell) — the query residual differs per cell
@@ -712,55 +682,19 @@ object ClusterOps {
     // m·ksub rows with the whole keyed-Lloyd history behind them; the LUT
     // chain and its broadcast re-reference them — cut here too
     val cells = cells0.localCheckpoint()
-    val codes = asg.selectExpr("vec_id", "ss as subspace", "cluster as code")
-      .unionAll(cAsg.selectExpr("vec_id",
-        "cast(-1 as bigint) as subspace", "cluster as code"))
-      .groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(subspace, code)))," +
-        " t -> cast(t.code as int))").as("codes"))
+    val cellKeys = Seq("qid", "cell")
     // broadcast unit: per query, an array of (cell, per-subspace tables)
-    val luts = qres
-      .selectExpr("qid", "cell",
-        s"""explode(transform(sequence(0, ${m - 1}),
-           |  s -> struct(cast(s as bigint) as ss,
-           |              slice(embedding, cast(s * $d + 1 as int), $d) as e))) as p""".stripMargin)
-      .selectExpr("qid", "cell", "p.ss as ss",
-        s"transform(p.e, x -> cast(floor(cast(x as double) * $SCALE) as bigint)) as xq")
-      .selectExpr("qid", "cell", "ss", "transform(xq, v -> cast(v as double)) as xd")
-      .selectExpr("qid", "cell", "ss", "xd", "array_dot(xd, xd) as xx")
-      .join(broadcast(
-        cells.selectExpr("ss", "cid", "m", "array_dot(m, m) as mm")), Seq("ss"))
-      .selectExpr("qid", "cell", "ss as subspace",
-        "cid", "xx - 2 * array_dot(xd, m) + mm as term")
-      // ONE shuffle builds the per-(query, cell) m×ksub table: the
-      // subspace nesting is an in-row regroup of the collected terms
-      // (struct sort = (subspace, cid, …) order, so each subspace's terms
-      // come out cid-sorted — the same arrays the r10 4-level groupBy
-      // cascade produced, minus two of its shuffle/sort stages)
-      .groupBy("qid", "cell")
-      .agg(expr("array_sort(collect_list(struct(subspace, cid, term)))").as("ps"))
-      .selectExpr("qid", "cell",
-        s"""transform(sequence(0, ${m - 1}), s ->
-           |  transform(filter(ps, p -> p.subspace = s), t -> t.term)) as luts""".stripMargin)
+    val qs = adcTables(quantized(explodeSubs(qres, m, d, cellKeys), cellKeys :+ "ss"),
+        cellKeys, cells, m)
       .groupBy("qid")
       .agg(expr("array_sort(collect_list(struct(cell, luts)))").as("cells"))
       .agg(collect_list(struct(col("qid"), col("cells"))).as("qs"))
 
-    // map-only ADC: a corpus row folds the table of its OWN cell, if probed
-    val scored = codes.crossJoin(broadcast(luts))
-      .select(col("vec_id").as("nid"), col("codes"),
-        explode(col("qs")).as("q"))
-      .filter(expr("q.qid <> nid"))
-      .withColumn("e",
-        expr("filter(q.cells, e -> e.cell = cast(codes[0] as bigint))"))
-      .filter(size(col("e")) > 0)
-      .selectExpr("q.qid as qid", "nid",
-        s"""aggregate(sequence(0, ${m - 1}), cast(0 as double),
-           |  (a, s) -> a + e[0].luts[s][codes[s + 1]]) as dist""".stripMargin)
-    val w = Window.partitionBy("qid").orderBy(col("dist").asc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "dist")
-      .orderBy("qid", "rank")
+    // a corpus row folds the table of its OWN cell, if probed
+    VectorOps.topKPerQuery(
+      adcScore(codeTuples(asg, Some(cAsg)), qs, m, "e[0].luts[s][codes[s + 1]]",
+        _.withColumn("e", expr("filter(q.cells, e -> e.cell = cast(codes[0] as bigint))"))
+          .filter(size(col("e")) > 0)),
+      k, "dist")
   }
 }

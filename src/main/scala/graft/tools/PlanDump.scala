@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence trail (plans/r<N>/<query>_{before,after}.txt).
   *
@@ -37,7 +39,7 @@ object PlanDump {
             java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
             txt.getBytes("UTF-8"))
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[plandump] $name failed: ${e.getMessage}")
         }
       }

@@ -1433,6 +1433,44 @@ class OpsSpec extends SparkSpecBase {
     assert(raw.nonEmpty)
   }
 
+  test("residual ivf-pq side-thread jobs carry the calling query's job group") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def underGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    // the listener bus is asynchronous and in order: once a marker job's
+    // start arrives, every earlier job's start has arrived too
+    def drain(): Unit = {
+      underGroup("marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("marker"), "listener bus did not drain")
+    }
+    val pts = spark.range(60).selectExpr("id as vec_id",
+      "transform(sequence(0, 7), j -> cast((id * 7 + j * 13) % 17 as float)) as embedding")
+    def search(): Unit = graft.ops.ClusterOps.pqTopKIvfRes(pts, dim = 8, m = 2,
+      ksub = 3, kc = 3, nprobe = 1, iters = 1, k = 3, nQueries = 4).collect()
+    sc.addSparkListener(listener)
+    try {
+      underGroup("g1")(search())
+      drain()
+      groups.clear()
+      underGroup("g2")(search())
+      drain()
+      val seen = groups.asScala.toList.filterNot(_ == "marker")
+      assert(seen.nonEmpty && seen.forall(_ == "g2"),
+        s"jobs of the g2 call ran under groups ${seen.groupBy(identity).map { case (g, js) => s"$g×${js.size}" }}")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("3-D z-order layout: partitions bound ALL THREE dimensions") {
     import org.apache.spark.sql.functions.{col => fcol}
     val l = Tables.load(spark, sfDir, "lineitem")

@@ -33,12 +33,7 @@ object Sf1Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "testdata-sf1")
     val spark = GraftSession.get("graft-sf1-smoke")
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Bench.{jstr, round}
     val results = checks.map { case (name, predicate) =>
       val verdict = try {
         SparkEntry.queries.get(name) match {
@@ -63,15 +58,6 @@ object Sf1Smoke {
       .mkString("{", ",", "}")
     val line = s"""{"metric":"sf1_smoke","ok":$ok,"n":${results.size},""" +
       s""""checks":$body,"sf":${jstr(sfDir)}}"""
-    // same round inference as Bench: the artifacts being produced now
-    val round = {
-      val rx = "CORRECTNESS_r(\\d+)\\.json".r
-      sys.env.get("SPARK_GRAFT_ROUND").orElse {
-        Option(new java.io.File(".").listFiles()).map(_.toSeq.flatMap(f =>
-            rx.findFirstMatchIn(f.getName).map(_.group(1).toInt)))
-          .filter(_.nonEmpty).map(ns => (ns.max + 1).toString)
-      }.getOrElse("unknown")
-    }
     val p = java.nio.file.Paths.get(s"bench/bench_sf1_smoke_r$round.json")
     Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
 import graft.config.{ArgParser, ConnectionConfig}
-import graft.sql.{LocalCopy, LocalDml, RedshiftSql}
+import graft.sql.{LocalCopy, LocalDml, LocalMv, RedshiftSql}
+import graft.sql.SqlTokens._
 
 /** Blueprint CLI #3: SQL pass-through executor (SURVEY.md §2.1 A10;
   * reference `execute_sql.py:62-79`).
@@ -31,11 +32,9 @@ object ExecuteSql {
   /** When `sql` is EXPLAIN [EXTENDED] over a statement this engine only
     * EMULATES (no Spark plan exists), returns that statement's leading
     * keyword; None for everything Spark can plan natively. */
-  private def explainedEmulated(sql: String): Option[String] = {
-    import graft.sql.SqlTokens._
+  private def explainedEmulated(toks: Vector[Tok]): Option[String] = {
     val emulated = Set("update", "delete", "merge", "copy", "unload",
       "vacuum", "refresh")
-    val toks = tokenize(sql)
     var i = nextCode(toks, 0)
     if (i >= toks.length || !toks(i).isWord("explain")) return None
     i = nextCode(toks, i + 1)
@@ -65,7 +64,6 @@ object ExecuteSql {
         // (`BEGIN; …; COMMIT;`) — split at depth-0 semicolons OUTSIDE
         // string literals / comments (the tokenizer guarantees that) and
         // run each statement through the full local pipeline in order.
-        import graft.sql.SqlTokens._
         val toks = tokenize(query)
         val stmts = Vector.newBuilder[String]
         var depth = 0
@@ -120,9 +118,7 @@ object ExecuteSql {
     * FETCH advances a position and returns min(n, remaining) rows — zero
     * at end, never an error; CLOSE releases the snapshot eagerly. FETCH
     * or CLOSE on an unknown cursor raises, exactly like the server. */
-  private def runCursor(spark: SparkSession, stmt: String): Boolean = {
-    import graft.sql.SqlTokens._
-    val toks = tokenize(stmt)
+  private def runCursor(spark: SparkSession, toks: Vector[Tok]): Boolean = {
     val f = nextCode(toks, 0)
     if (f >= toks.length || toks(f).kind != Word) return false
     def cursorOf(name: String): CursorState =
@@ -153,7 +149,7 @@ object ExecuteSql {
           s"""cursor "$name" already exists""")
         val q = render(toks.slice(i + 1, toks.length)).trim
         require(q.nonEmpty, s"DECLARE $name: empty cursor query")
-        val df = spark.sql(RedshiftSql.rewrite(q)).localCheckpoint()
+        val df = RedshiftSql.plan(spark, q).localCheckpoint()
         cursors.put(name.toLowerCase, new CursorState(df, df.count()))
         true
       case "fetch" =>
@@ -208,33 +204,29 @@ object ExecuteSql {
   }
 
   /** Strip [LOCAL] TEMP|TEMPORARY out of CREATE … TABLE and remember the
-    * table name for end-of-run cleanup. Returns the statement unchanged
-    * when it is not a temp-table DDL. */
-  private def stripTemp(stmt: String): String = {
-    import graft.sql.SqlTokens._
-    val toks = tokenize(stmt)
+    * table name for end-of-run cleanup. Returns the tokens unchanged when
+    * they are not a temp-table DDL. */
+  private def stripTemp(toks: Vector[Tok]): Vector[Tok] = {
     val c = nextCode(toks, 0)
-    if (c >= toks.length || !toks(c).isWord("create")) return stmt
+    if (c >= toks.length || !toks(c).isWord("create")) return toks
     var i = nextCode(toks, c + 1)
     val dropIdx = Vector.newBuilder[Int]
     if (i < toks.length && toks(i).isWord("local")) { dropIdx += i; i = nextCode(toks, i + 1) }
     if (i < toks.length && (toks(i).isWord("temp") || toks(i).isWord("temporary"))) {
       dropIdx += i; i = nextCode(toks, i + 1)
-    } else return stmt
-    if (i >= toks.length || !toks(i).isWord("table")) return stmt
+    } else return toks
+    if (i >= toks.length || !toks(i).isWord("table")) return toks
     val (name, _) = qualifiedName(toks, nextCode(toks, i + 1))
     tempTables.add(name)
     val drops = dropIdx.result().toSet
-    render(toks.zipWithIndex.collect { case (t, j) if !drops.contains(j) => t })
+    toks.zipWithIndex.collect { case (t, j) if !drops.contains(j) => t }
   }
 
   /** PREPARE / EXECUTE / DEALLOCATE — Redshift's server-side prepared
     * statements, emulated session-side: PREPARE stores the raw text,
     * EXECUTE substitutes `$n` literals positionally and re-enters the
     * normal pipeline, DEALLOCATE forgets. Returns true when handled. */
-  private def runPrepared(spark: SparkSession, stmt: String): Boolean = {
-    import graft.sql.SqlTokens._
-    val toks = tokenize(stmt)
+  private def runPrepared(spark: SparkSession, toks: Vector[Tok]): Boolean = {
     val f = nextCode(toks, 0)
     if (f >= toks.length || toks(f).kind != Word) return false
     toks(f).text.toLowerCase match {
@@ -299,16 +291,19 @@ object ExecuteSql {
     }
   }
 
+  /** One statement: tokenized once for the prepared/cursor dispatch, and
+    * once more after the dialect rewrite for everything downstream. */
   private def runOne(spark: SparkSession, stmt: String): Unit = {
-    if (runPrepared(spark, stmt)) return
-    if (runCursor(spark, stmt)) return
+    val toks = tokenize(stmt)
+    if (runPrepared(spark, toks) || runCursor(spark, toks)) return
     // rewrite first: SELECT … INTO [TEMP] t becomes CREATE [TEMP] TABLE t
     // AS …, so the TEMP strip/tracking below sees every temp-table form
-    val rewritten = stripTemp(RedshiftSql.rewrite(stmt))
+    val rtoks = stripTemp(tokenize(RedshiftSql.rewrite(stmt)))
+    val rewritten = render(rtoks)
     // EXPLAIN over a locally-EMULATED statement (DML/COPY/MV/APPEND)
     // has no Spark plan to show — fail with the reason instead of the
     // opaque ParseException spark.sql would raise on e.g. UPDATE
-    explainedEmulated(rewritten).foreach { stmt =>
+    explainedEmulated(rtoks).foreach { stmt =>
       throw new IllegalArgumentException(
         s"EXPLAIN $stmt: the statement executes through local emulation " +
           "(LocalDml/LocalCopy/LocalMv) — there is no Spark plan to explain")
@@ -322,8 +317,8 @@ object ExecuteSql {
     // refreshable table; everything else runs on spark.sql.
     // DDL/DML execute eagerly; SELECTs need an action to actually run
     // (the reference also discards SELECT results here).
-    if (!LocalDml.run(spark, rewritten) && !LocalCopy.run(spark, rewritten) &&
-        !graft.sql.LocalMv.run(spark, rewritten))
+    if (!LocalDml.run(spark, rtoks) && !LocalCopy.run(spark, rtoks) &&
+        !LocalMv.run(spark, rtoks))
       spark.sql(rewritten).foreach(_ => ())
   }
 }

@@ -37,13 +37,7 @@ object StoreQueryResults {
 
   def run(spark: SparkSession, query: String, folder: String, file: String,
           header: Boolean, conn: Option[ConnectionConfig] = None): String = {
-    val df = conn match {
-      case Some(c) => TableIO.query(spark, query, Some(c))
-      case None =>
-        val rewritten = RedshiftSql.rewrite(query)
-        graft.sql.CatalogShims.ensure(spark, rewritten)
-        TableIO.query(spark, rewritten)
-    }
+    val df = conn.fold(RedshiftSql.plan(spark, query))(TableIO.query(spark, query, _))
     LocalFiles.ensureFolder(folder)
     val dest = LocalFiles.combine(folder, file)
     CsvIO.write(df, dest, header)

@@ -25,12 +25,8 @@ object CsvIO {
 
   /** Read one or many CSV files as ONE DataFrame (header + one global
     * inference pass). Multiple paths arrive from regex discovery (A2/A3). */
-  def read(spark: SparkSession, paths: Seq[String], header: Boolean = true,
-           inferSchema: Boolean = true): DataFrame =
-    spark.read
-      .option("header", header)
-      .option("inferSchema", inferSchema)
-      .csv(paths: _*)
+  def read(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.option("header", true).option("inferSchema", true).csv(paths: _*)
 
   /** Write `df` as CSV to `destPath`.
     *

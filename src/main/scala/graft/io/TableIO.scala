@@ -110,33 +110,28 @@ object TableIO {
       .partitionBy(partCol)
       .saveAsTable(s"`$table`")
 
-  /** Run `query` and return its result (A7/A10). JDBC pushes the whole
-    * query to the remote engine with a streaming fetch; local runs it on
-    * the session catalog via `spark.sql` — the pass-through surface of
-    * `execute_sql.py:64,77`.
+  /** Run `query` on the remote database and return its result (A7): the
+    * whole query is pushed down, with a streaming fetch. (Local queries
+    * go through [[graft.sql.RedshiftSql.plan]].)
     *
-    * `partitionOn` (JDBC only) turns the single-cursor read into N
-    * parallel range reads — required at scale; a lone JDBC cursor is a
-    * driver-side bottleneck no matter the fetch size.
+    * `partitionOn` turns the single-cursor read into N parallel range
+    * reads — required at scale; a lone JDBC cursor is a driver-side
+    * bottleneck no matter the fetch size.
     */
-  def query(spark: SparkSession, sql: String,
-            conn: Option[ConnectionConfig] = None,
-            partitionOn: Option[(String, Long, Long, Int)] = None): DataFrame =
-    conn match {
-      case Some(c) =>
-        val r = spark.read.format("jdbc")
-          .options(c.jdbcOptions)
-          .option("fetchsize", FetchSize)
-        val rp = partitionOn match {
-          case Some((col, lo, hi, n)) =>
-            // range-partitioned parallel read over a subquery alias
-            r.option("dbtable", s"($sql) graft_q")
-              .option("partitionColumn", col)
-              .option("lowerBound", lo).option("upperBound", hi)
-              .option("numPartitions", n)
-          case None => r.option("query", sql)
-        }
-        rp.load()
-      case None => spark.sql(sql)
+  def query(spark: SparkSession, sql: String, conn: ConnectionConfig,
+            partitionOn: Option[(String, Long, Long, Int)] = None): DataFrame = {
+    val r = spark.read.format("jdbc")
+      .options(conn.jdbcOptions)
+      .option("fetchsize", FetchSize)
+    val rp = partitionOn match {
+      case Some((col, lo, hi, n)) =>
+        // range-partitioned parallel read over a subquery alias
+        r.option("dbtable", s"($sql) graft_q")
+          .option("partitionColumn", col)
+          .option("lowerBound", lo).option("upperBound", hi)
+          .option("numPartitions", n)
+      case None => r.option("query", sql)
     }
+    rp.load()
+  }
 }

@@ -1084,7 +1084,7 @@ object T2 {
       "q33_qualify",
       (s, d) => {
         t(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(graft.sql.RedshiftSql.rewrite(qualifySql))
+        graft.sql.RedshiftSql.plan(s, qualifySql)
       },
       Some(qualifySql)),
 
@@ -1101,11 +1101,11 @@ object T2 {
           .selectExpr("c_custkey as id",
             "case when c_custkey = 0 then null else c_custkey div 10 end as parent")
           .createOrReplaceTempView("cust_tree")
-        s.sql(graft.sql.RedshiftSql.rewrite(
+        graft.sql.RedshiftSql.plan(s,
           """SELECT id, parent, level FROM cust_tree
             |START WITH parent IS NULL
             |CONNECT BY PRIOR id = parent
-            |ORDER BY id""".stripMargin))
+            |ORDER BY id""".stripMargin)
       },
       Some("""WITH RECURSIVE h AS (
              |  SELECT c_custkey AS id,
@@ -1126,12 +1126,12 @@ object T2 {
       "q35_to_char",
       (s, d) => {
         t(s, d, "events").createOrReplaceTempView("events")
-        s.sql(graft.sql.RedshiftSql.rewrite(
+        graft.sql.RedshiftSql.plan(s,
           """SELECT event_id,
             |  TO_CHAR(ts, 'YYYY-MM-DD') AS d_iso,
             |  TO_CHAR(ts, 'DD Mon YYYY') AS d_mon,
             |  TO_CHAR(ts, 'HH24:MI:SS') AS t_24
-            |FROM events ORDER BY event_id""".stripMargin))
+            |FROM events ORDER BY event_id""".stripMargin)
       },
       Some("""SELECT event_id,
              |  strftime(ts, '%Y-%m-%d') AS d_iso,
@@ -1147,12 +1147,12 @@ object T2 {
       "q36_dateadd_diff",
       (s, d) => {
         t(s, d, "events").createOrReplaceTempView("events")
-        s.sql(graft.sql.RedshiftSql.rewrite(
+        graft.sql.RedshiftSql.plan(s,
           """SELECT event_id,
             |  DATEDIFF(h, TIMESTAMP '2024-01-01 00:00:00', ts) AS hrs,
             |  DATEDIFF(min, TIMESTAMP '2024-01-01 00:00:00', ts) AS mins,
             |  unix_micros(DATEADD(d, 2, ts)) AS plus2d_us
-            |FROM events ORDER BY event_id""".stripMargin))
+            |FROM events ORDER BY event_id""".stripMargin)
       },
       Some("""SELECT event_id,
              |  date_diff('hour', TIMESTAMP '2024-01-01 00:00:00',

@@ -73,10 +73,9 @@ import SqlTokens._
   */
 object LocalCopy {
 
-  /** Runs `sql` as emulated local COPY/UNLOAD; false when it is neither
-    * (caller falls back to `spark.sql`). */
-  def run(spark: SparkSession, sql: String): Boolean = {
-    val toks = tokenize(sql)
+  /** Runs the statement `toks` as emulated local COPY/UNLOAD; false when
+    * it is neither (caller falls back to `spark.sql`). */
+  def run(spark: SparkSession, toks: Vector[Tok]): Boolean = {
     val first = nextCode(toks, 0)
     if (first >= toks.length) return false
     if (toks(first).isWord("copy")) { runCopy(spark, toks, first); true }
@@ -527,7 +526,7 @@ object LocalCopy {
     require(!(o.format == "parquet" && o.compression.nonEmpty),
       "UNLOAD: compression options do not apply to PARQUET " +
         "(Redshift writes parquet with its internal codec)")
-    val df = spark.sql(RedshiftSql.rewrite(query))
+    val df = RedshiftSql.plan(spark, query)
 
     // Redshift's default refuses to UNLOAD over existing files — a mistyped
     // TO path must not silently destroy data (ADVICE r4)

@@ -30,11 +30,10 @@ import SqlTokens._
   */
 object LocalDml {
 
-  /** Runs `sql` as emulated local DML if it is an UPDATE/DELETE/MERGE
-    * statement; returns false when the statement is not DML (caller falls
-    * back to `spark.sql`). */
-  def run(spark: SparkSession, sql: String): Boolean = {
-    val toks = tokenize(sql)
+  /** Runs the statement `toks` as emulated local DML if it is an
+    * UPDATE/DELETE/MERGE statement; returns false when the statement is not
+    * DML (caller falls back to `spark.sql`). */
+  def run(spark: SparkSession, toks: Vector[Tok]): Boolean = {
     val first = nextCode(toks, 0)
     if (first >= toks.length) return false
     if (toks(first).isWord("update")) { runUpdate(spark, toks, first); true }

@@ -37,10 +37,10 @@ object LocalMv {
 
   private val QueryProp = "graft.mv.query"
 
-  /** Runs `sql` as a materialized-view statement; false when it is none of
-    * CREATE/REFRESH/DROP MATERIALIZED VIEW (caller falls through). */
-  def run(spark: SparkSession, sql: String): Boolean = {
-    val toks = tokenize(sql)
+  /** Runs the statement `toks` as a materialized-view statement; false
+    * when it is none of CREATE/REFRESH/DROP MATERIALIZED VIEW (caller falls
+    * through). */
+  def run(spark: SparkSession, toks: Vector[Tok]): Boolean = {
     val first = nextCode(toks, 0)
     if (first >= toks.length) return false
     val t = toks(first)

@@ -1,5 +1,7 @@
 package graft.sql
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import SqlTokens._
 
 /** Redshift → Spark SQL dialect rewriter (SURVEY.md §2.2 🔧 rows).
@@ -51,21 +53,28 @@ import SqlTokens._
   */
 object RedshiftSql {
 
+  /** The one path from local Redshift SQL text to a Spark plan: rewrite,
+    * register the system-catalog views the text names, then `spark.sql`. */
+  def plan(spark: SparkSession, sql: String): DataFrame = {
+    val rewritten = rewrite(sql)
+    CatalogShims.ensure(spark, rewritten)
+    spark.sql(rewritten)
+  }
+
   def rewrite(sql: String): String = {
+    var toks = tokenize(sql)
     // Redshift `EXPLAIN [VERBOSE] <q>`: rewrite the inner query so dialect
     // constructs (QUALIFY, TOP, …) explain instead of erroring; VERBOSE
     // maps to Spark's EXTENDED. Recursion depth is 1 — the remainder
     // cannot itself start with EXPLAIN after the strip.
-    val lead = tokenize(sql)
-    val f = nextCode(lead, 0)
-    if (f < lead.length && lead(f).isWord("explain")) {
-      var r = nextCode(lead, f + 1)
-      val verbose = r < lead.length && lead(r).isWord("verbose")
-      if (verbose) r = nextCode(lead, r + 1)
+    val f = nextCode(toks, 0)
+    if (f < toks.length && toks(f).isWord("explain")) {
+      var r = nextCode(toks, f + 1)
+      val verbose = r < toks.length && toks(r).isWord("verbose")
+      if (verbose) r = nextCode(toks, r + 1)
       val mode = if (verbose) "EXPLAIN EXTENDED " else "EXPLAIN "
-      return mode + rewrite(render(lead.slice(r, lead.length)).trim)
+      return mode + rewrite(render(toks.slice(r, toks.length)).trim)
     }
-    var toks = tokenize(sql)
     toks = SpectrumDdl.rewriteExternalSchema(toks)
     toks = SpectrumDdl.rewriteExternalTable(toks)
     toks = rewriteSelectInto(toks)

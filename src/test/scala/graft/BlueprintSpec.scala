@@ -167,10 +167,10 @@ class BlueprintSpec extends SparkSpecBase {
     TableIO.write(df, "jt", InsertMethod.Append, Some("bps"), Some(derby))
     // second write sees the schema as existing (metadata probe, no DDL)
     TableIO.write(df, "jt", InsertMethod.Append, Some("bps"), Some(derby))
-    val back = TableIO.query(spark, """SELECT * FROM "bps"."jt"""", Some(derby))
+    val back = TableIO.query(spark, """SELECT * FROM "bps"."jt"""", derby)
     assert(back.count() === 4)
     TableIO.write(df, "jt", InsertMethod.Replace, Some("bps"), Some(derby))
-    val n = TableIO.query(spark, """SELECT count(*) AS n FROM "bps"."jt"""", Some(derby))
+    val n = TableIO.query(spark, """SELECT count(*) AS n FROM "bps"."jt"""", derby)
       .collect()(0).getAs[Number](0).longValue()
     assert(n === 2L)
     val err = intercept[Exception] {
@@ -184,12 +184,12 @@ class BlueprintSpec extends SparkSpecBase {
     val df = (1 to 50).map(i => (i, i * 2.0)).toDF("id", "dbl")
     TableIO.write(df, "jq", InsertMethod.Replace, Some("bps"), Some(derby))
     val single = TableIO.query(spark,
-      """SELECT "id", "dbl" FROM "bps"."jq" WHERE "id" <= 10""", Some(derby))
+      """SELECT "id", "dbl" FROM "bps"."jq" WHERE "id" <= 10""", derby)
     assert(single.count() === 10)
     assert(single.schema("dbl").dataType.typeName === "double")
     // A7 scale path: range-partitioned parallel read over the query
     val part = TableIO.query(spark, """SELECT "id", "dbl" FROM "bps"."jq"""",
-      Some(derby), partitionOn = Some(("id", 1L, 50L, 4)))
+      derby, partitionOn = Some(("id", 1L, 50L, 4)))
     assert(part.rdd.getNumPartitions === 4)
     assert(part.count() === 50)
   }

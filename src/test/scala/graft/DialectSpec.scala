@@ -2387,4 +2387,24 @@ class DialectSpec extends SparkSpecBase {
     assert(e.getMessage.contains("u1"), e.getMessage)
     spark.sql("DROP TABLE cur_h")
   }
+
+  test("cursor and UNLOAD over pg_table_def see the table the script just created") {
+    import java.nio.file.Files
+    import graft.cli.ExecuteSql
+    spark.sql("DROP TABLE IF EXISTS cur_shim")
+    // the cursor query is planned like any other statement: the system-
+    // catalog views are generated for it, from the catalog as it is now
+    val q = "SELECT * FROM pg_table_def WHERE tablename = 'cur_shim'"
+    ExecuteSql.run(spark,
+      s"""CREATE TABLE cur_shim (id BIGINT, name STRING, amt DOUBLE);
+         |DECLARE c CURSOR FOR $q;
+         |FETCH ALL FROM c;
+         |CLOSE c""".stripMargin, None)
+    assert(ExecuteSql.fetchLog.toList === List(("c", 3L)))
+    val out = Files.createTempDirectory("graft_unload_shim_").resolve("cols.csv")
+    ExecuteSql.run(spark,
+      s"UNLOAD ('${q.replace("'", "''")}') TO '$out' PARALLEL OFF", None)
+    assert(Files.readAllLines(out).size === 3)
+    spark.sql("DROP TABLE cur_shim")
+  }
 }

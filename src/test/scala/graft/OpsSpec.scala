@@ -2887,17 +2887,41 @@ class OpsSpec extends SparkSpecBase {
         "cast(id as double) as v",
         "id % 7 + 1 as c1",
         "cast(cast(id % 5 as decimal(18,6)) - 2 as decimal(18,6)) as c2")
-    val out = PercentileOps.rangePrefixN(blocks, "k", Seq("v"), Seq("c1", "c2"))
-    val bad = out.groupBy(col("k"))
-      .agg(e("max(__cum_c1)").as("mx1"), e("max(__n_c1)").as("n1"),
-        e("sum(c1)").as("t1"),
-        // c2 goes negative, so its per-key LAST cumulative (at max v) —
-        // not the max — must equal the total
-        e("max_by(__cum_c2, v)").as("last2"), e("max(__n_c2)").as("n2"),
-        e("sum(c2)").as("t2"))
-      .filter("mx1 != n1 or n1 != t1 or last2 != n2 or n2 != t2")
-    assert(bad.count() === 0)
-    spark.catalog.clearCache()
+    // AQE coalescing may merge the persisted range partitions (the session
+    // lets it change a cached plan's partitioning); the pid-keyed fold-in
+    // must hold however they merge. On this frame the session default and
+    // a huge advisory size both merge the four range partitions into one;
+    // a tiny one keeps all four only with the 1 MB minimum partition size
+    // lowered too, since Spark never targets less than that minimum
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    def run(confs: (String, String)*): Seq[String] = {
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val out = PercentileOps.rangePrefixN(blocks, "k", Seq("v"), Seq("c1", "c2"))
+        val bad = out.groupBy(col("k"))
+          .agg(e("max(__cum_c1)").as("mx1"), e("max(__n_c1)").as("n1"),
+            e("sum(c1)").as("t1"),
+            // c2 goes negative, so its per-key LAST cumulative (at max v) —
+            // not the max — must equal the total
+            e("max_by(__cum_c2, v)").as("last2"), e("max(__n_c2)").as("n2"),
+            e("sum(c2)").as("t2"))
+          .filter("mx1 != n1 or n1 != t1 or last2 != n2 or n2 != t2")
+        assert(bad.count() === 0, s"invariant broken under $confs")
+        out.collect().map(_.mkString("|")).toSeq.sorted
+      } finally {
+        saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+        spark.catalog.clearCache()
+      }
+    }
+    val base = run()
+    assert(run(advisory -> "1", minSize -> "1") === base,
+      "tiny advisory size changed the output")
+    assert(run(advisory -> "1g") === base, "huge advisory size changed the output")
   }
 
   test("rangeFrameAgg guards: offset-type mismatch and reserved output names raise") {

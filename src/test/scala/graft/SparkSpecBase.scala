@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: small parallelism (specs run on sf0.001),
-  * UTC, nanos-timestamp compat for `events`. */
+/** Shared local session for specs: GraftSession's configuration with test
+  * deployment settings (specs run on sf0.001) — four cores, four shuffle
+  * partitions, a throwaway warehouse and quiet logs. */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
@@ -13,19 +14,11 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder("graft-spec")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror GraftSession: CBO + stats-based join reordering on, so specs
-      // exercise the same optimizer configuration production runs under
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

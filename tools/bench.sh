@@ -29,5 +29,4 @@ done
 export SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_BENCH_OUT="$2"
 if [ -n "${3:-}" ]; then export SPARK_GRAFT_BENCH_ONLY="$3"; fi
 java "-Xmx${SPARK_DRIVER_MEM:-8g}" $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:$SPARK_HOME/jars/*" graft.Bench 2> "${2%.json}.log"

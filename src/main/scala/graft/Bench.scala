@@ -7,14 +7,6 @@ import scala.util.control.NonFatal
   *  "median":{name:median_sec,...},"samples":{name:actual_runs,...},
   *  "errors":{name:msg,...},"ok":k,"n":n,"sf":dir}
   *
-  * Known-benign log line (VERDICT r15 #6): exactly ONE `WindowExec: No
-  * Partition Defined` warning per k-means-family query is EXPECTED — it
-  * is the cluster-seed rank (`ClusterOps.kmeansFit`), a row_number over
-  * a `limit(k)` frame that is ≤k rows by construction (a constant
-  * partition key gets constant-folded back out of the spec, so it cannot
-  * be silenced code-side). Any OTHER occurrence of that warning in a
-  * bench log is a real global window and should be chased.
-  *
   * Each query is materialized with a DataSource-v2 noop write so the FULL
   * physical plan executes (a bare .count() would let Catalyst prune every
   * projection above the scan and measure nothing but the scan).

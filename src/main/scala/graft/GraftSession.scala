@@ -27,7 +27,7 @@ object GraftSession {
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       // AQE sizes the materialization of cached plans from their actual
-      // bytes, so a persist() in a round loop (PageRank, BPE, Lloyd fits)
+      // bytes, so a persist() in a round loop (PageRank, BPE)
       // is scanned by as many tasks as its size needs, not by the full
       // shuffle-partition count. An amplifying join above a tiny cache
       // pins its own partition count (pinJoinParallelism); rangePrefixN's

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * `src` plus one `dst`-keyed partial-aggregated sum — the canonical
   * distributed PageRank round, node- and edge-partitioned, no broadcast
   * of anything data-sized, no driver round-trip for the data path
-  * (iterations are a driver loop over PLANS, as in
-  * [[ClusterOps.kmeansFit]]). Edge/out-weight/node aggregates are
+  * (iterations are a driver loop over PLANS; the rank vector is
+  * node-sized, so unlike [[ClusterOps.kmeansFit]]'s k·dim centroids it
+  * stays on the executors). Edge/out-weight/node aggregates are
   * persisted across rounds so the input is scanned once, not `iters`
   * times. The one driver scalar is the node COUNT (sizes the uniform
   * prior), the same metadata-cheap count [[ClusterOps.semanticPairsAuto]]

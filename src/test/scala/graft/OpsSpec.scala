@@ -1196,6 +1196,50 @@ class OpsSpec extends SparkSpecBase {
     assert(d.toSeq === p.toSeq)
   }
 
+  test("kmeans: each extra Lloyd round costs at most two Spark jobs") {
+    // the centroids live on the driver: a round is one aggregation job,
+    // not a plan that grows and is persisted round by round
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    def jobs(iters: Int): Int = {
+      spark.catalog.clearCache()
+      val (out, started, _) = jobsDuring(s"kmeans-iters-$iters")(
+        graft.ops.ClusterOps.kmeansAssign(emb, k = 8, iters = iters).collect())
+      assert(out.get.length === 500)
+      started.size
+    }
+    val (one, three) = (jobs(1), jobs(3))
+    spark.catalog.clearCache()
+    assert(three - one <= 4, s"iters = 1 ran $one jobs, iters = 3 ran $three")
+  }
+
+  test("kmeans: a cluster left empty by a duplicate seed keeps its previous centroid") {
+    // vec_ids 0 and 1 are the same vector, so seeds 0 and 1 coincide and
+    // the (dist, cid) tie-break hands cid 0 every row nearest to them:
+    // cluster 1 is empty in the round and keeps its seed, 0 and 2 move
+    val pts = spark.range(30).selectExpr("id as vec_id",
+      """transform(sequence(0, 3), j -> cast(case when id < 2 then 1.0
+        |  else cast(id % 3 as double) * 10.0 + cast(id as double) / 100.0 end
+        |  as float)) as embedding""".stripMargin)
+    val (cells, _) = graft.ops.ClusterOps.kmeansFit(pts, k = 3, iters = 1)
+    val m = cells.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val seed = Seq.fill(4)(1048576.0) // ⌊1.0 · 2²⁰⌋
+    assert(m(1L) === seed)
+    assert(m(0L) !== seed)
+    assert(m(2L).head > 20.0 * 1048576.0, s"cluster 2 did not move: ${m(2L)}")
+    spark.catalog.clearCache()
+  }
+
+  test("kmeans: centroid sums past 2^63 raise instead of wrapping") {
+    // 2⁴² quantizes to 2⁶², so four rows of one cluster sum to 2⁶⁴
+    val pts = spark.range(4).selectExpr("id as vec_id",
+      "array(cast(4398046511104.0 as float), cast(1.0 as float)) as embedding")
+    val e = intercept[Exception](
+      graft.ops.ClusterOps.kmeansAssign(pts, k = 1, iters = 1).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
+    spark.catalog.clearCache()
+  }
+
   test("epoch materialization: copy counts follow the boosts, deterministic, map-only epoch") {
     val docs = Tables.load(spark, sfDir, "documents")
     val epoch = graft.ops.PipelineOps.epochMaterialize(docs).collect()
@@ -1433,42 +1477,74 @@ class OpsSpec extends SparkSpecBase {
     assert(raw.nonEmpty)
   }
 
-  test("residual ivf-pq side-thread jobs carry the calling query's job group") {
+  /** Runs `body` under job group `group`; returns its outcome, the jobs
+    * that started meanwhile as (job id, job group), and the ids of those
+    * that had ended by the time it returned. The listener bus is
+    * asynchronous and in order: once a later marker job's start arrives,
+    * every earlier event has arrived too. */
+  private def jobsDuring[T](group: String)(
+      body: => T): (scala.util.Try[T], Seq[(Int, String)], Set[Int]) = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+        started.add(e.jobId -> String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
     }
-    def underGroup(g: String)(body: => Unit): Unit = {
+    def underGroup[A](g: String)(a: => A): A = {
       sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
+      try a finally sc.clearJobGroup()
     }
-    // the listener bus is asynchronous and in order: once a marker job's
-    // start arrives, every earlier job's start has arrived too
-    def drain(): Unit = {
-      underGroup("marker")(sc.parallelize(Seq(1), 1).count())
+    val marker = s"$group-marker"
+    sc.addSparkListener(listener)
+    try {
+      val out = scala.util.Try(underGroup(group)(body))
+      underGroup(marker)(sc.parallelize(Seq(1), 1).count())
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains("marker"), "listener bus did not drain")
-    }
+      def drained = started.asScala.exists(_._2 == marker)
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not drain")
+      val jobs = started.asScala.toSeq.filterNot(_._2 == marker)
+      (out, jobs, jobs.map(_._1).filter(ended.contains).toSet)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("residual ivf-pq side-thread jobs carry the calling query's job group") {
     val pts = spark.range(60).selectExpr("id as vec_id",
       "transform(sequence(0, 7), j -> cast((id * 7 + j * 13) % 17 as float)) as embedding")
     def search(): Unit = graft.ops.ClusterOps.pqTopKIvfRes(pts, dim = 8, m = 2,
       ksub = 3, kc = 3, nprobe = 1, iters = 1, k = 3, nQueries = 4).collect()
-    sc.addSparkListener(listener)
-    try {
-      underGroup("g1")(search())
-      drain()
-      groups.clear()
-      underGroup("g2")(search())
-      drain()
-      val seen = groups.asScala.toList.filterNot(_ == "marker")
-      assert(seen.nonEmpty && seen.forall(_ == "g2"),
-        s"jobs of the g2 call ran under groups ${seen.groupBy(identity).map { case (g, js) => s"$g×${js.size}" }}")
-    } finally sc.removeSparkListener(listener)
+    jobsDuring("g1")(search())._1.get
+    val (out, jobs, _) = jobsDuring("g2")(search())
+    out.get
+    val seen = jobs.map(_._2)
+    assert(seen.nonEmpty && seen.forall(_ == "g2"),
+      s"jobs of the g2 call ran under groups ${seen.groupBy(identity).map { case (g, js) => s"$g×${js.size}" }}")
+  }
+
+  test("residual ivf-pq: a failing driver-thread chain leaves no side job running") {
+    // the side task quantizes only the query rows (vec_id < 4) and row 0
+    // takes two seconds; corpus row 50 raises, so the driver-thread fit
+    // fails while the side job still runs — the call must cancel it and
+    // wait for it before the error propagates
+    val slow = udf { (id: Long) => if (id == 0L) Thread.sleep(2000); id }
+    val pts = spark.range(60)
+      .select(col("id").as("vec_id"),
+        when(col("id") === 50, raise_error(lit("corpus row 50"))).otherwise(slow(col("id"))).as("s"))
+      .selectExpr("vec_id",
+        "transform(sequence(0, 7), j -> cast((s * 7 + j * 13) % 17 as float)) as embedding")
+    val (out, jobs, ended) = jobsDuring("ivfres-fail")(graft.ops.ClusterOps.pqTopKIvfRes(
+      pts, dim = 8, m = 2, ksub = 3, kc = 3, nprobe = 1, iters = 1, k = 3, nQueries = 4).collect())
+    val err = out.failed.get
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("corpus row 50")), err)
+    assert(jobs.size >= 2, s"expected the side job and the failing fit job, saw $jobs")
+    assert(jobs.forall(j => ended.contains(j._1)),
+      s"jobs still running after the call failed: ${jobs.filterNot(j => ended.contains(j._1))}")
+    spark.catalog.clearCache()
   }
 
   test("3-D z-order layout: partitions bound ALL THREE dimensions") {
@@ -2880,13 +2956,18 @@ class OpsSpec extends SparkSpecBase {
     // every shuffle partition: many keys (incl. a null key), many blocks
     // per key, two measures of different types.
     import graft.ops.PercentileOps
-    import org.apache.spark.sql.functions.{col, expr => e}
+    // `p` is a payload the offsets side never reads: it prunes `p` below
+    // its own range exchange, which then samples bounds of its own, so
+    // only the pid persist keeps the two consumers on one partitioning
+    // (without a payload both read the same columns and Spark reuses one
+    // exchange, which hides a missing persist)
     val blocks = spark.range(0, 20000)
       .selectExpr(
         "case when id % 97 = 0 then cast(null as string) else concat('k', id % 23) end as k",
         "cast(id as double) as v",
         "id % 7 + 1 as c1",
-        "cast(cast(id % 5 as decimal(18,6)) - 2 as decimal(18,6)) as c2")
+        "cast(cast(id % 5 as decimal(18,6)) - 2 as decimal(18,6)) as c2",
+        "concat('p', id) as p")
     // AQE coalescing may merge the persisted range partitions (the session
     // lets it change a cached plan's partitioning); the pid-keyed fold-in
     // must hold however they merge. On this frame the session default and
@@ -2899,17 +2980,21 @@ class OpsSpec extends SparkSpecBase {
       val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val out = PercentileOps.rangePrefixN(blocks, "k", Seq("v"), Seq("c1", "c2"))
-        val bad = out.groupBy(col("k"))
-          .agg(e("max(__cum_c1)").as("mx1"), e("max(__n_c1)").as("n1"),
-            e("sum(c1)").as("t1"),
-            // c2 goes negative, so its per-key LAST cumulative (at max v) —
-            // not the max — must equal the total
-            e("max_by(__cum_c2, v)").as("last2"), e("max(__n_c2)").as("n2"),
-            e("sum(c2)").as("t2"))
-          .filter("mx1 != n1 or n1 != t1 or last2 != n2 or n2 != t2")
-        assert(bad.count() === 0, s"invariant broken under $confs")
-        out.collect().map(_.mkString("|")).toSeq.sorted
+        val rows = PercentileOps.rangePrefixN(blocks, "k", Seq("v"), Seq("c1", "c2")).collect()
+        assert(rows.length === 20000, s"rows lost under $confs")
+        rows.groupBy(r => Option(r.getAs[String]("k"))).foreach { case (key, rs) =>
+          val last = rs.maxBy(_.getAs[Double]("v"))
+          val n1 = last.getAs[Long]("__n_c1")
+          val n2 = last.getAs[java.math.BigDecimal]("__n_c2")
+          assert(rs.map(_.getAs[Long]("__cum_c1")).max === n1 &&
+            n1 === rs.map(_.getAs[Long]("c1")).sum, s"c1 invariant broken for $key under $confs")
+          // c2 goes negative, so its per-key LAST cumulative (at max v) —
+          // not the max — must equal the total
+          assert(last.getAs[java.math.BigDecimal]("__cum_c2").compareTo(n2) === 0 &&
+            n2.compareTo(rs.map(_.getAs[java.math.BigDecimal]("c2")).reduce(_ add _)) === 0,
+            s"c2 invariant broken for $key under $confs")
+        }
+        rows.map(_.mkString("|")).toSeq.sorted
       } finally {
         saved.foreach {
           case (k, Some(v)) => spark.conf.set(k, v)

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One gated operator: a Spark-first implementation plus (when the semantics
-  * are SQL-expressible) an equivalent DuckDB oracle query the driver
-  * hash-compares against at sf0.01.
+/** One gated query or operator: the Spark side `fn` plus (when the
+  * semantics are SQL-expressible) the DuckDB oracle text the correctness
+  * gate hash-compares against at sf0.01. Where the oracle text is Redshift SQL
+  * that Spark's surface runs unchanged, both sides are that one text
+  * (`T2`'s split rule); otherwise `fn` is a separate implementation.
   *
   * Canonicalization rules shared by both sides (SURVEY.md §5.2, §7.4.5-6):
   *   - explicit total-order ORDER BY (unique tie-break key) in both engines;

@@ -46,11 +46,21 @@ object ExecuteSql {
   }
 
   /** Tri-source connection resolution shared by all three CLIs — returns
-    * None when no source is given (local session-catalog mode). */
+    * None when no source is given (local session-catalog mode). A partial
+    * set of connection flags raises the resolve message instead of
+    * silently running against the local catalog. */
   private[cli] def connectionOf(p: Map[String, String]): Option[ConnectionConfig] =
     ConnectionConfig.resolve(
       p.get("db-connection-url"), p.get("host"), p.get("port").map(_.toInt),
-      p.get("database"), p.get("username"), p.get("password")).toOption
+      p.get("database"), p.get("username"), p.get("password")) match {
+      case Right(c) => Some(c)
+      case Left(msg) if connectionFlags.exists(p.contains) =>
+        throw new IllegalArgumentException(msg)
+      case Left(_) => None
+    }
+
+  private val connectionFlags =
+    Seq("db-connection-url", "host", "port", "database", "username", "password")
 
   def run(spark: SparkSession, query: String, conn: Option[ConnectionConfig]): Unit =
     conn match {

@@ -31,9 +31,8 @@ object CsvIO {
   /** Write `df` as CSV to `destPath`.
     *
     * `singleFile=true` → exactly one CSV file at `destPath` (the blueprint
-    * contract): written via a 1-partition spill dir, then the part file is
-    * moved into place. Serializes the final write through one task —
-    * correct for CLI-sized exports, NOT for 100 TB (use
+    * contract, [[writeSingleFile]]). Serializes the final write through
+    * one task — correct for CLI-sized exports, NOT for 100 TB (use
     * `singleFile=false`, which writes `destPath` as a directory of parts
     * with executor parallelism).
     */
@@ -43,21 +42,33 @@ object CsvIO {
       df.write.mode("overwrite").option("header", header).option("sep", sep)
         .csv(destPath)
     } else {
-      val tmp = Files.createTempDirectory("graft_csv_").resolve("out").toString
-      df.coalesce(1).write.mode("overwrite").option("header", header)
-        .option("sep", sep).csv(tmp)
-      val stream = Files.list(Paths.get(tmp))
-      val part =
-        try stream.iterator.asScala.find(_.getFileName.toString.endsWith(".csv"))
-        finally stream.close()
-      val dest = Paths.get(destPath)
-      Option(dest.getParent).foreach(Files.createDirectories(_))
-      part match {
-        case Some(p) => Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
-        case None => // empty result with no part file: emit an empty csv
-          Files.write(dest, Array.emptyByteArray)
-      }
-      LocalFiles.deleteRecursively(Paths.get(tmp).getParent)
+      writeSingleFile(df, destPath, "csv",
+        Map("header" -> header.toString, "sep" -> sep))
     }
+  }
+
+  /** Write `df` as exactly one `format` file at `dest` — the single-file
+    * egest of StoreQueryResults and `UNLOAD … PARALLEL OFF`: one task
+    * writes a spill directory, then its part file is moved into place (an
+    * empty file when the result leaves no part). The spill directory is
+    * removed whether or not the write succeeds. */
+  private[graft] def writeSingleFile(df: DataFrame, dest: String, format: String,
+                                     options: Map[String, String]): Unit = {
+    val spill = Files.createTempDirectory("graft_spill_")
+    try {
+      val out = spill.resolve("out")
+      df.coalesce(1).write.mode("overwrite").options(options).format(format)
+        .save(out.toString)
+      val stream = Files.list(out)
+      val part =
+        try stream.iterator.asScala.find(_.getFileName.toString.startsWith("part-"))
+        finally stream.close()
+      val to = Paths.get(dest)
+      Option(to.getParent).foreach(Files.createDirectories(_))
+      part match {
+        case Some(p) => Files.move(p, to, StandardCopyOption.REPLACE_EXISTING)
+        case None => Files.write(to, Array.emptyByteArray)
+      }
+    } finally LocalFiles.deleteRecursively(spill)
   }
 }

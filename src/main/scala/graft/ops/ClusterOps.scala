@@ -392,13 +392,9 @@ object ClusterOps {
                     threshold: Double = 0.95,
                     maxClusterSize: Long = Long.MaxValue): DataFrame = {
     val assigned = cappedAssign(emb, k, iters, maxClusterSize)
-    val q = emb.selectExpr("vec_id",
-        s"transform(embedding, x -> cast(floor(cast(x as double) * $SCALE) as bigint)) as xq")
-      .selectExpr("vec_id", "transform(xq, v -> cast(v as double)) as xd")
-      .selectExpr("vec_id", "xd", "array_dot(xd, xd) as nn")
-      .join(assigned, Seq("vec_id"))
-    val a = q.selectExpr("cluster", "sub", "vec_id as va", "xd as xa", "nn as na")
-    val b = q.selectExpr("cluster", "sub", "vec_id as vb", "xd as xb", "nn as nb")
+    val q = quantized(emb).join(assigned, Seq("vec_id"))
+    val a = q.selectExpr("cluster", "sub", "vec_id as va", "xd as xa", "xx as na")
+    val b = q.selectExpr("cluster", "sub", "vec_id as vb", "xd as xb", "xx as nb")
     a.join(b, Seq("cluster", "sub"))
       .filter(col("va") < col("vb"))
       .selectExpr("cluster", "va", "vb",

@@ -1,8 +1,5 @@
 package graft.sql
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, expr, lit}
 import org.apache.spark.sql.types.StructType
@@ -45,9 +42,9 @@ import SqlTokens._
   *  - UNLOAD raises if the destination already holds files unless
   *    ALLOWOVERWRITE (or CLEANPATH) is given — Redshift's default;
   *  - UNLOAD defaults to a parallel directory of part files (the 100 TB
-  *    path); PARALLEL OFF produces the single-file contract (CSV via
-  *    [[graft.io.CsvIO.write]], other formats via the same
-  *    spill-and-move);
+  *    path); PARALLEL OFF produces the single-file contract, every format
+  *    through [[graft.io.CsvIO.writeSingleFile]] with the same write
+  *    options (ADDQUOTES, NULL AS, compression) as the parallel path;
   *  - MANIFEST writes a `<path>manifest` JSON listing every data file
   *    (VERBOSE adds content_length metadata), Redshift's layout;
   *  - COPY … MANIFEST treats the FROM path as such a manifest and loads
@@ -559,28 +556,9 @@ object LocalCopy {
     } else if (parallel) {
       // PARALLEL ON (Redshift's default) → a directory of part files
       df.write.mode("overwrite").options(writeOpts).format(fmt).save(path)
-    } else if (fmt == "csv" && o.compression.isEmpty) {
-      // the blueprint single-file contract (CsvIO owns the spill-and-move,
-      // including the empty-result empty-file case)
-      graft.io.CsvIO.write(df, path, header = header,
-        singleFile = true, sep = o.sep)
     } else {
-      // single-file contract for parquet/json/compressed csv: same
-      // spill-and-move as CsvIO, matching on the part- prefix (compression
-      // suffixes vary)
-      val tmp = Files.createTempDirectory("graft_unload_").resolve("out").toString
-      df.coalesce(1).write.mode("overwrite").options(writeOpts).format(fmt).save(tmp)
-      val stream = Files.list(Paths.get(tmp))
-      val part =
-        try stream.iterator.asScala.find(_.getFileName.toString.startsWith("part-"))
-        finally stream.close()
-      val dest = Paths.get(path)
-      Option(dest.getParent).foreach(Files.createDirectories(_))
-      part match {
-        case Some(p) => Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
-        case None => Files.write(dest, Array.emptyByteArray)
-      }
-      graft.io.LocalFiles.deleteRecursively(Paths.get(tmp).getParent)
+      // PARALLEL OFF → the blueprint single-file contract, every format
+      graft.io.CsvIO.writeSingleFile(df, path, fmt, writeOpts)
     }
 
     if (manifest) writeManifest(fs, hPath, manifestVerbose)

@@ -242,4 +242,61 @@ class BlueprintSpec extends SparkSpecBase {
       .map(_.toString).count(_.endsWith(".csv"))
     assert(parts > 1, "scale path must keep executor parallelism")
   }
+
+  test("partial connection flags raise in all three CLIs instead of running locally") {
+    import graft.cli.ExecuteSql
+    assume(!sys.env.contains(ConnectionConfig.EnvVar))
+    def refused(run: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains("connection required"), e.getMessage)
+    }
+    try {
+      refused(ExecuteSql.main(Array("--query", "SELECT 1", "--host", "h")))
+      refused(ExecuteSql.main(Array("--query", "SELECT 1", "--port", "5439")))
+      refused(StoreQueryResults.main(Array("--query", "SELECT 1",
+        "--destination-file-name", s"$tmp/partial_conn.csv", "--username", "u")))
+      refused(UploadFile.main(Array("--table-name", "partial_conn_t",
+        "--source-file-name", s"$tmp/partial_conn.csv", "--host", "h", "--database", "d")))
+      assert(!Files.exists(Paths.get(s"$tmp/partial_conn.csv")))
+      // no connection flag at all is local catalog mode
+      ExecuteSql.main(Array("--query", "SELECT 1"))
+    } finally spark.sparkContext.setLogLevel("ERROR") // the CLIs set WARN
+  }
+
+  test("a failing single-file egest or UNLOAD PARALLEL OFF leaves no spill directory") {
+    import scala.jdk.CollectionConverters._
+    import graft.cli.ExecuteSql
+    val out = Files.createTempDirectory("graft_spill_out_")
+    def graftTmp(): Set[String] = {
+      val st = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+      try st.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_")).toSet
+      finally st.close()
+    }
+    val before = graftTmp()
+    val failing = "SELECT CASE WHEN id = 3 THEN raise_error('egest failure') ELSE id END AS x " +
+      "FROM range(10)"
+    intercept[Exception](
+      StoreQueryResults.run(spark, failing, out.toString, "x.csv", header = true))
+    intercept[Exception](ExecuteSql.run(spark,
+      s"UNLOAD ('${failing.replace("'", "''")}') TO '${out.resolve("x.parquet")}' " +
+        "FORMAT PARQUET PARALLEL OFF", None))
+    assert(graftTmp() -- before === Set.empty[String])
+  }
+
+  test("UNLOAD PARALLEL OFF writes the parallel path's bytes, ADDQUOTES and NULL AS included") {
+    import scala.jdk.CollectionConverters._
+    import graft.cli.ExecuteSql
+    val out = Files.createTempDirectory("graft_unload_opts_")
+    val q = "SELECT 1 AS a, CAST(NULL AS STRING) AS b, ''x,y'' AS c"
+    val opts = "CSV HEADER ADDQUOTES NULL AS 'NA'"
+    ExecuteSql.run(spark, s"UNLOAD ('$q') TO '${out.resolve("par")}' $opts", None)
+    ExecuteSql.run(spark, s"UNLOAD ('$q') TO '${out.resolve("one.csv")}' $opts PARALLEL OFF", None)
+    val st = Files.list(out.resolve("par"))
+    val parts = try st.iterator.asScala.filter(_.getFileName.toString.startsWith("part-"))
+      .toSeq.sortBy(_.toString) finally st.close()
+    val parallel = parts.map(Files.readString(_)).mkString
+    assert(parallel.contains("NA") && parallel.contains("\"1\""), parallel)
+    assert(Files.readString(out.resolve("one.csv")) === parallel)
+  }
 }

@@ -242,19 +242,6 @@ object Bench {
     val hotNames = results.collect { case (k, _, _, _, _, true) => k }
     val remeasuredNames = remeasured.result()
     val reflooredNames = refloored.result()
-    // BPE at realistic merge counts (bench-only; the oracle stays at 10
-    // unrolled rounds — VERDICT r10 item 8): SPARK_GRAFT_BPE_ROUNDS=100
-    // times one bpeTrain run at that round count so the serial-round cost
-    // curve is measurable. Reported as extra keys on the JSON line; absent
-    // unless the env var is set, so driver runs are unchanged.
-    val bpeExtra = sys.env.get("SPARK_GRAFT_BPE_ROUNDS").map(_.toInt).map { r =>
-      val docs = Tables.load(spark, sfDir, "documents")
-      val t0 = System.nanoTime()
-      val merges = graft.ops.TextOps.bpeTrain(docs, rounds = r).count()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      s""","bpe_rounds":$r,"bpe_merges":$merges,"bpe_train_sec":$t"""
-    }.getOrElse("")
     val qs = results.map { case (k, v, _, _, _, _) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val med = results.map { case (k, _, m, _, _, _) => s"${jstr(k)}:$m" }.mkString("{", ",", "}")
     // per-query ACTUAL sample counts — "runs" alone would misreport the
@@ -314,7 +301,7 @@ object Bench {
           s""""hot":$hot,"remeasured":$rem,""" +
           s""""refloored":${reflooredNames.map(jstr).mkString("[", ",", "]")}"""
       }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"median":$med,"samples":$cnt,"errors":$errs,"ok":$ok,"n":${results.size},"runs":$runs$bpeExtra$ratioJson$canaryJson,"sf":${jstr(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"median":$med,"samples":$cnt,"errors":$errs,"ok":$ok,"n":${results.size},"runs":$runs$ratioJson$canaryJson,"sf":${jstr(sfDir)}}"""
     // The driver captures only the last ~2000 chars of stdout and parses the
     // JSON line it finds there. With 110 queries the full line is ~3k chars,
     // so its head gets cut and the driver records parsed:null (BENCH_r09).

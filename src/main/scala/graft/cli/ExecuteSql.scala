@@ -51,13 +51,16 @@ object ExecuteSql {
     * silently running against the local catalog. */
   private[cli] def connectionOf(p: Map[String, String]): Option[ConnectionConfig] =
     ConnectionConfig.resolve(
-      p.get("db-connection-url"), p.get("host"), p.get("port").map(_.toInt),
+      p.get("db-connection-url"), p.get("host"), p.get("port").map(portOf),
       p.get("database"), p.get("username"), p.get("password")) match {
       case Right(c) => Some(c)
       case Left(msg) if connectionFlags.exists(p.contains) =>
         throw new IllegalArgumentException(msg)
       case Left(_) => None
     }
+
+  private def portOf(s: String): Int = s.toIntOption.getOrElse(
+    throw new IllegalArgumentException(s"invalid --port '$s' (expected an integer)"))
 
   private val connectionFlags =
     Seq("db-connection-url", "host", "port", "database", "username", "password")

@@ -20,10 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   * clustering only as SQL shipped to the warehouse (`execute_sql.py:64,77`);
   * here it is a first-class distributed operator.
   *
-  * Unlike [[VectorOps.cosineTopKIvf]]'s cosine refinement (whose per-row
-  * `avg` is addition-order-dependent and therefore engine-specific), this
-  * op is EXACT cross-engine — every step is either integer arithmetic or
-  * a fixed-order IEEE double computation, so the full assignment
+  * The op is EXACT cross-engine — every step is either integer arithmetic
+  * or a fixed-order IEEE double computation, so the full assignment
   * hash-matches an independent DuckDB implementation:
   *
   *   - vectors quantize to integers: `⌊double(x) · 2²⁰⌋` (float→double is
@@ -577,39 +575,78 @@ object ClusterOps {
       adcScore(codeTuples(asg, None), qs, m, "q.luts[s][codes[s]]"), k, "dist")
   }
 
-  /** Plain-IVF top-k on the exact deterministic Lloyd path — the gated
-    * twin of [[VectorOps.cosineTopKIvf]]: the coarse quantizer is
-    * [[kmeansFit]] (integer-quantized vectors, exact BIGINT centroid sums,
-    * fixed-order double distances), each query probes its `nprobe`
-    * nearest cells ([[probeSet]]), and vectors in probed cells are ranked
-    * by the EXACT squared-L2 distance in the quantized-double space —
-    * every number a fixed-order IEEE computation, so probe sets, the
-    * scored pair set, distances and ranks all hash-gate against an
-    * independent DuckDB implementation (the same unrolled-CTE recipe as
-    * op_sim_topk_ivfpq, minus the PQ codes).
+  /** Plain-IVF top-k on the exact deterministic Lloyd path: the coarse
+    * quantizer is [[kmeansFit]] (integer-quantized vectors, exact BIGINT
+    * centroid sums, fixed-order double distances), each query probes its
+    * `nprobe` nearest cells ([[probeSet]]), and vectors in probed cells
+    * are ranked by the EXACT squared-L2 distance in the quantized-double
+    * space ([[rankProbed]]) — every number a fixed-order IEEE
+    * computation, so probe sets, the scored pair set, distances and ranks
+    * all hash-gate against an independent DuckDB implementation (the same
+    * unrolled-CTE recipe as op_sim_topk_ivfpq, minus the PQ codes).
     *
     * Scale shape: the centroid table is a kc-row broadcast; probe sets
     * ride a broadcast of nQueries·nprobe query rows onto the
-    * cell-partitioned corpus, so each query scans ~nprobe/kc of the
-    * corpus and the only data-sized exchange is the final per-query
-    * top-k window.
+    * cell-keyed corpus, so each query scans ~nprobe/kc of the corpus and
+    * the only data-sized exchange is the final per-query top-k window.
+    * [[buildIvfIndex]] + [[probeIvf]] are the same search split at the
+    * fit, so a session fits once and probes many times.
     */
   def topKIvf(emb: DataFrame, kc: Int = 8, nprobe: Int = 2, iters: Int = 2,
               k: Int = 5, nQueries: Int = 20): DataFrame = {
     require(nprobe > 0 && nprobe <= kc, s"need 0 < nprobe <= kc; got $nprobe/$kc")
     val (cCells, cAsg) = kmeansFit(emb, kc, iters)
+    rankProbed(ivfData(cAsg), cCells, emb, k, nQueries, nprobe)
+  }
+
+  /** Persist the [[topKIvf]] index for repeated probing: the [[kmeansFit]]
+    * centroids `(cid, m)` as `<name>_cells` (kc rows) and the assignment
+    * `(nid, xq, cell)` as `<name>_data`, PARTITIONED BY cell via
+    * [[graft.io.TableIO.writePartitioned]] — so a probe's join on the
+    * broadcast probe set prunes whole cell directories and each query
+    * batch READS only ~nprobe/kc of the corpus from disk. Parquet keeps
+    * the centroid doubles and integer vectors bit-exact, so a probe ranks
+    * exactly as the inline [[topKIvf]] at the same `kc`/`iters`. */
+  def buildIvfIndex(emb: DataFrame, name: String, kc: Int = 8,
+                    iters: Int = 2): Unit = {
+    val (cCells, cAsg) = kmeansFit(emb, kc, iters)
+    cCells.write.mode("overwrite").saveAsTable(s"${name}_cells")
+    graft.io.TableIO.writePartitioned(ivfData(cAsg), s"${name}_data", "cell")
+  }
+
+  /** Probe a [[buildIvfIndex]] index: top-k neighbors of each query vector
+    * (vec_id < nQueries of `queries`) by the [[topKIvf]] ranking, reading
+    * only the probed cells' partitions. OpsSpec asserts it equals
+    * [[topKIvf]] row for row; PlanSpec pins the partition-pruned scan. */
+  def probeIvf(queries: DataFrame, name: String, k: Int = 5,
+               nQueries: Int = 20, nprobe: Int = 2): DataFrame = {
+    require(nprobe > 0, s"need nprobe > 0; got $nprobe")
+    val spark = queries.sparkSession
+    rankProbed(spark.table(s"${name}_data"), spark.table(s"${name}_cells"),
+      queries, k, nQueries, nprobe)
+  }
+
+  /** The IVF corpus rows `(nid, xq, cell)` of a [[kmeansFit]] assignment. */
+  private def ivfData(cAsg: DataFrame): DataFrame =
+    cAsg.selectExpr("vec_id as nid", "xq", "cluster as cell")
+
+  /** The ranking stage of plain IVF: each query (vec_id < nQueries of
+    * `queries`) probes its `nprobe` nearest centroids of `cCells`, and the
+    * `(nid, xq, cell)` corpus rows of `data` in probed cells are ranked by
+    * `xx − 2·x·n + n·n` — the oracle's term order — into the per-query
+    * top-k. */
+  private def rankProbed(data: DataFrame, cCells: DataFrame, queries: DataFrame,
+                         k: Int, nQueries: Int, nprobe: Int): DataFrame = {
     // probe rows carry the query's quantized-double image (the broadcast
     // unit: nQueries·nprobe rows)
-    val probe = probeSet(quantized(emb).filter(col("vec_id") < nQueries),
+    val probe = probeSet(quantized(queries).filter(col("vec_id") < nQueries),
       cCells, nprobe, carry = Seq("xd", "xx"))
-    // corpus side: the assignment already carries xq — rebuild the exact
-    // double image once, keyed by its cell
-    val corpus = cAsg.selectExpr("vec_id as nid",
-        "transform(xq, v -> cast(v as double)) as nd", "cluster as cell")
+    // corpus side: rebuild the exact double image of xq once, keyed by cell
+    val corpus = data.selectExpr("nid",
+        "transform(xq, v -> cast(v as double)) as nd", "cell")
       .selectExpr("nid", "nd", "array_dot(nd, nd) as nx", "cell")
     VectorOps.topKPerQuery(corpus.join(broadcast(probe), Seq("cell"))
       .filter(expr("qid <> nid"))
-      // term order matches the oracle exactly: (xx − 2·dot) + nx
       .selectExpr("qid", "nid", "xx - 2 * array_dot(xd, nd) + nx as dist"), k, "dist")
   }
 

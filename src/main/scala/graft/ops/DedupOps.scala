@@ -465,12 +465,16 @@ object DedupOps {
   /** 64-bit SimHash signatures from portable md5-derived word hashes
     * (the [[graft.sql.expressions.SimHashBits]] kernel — `>>>` bit
     * extraction and wrap-packing, so negative full-range hashes carry
-    * the identical bit pattern as the oracle's UBIGINT). */
-  private[graft] def simhash64Sig(docs: DataFrame): DataFrame =
+    * the identical bit pattern as the oracle's UBIGINT), as
+    * `(doc_id, carry…, simhash)`; `carry` names columns of `docs` that ride
+    * along. */
+  private[graft] def simhash64Sig(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val keys = "doc_id" +: carry
     docs
-      .selectExpr("doc_id", s"${TextOps.wordsExpr("text")} as w")
-      .selectExpr("doc_id", s"transform(w, x -> ${TextOps.h64("x")}) as hs")
-      .selectExpr("doc_id", "simhash_bits(hs, 64) as simhash")
+      .selectExpr(keys :+ s"${TextOps.wordsExpr("text")} as w": _*)
+      .selectExpr(keys :+ s"transform(w, x -> ${TextOps.h64("x")}) as hs": _*)
+      .selectExpr(keys :+ "simhash_bits(hs, 64) as simhash": _*)
+  }
 
   /** All pairs of `sig` (doc_id, simhash) within Hamming ≤ `maxHamming`,
     * via the candidate block-join + bit_count verification. */

@@ -1132,8 +1132,8 @@ object OpQueries {
     // coarse quantizer runs on the exact deterministic Lloyd path, so
     // probe sets, scored pairs, distances and ranks all match an
     // independent DuckDB implementation (the ivfpq recipe minus PQ). The
-    // engine-specific cosine-refined variant (VectorOps.cosineTopKIvf)
-    // remains the recall-spec'd production form for clustered embeddings.
+    // persisted ClusterOps.buildIvfIndex/probeIvf split ranks through the
+    // same stage, so OpsSpec's row-for-row equality gates it too.
     QueryDef("op_sim_topk_ivf",
       (s, d) => ClusterOps.topKIvf(emb(s, d), kc = 8, nprobe = 2, iters = 2,
         k = 5, nQueries = 20),

@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`embedding:
-  * array<float>`): brute-force cosine top-k as the exact baseline, a
-  * bounded-state top-k Aggregator as the scalable exact path, and an
-  * IVF-bucketed variant as the approximate scale path.
+  * array<float>`): brute-force cosine top-k as the exact baseline and a
+  * bounded-state top-k Aggregator as the scalable exact path. The IVF
+  * scale path is [[ClusterOps.topKIvf]], with its persisted split
+  * [[ClusterOps.buildIvfIndex]] / [[ClusterOps.probeIvf]].
   *
   * Determinism: cosine is computed as a sequential left-fold over the
   * array in double precision — IEEE addition in a fixed order, so the
@@ -188,7 +189,7 @@ object VectorOps {
     * pair volume, the declared asymptote. Rejected alternatives, all
     * measured at the 10k×10k decade: caching the raw or scored pair
     * rows (slower, and OOM-prone at 30k on a default-heap driver), an
-    * in-row broadcast-array fold (the assignCells shape — 2× slower:
+    * in-row broadcast-array fold (`array_max(transform(..))` — 2× slower:
     * interpreted per-element lambdas over 10⁴-element arrays lose to
     * codegen cross joins; that shape wins only for few-element arrays
     * like centroid tables), and a GROUPING SETS dual argmax (the
@@ -376,137 +377,6 @@ object VectorOps {
         s"${cosExpr("av", "bv", "norm_av", "norm_bv")} as cosine")
       .localCheckpoint()
     marginScore(spark, () => cpairs, k, threshold)
-  }
-
-  /** The centroid table collapsed to ONE row holding an array of
-    * (cell_id, cv, norm_cv) structs, sorted by cell_id — tiny (nCells ≤
-    * hundreds), broadcast everywhere an assignment or probe needs it.
-    */
-  private def cellArray(cells: DataFrame): DataFrame =
-    cells.agg(expr("array_sort(collect_list(struct(cell_id, cv, norm_cv)))").as("cells"))
-
-  /** Nearest-centroid assignment with ZERO shuffle: each corpus vector
-    * computes its own argmax with one in-row fold —
-    * `array_max(transform(cells, ...))` over `struct(cosine, -cell_id)`,
-    * which keeps the (max cosine, then min cell_id) tie-break — instead of
-    * exploding N×nCells rows through a window Exchange. At 100× corpus this
-    * is a map-only stage; the old `row_number` window shuffled 100× the
-    * rows (the round-3 op_sim_topk_ivf regression).
-    */
-  private def assignCells(c: DataFrame, cellsArr: DataFrame): DataFrame =
-    c.crossJoin(broadcast(cellsArr))
-      .withColumn("best", expr(
-        """array_max(transform(cells, cl -> struct(
-          |  array_dot(cl.cv, nv) / (sqrt(cl.norm_cv) * sqrt(norm_nv)) as bc,
-          |  -cl.cell_id as nbid)))""".stripMargin))
-      .selectExpr("-best.nbid as cell_id", "nid", "nv", "norm_nv")
-
-  /** IVF centroids: seeded from the `nCells` lowest-vec_id vectors, then
-    * `iters` Lloyd rounds over the corpus `c` — assign every vector to its
-    * nearest (cosine) centroid ([[assignCells]], map-only), recompute each
-    * centroid as the element-wise mean of its members — a (cell, dimension)
-    * keyed average, partial-aggregated map-side, so the only exchange per
-    * iteration carries ≤ nCells·dim pre-combined rows per partition.
-    * Nothing driver-side; empty cells keep their previous centroid (left
-    * join fallback).
-    */
-  private def refineCells(emb: DataFrame, c: DataFrame, nCells: Int,
-                          iters: Int): DataFrame = {
-    var cells = withNorm(emb.filter(col("vec_id") < nCells), "cell_id", "cv")
-    for (_ <- 0 until iters) {
-      val means = assignCells(c, cellArray(cells))
-        .selectExpr("cell_id", "posexplode(nv) as (pos, x)")
-        .groupBy("cell_id", "pos").agg(avg(col("x")).as("m"))
-        .groupBy("cell_id")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)").as("mv"))
-      cells = cells.as("old")
-        .join(means.as("new"), Seq("cell_id"), "left")
-        .selectExpr("cell_id", "coalesce(mv, cv) as cv")
-        .selectExpr("cell_id", "cv", "array_dot(cv, cv) as norm_cv")
-    }
-    cells
-  }
-
-  /** IVF-bucketed approximate top-k — the sub-linear scale path.
-    *
-    * Centroids seed from the `nCells` lowest-vec_id vectors and are
-    * refined with `kmeansIters` Lloyd iterations ([[refineCells]]). Every
-    * corpus vector is assigned to its nearest cell (one broadcast join,
-    * one pass); a query probes its `nProbe` nearest cells and ranks only
-    * vectors in those cells — scanning ~nProbe/nCells of the corpus
-    * instead of all of it.
-    *
-    * NOTE: fixture embeddings are uniform random — the hardest case for
-    * any ANN structure (no cluster structure to exploit), so recall here
-    * is ≈ the scanned fraction; on real clustered embeddings the same
-    * plumbing concentrates recall. The recall-vs-scan tradeoff is
-    * asserted in OpsSpec.
-    */
-  def cosineTopKIvf(emb: DataFrame, k: Int = 5, nQueries: Int = 20,
-                    nCells: Int = 16, nProbe: Int = 4,
-                    kmeansIters: Int = 2): DataFrame = {
-    val c = withNorm(emb, "nid", "nv")
-    // ONE-row centroid array, read by the assign and probe branches:
-    // localCheckpoint (not persist) so the blocks self-release via the
-    // ContextCleaner when the returned plan is dropped — no reliance on
-    // a harness clearCache() between queries (the marginScore idiom,
-    // same lost-executor/job-retry trade)
-    val arr = cellArray(refineCells(emb, c, nCells, kmeansIters)).localCheckpoint()
-    probeTopK(assignCells(c, arr), arr, emb, k, nQueries, nProbe)
-  }
-
-  /** The probe half of every cosine IVF search: each query (vec_id <
-    * `nQueries` of `queries`) probes the `nProbe` nearest cells of the
-    * one-row centroid array `arr` — the same in-row fold as
-    * [[assignCells]], top-nProbe slice of the descending (cosine,
-    * −cell_id) sort — and only `data`'s `(cell_id, nid, nv, norm_nv)` rows
-    * in those cells are ranked. */
-  private def probeTopK(data: DataFrame, arr: DataFrame, queries: DataFrame,
-                        k: Int, nQueries: Int, nProbe: Int): DataFrame = {
-    val probes = withNorm(queries.filter(col("vec_id") < nQueries), "qid", "qv")
-      .crossJoin(broadcast(arr))
-      .withColumn("pcells", expr(
-        s"""slice(reverse(array_sort(transform(cells, cl -> struct(
-           |  array_dot(cl.cv, qv) / (sqrt(cl.norm_cv) * sqrt(norm_qv)) as pc,
-           |  -cl.cell_id as nbid)))), 1, $nProbe)""".stripMargin))
-      .selectExpr("qid", "qv", "norm_qv", "explode(pcells) as p")
-      .selectExpr("qid", "qv", "norm_qv", "-p.nbid as cell_id")
-    topKPerQuery(data.join(broadcast(probes), Seq("cell_id"))
-      .filter(expr("qid <> nid"))
-      .selectExpr("qid", "nid", s"${cosExpr("qv", "nv", "norm_qv", "norm_nv")} as cosine"),
-      k, "cosine", descending = true)
-  }
-
-  /** Persist an IVF index for repeated probing — the "index once, probe
-    * many" structure [[cosineTopKIvf]] rebuilds inline. Two tables:
-    * `<name>_cells` (the refined centroids, tiny) and `<name>_data` (the
-    * corpus with its nearest-cell assignment), PARTITIONED BY cell_id via
-    * [[graft.io.TableIO.writePartitioned]] — so a probe's `cell_id IN
-    * (probed cells)` filter prunes whole directories and each query batch
-    * READS only ~nProbe/nCells of the corpus from disk. That is the actual
-    * IVF promise at 100 TB: sub-linear I/O per probe, not just sub-linear
-    * compute after a full scan.
-    */
-  def buildIvfIndex(emb: DataFrame, name: String, nCells: Int = 16,
-                    kmeansIters: Int = 2): Unit = {
-    val c = withNorm(emb, "nid", "nv")
-    refineCells(emb, c, nCells, kmeansIters)
-      .write.mode("overwrite").saveAsTable(s"${name}_cells")
-    val arr = cellArray(emb.sparkSession.table(s"${name}_cells"))
-    graft.io.TableIO.writePartitioned(assignCells(c, arr), s"${name}_data", "cell_id")
-  }
-
-  /** Probe a [[buildIvfIndex]] index: top-k neighbors of each query vector
-    * (vec_id < nQueries of `queries`) scanning only the probed cells'
-    * partitions. Same ranking semantics (and same tie-breaks) as
-    * [[cosineTopKIvf]] — OpsSpec asserts bit-identical output; PlanSpec
-    * pins the partition-pruned scan.
-    */
-  def probeIvf(queries: DataFrame, name: String, k: Int = 5,
-               nQueries: Int = 20, nProbe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    probeTopK(spark.table(s"${name}_data"), cellArray(spark.table(s"${name}_cells")),
-      queries, k, nQueries, nProbe)
   }
 
   /** Embedding-cosine near-duplicate pairs: all pairs with cosine ≥

@@ -123,38 +123,12 @@ object StreamingOps {
     * every doc-level dedup state; an event-time TTL composes exactly as in
     * [[dedupExactStreamTtl]] when the stream is unbounded.
     */
-  def simhashPairsStream(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    pigeonholePairsStream(graft.ops.DedupOps.simhash64Sig(docs), maxHamming,
-      bits = 64)
-
-  /** The stateful pigeonhole pair engine shared by [[simhashPairsStream]]
-    * (64-bit text signatures) and [[multimodalNearDupStream]] (32-bit
-    * video signatures): `sig` is a streaming `(doc_id, simhash)` frame,
-    * state is keyed (block_id, block_key), and a pair is emitted exactly
-    * once — by its FIRST agreeing block, the identical rule
-    * [[graft.ops.DedupOps.blockCandidates]] codegens. */
-  private def pigeonholePairsStream(sig: DataFrame, maxHamming: Int,
-                                    bits: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bits,
-      s"maxHamming must be in [0, $bits): got $maxHamming")
-    val nBlocks = maxHamming + 1
-    val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
-    def widthMask(i: Int): Long = {
-      val w = bounds(i + 1) - bounds(i)
-      if (w >= 64) -1L else (1L << w) - 1
-    }
-    // first block on which the two signatures agree (x = xor): the one
-    // bucket allowed to emit the pair — same CASE the batch op codegens
-    def firstBlock(x: Long): Int =
-      (0 until nBlocks).find(i => (x & (widthMask(i) << bounds(i))) == 0).getOrElse(-1)
-    val blockCols = (0 until nBlocks).map { i =>
-      s"named_struct('blk', $i, 'key', shiftright(simhash, ${bounds(i)}) & ${widthMask(i)}L)"
-    }
-    val spark = sig.sparkSession
+  def simhashPairsStream(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val (blocks, firstBlock) = pigeonhole(maxHamming)
+    val spark = docs.sparkSession
     import spark.implicits._
-    sig
-      .selectExpr("doc_id", "simhash",
-        s"explode(array(${blockCols.mkString(", ")})) as b")
+    graft.ops.DedupOps.simhash64Sig(docs)
+      .selectExpr("doc_id", "simhash", s"explode($blocks) as b")
       .selectExpr("doc_id", "simhash", "b.blk as blk", "b.key as key")
       .as[(Long, Long, Int, Long)]
       .groupByKey(r => (r._3, r._4))
@@ -182,6 +156,29 @@ object StreamingOps {
           out.result().iterator
         })
       .toDF("doc_a", "doc_b", "hamming")
+  }
+
+  /** The pigeonhole split of a 64-bit `simhash` at radius `maxHamming`:
+    * `maxHamming + 1` contiguous blocks. Returns the SQL
+    * array of `(blk, key)` structs, one per block, and the first block on
+    * which two signatures agree (`x` = their xor) — the one bucket allowed
+    * to emit the pair, the same CASE [[graft.ops.DedupOps.blockCandidates]]
+    * codegens; -1 when none agrees. */
+  private def pigeonhole(maxHamming: Int): (String, Long => Int) = {
+    val bits = 64
+    require(maxHamming >= 0 && maxHamming < bits,
+      s"maxHamming must be in [0, $bits): got $maxHamming")
+    val nBlocks = maxHamming + 1
+    val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
+    val masks = (0 until nBlocks).map { i =>
+      val w = bounds(i + 1) - bounds(i)
+      if (w >= 64) -1L else (1L << w) - 1
+    }
+    val blocks = masks.zipWithIndex.map { case (m, i) =>
+      s"named_struct('blk', $i, 'key', shiftright(simhash, ${bounds(i)}) & ${m}L)"
+    }
+    val placed = masks.zip(bounds).map { case (m, b) => m << b }.toArray
+    (blocks.mkString("array(", ", ", ")"), x => placed.indexWhere(p => (x & p) == 0))
   }
 
   /** Streaming ANN candidate MINING for bitext margin alignment — the
@@ -228,7 +225,7 @@ object StreamingOps {
     val spark = emb.sparkSession
     import spark.implicits._
     // lowest band on which the two bit-strings agree — the one bucket
-    // allowed to emit the pair (the pigeonholePairsStream firstBlock rule)
+    // allowed to emit the pair (the `pigeonhole` first-block rule)
     def firstBand(x: String, y: String): Int =
       (0 until bands).find(b => x.regionMatches(
         b * rowsPerBand, y, b * rowsPerBand, rowsPerBand)).getOrElse(-1)
@@ -361,30 +358,11 @@ object StreamingOps {
     */
   def simhashPairsStreamTtl(docs: DataFrame, ttlMs: Long, maxHamming: Int = 3,
                             watermark: String = "1 hour"): DataFrame = {
-    val bits = 64
-    require(maxHamming >= 0 && maxHamming < bits,
-      s"maxHamming must be in [0, $bits): got $maxHamming")
-    val nBlocks = maxHamming + 1
-    val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
-    def widthMask(i: Int): Long = {
-      val w = bounds(i + 1) - bounds(i)
-      if (w >= 64) -1L else (1L << w) - 1
-    }
-    def firstBlock(x: Long): Int =
-      (0 until nBlocks).find(i => (x & (widthMask(i) << bounds(i))) == 0).getOrElse(-1)
-    val blockCols = (0 until nBlocks).map { i =>
-      s"named_struct('blk', $i, 'key', shiftright(simhash, ${bounds(i)}) & ${widthMask(i)}L)"
-    }
+    val (blocks, firstBlock) = pigeonhole(maxHamming)
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .withWatermark("ts", watermark)
-      // same signature pipeline as DedupOps.simhash64Sig, ts carried along
-      .selectExpr("doc_id", "ts", s"${graft.ops.TextOps.wordsExpr("text")} as w")
-      .selectExpr("doc_id", "ts", "transform(w, x -> xxhash64(x)) as hs")
-      .selectExpr("doc_id", "ts", "simhash_bits(hs, 64) as simhash")
-      .selectExpr("doc_id", "simhash", "ts",
-        s"explode(array(${blockCols.mkString(", ")})) as b")
+    graft.ops.DedupOps.simhash64Sig(docs.withWatermark("ts", watermark), carry = Seq("ts"))
+      .selectExpr("doc_id", "simhash", "ts", s"explode($blocks) as b")
       .selectExpr("doc_id", "simhash", "ts", "b.blk as blk", "b.key as key")
       .as[(Long, Long, java.sql.Timestamp, Int, Long)]
       .groupByKey(r => (r._4, r._5))

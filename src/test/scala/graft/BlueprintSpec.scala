@@ -251,6 +251,9 @@ class BlueprintSpec extends SparkSpecBase {
       assert(e.getMessage.contains("connection required"), e.getMessage)
     }
     try {
+      val badPort = intercept[IllegalArgumentException](
+        ExecuteSql.main(Array("--query", "SELECT 1", "--host", "h", "--port", "54x9")))
+      assert(badPort.getMessage.contains("--port"), badPort.getMessage)
       refused(ExecuteSql.main(Array("--query", "SELECT 1", "--host", "h")))
       refused(ExecuteSql.main(Array("--query", "SELECT 1", "--port", "5439")))
       refused(StoreQueryResults.main(Array("--query", "SELECT 1",

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.ops.{DedupOps, MultimodalOps, TextOps, VectorOps}
+import graft.ops.{ClusterOps, DedupOps, MultimodalOps, TextOps, VectorOps}
 
 /** Behavior specs for the LLM-pipeline ops (the oracle gate covers exact
   * cross-engine equality; these cover semantics the oracle can't express).
@@ -405,16 +405,17 @@ class OpsSpec extends SparkSpecBase {
 
   test("IVF probe beats its scanned fraction on recall (uniform worst case)") {
     val e = Tables.load(spark, sfDir, "embeddings")
-    val exact = VectorOps.cosineTopK(e, 5, 20).select("qid", "nid")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = VectorOps.cosineTopKIvf(e, 5, 20, nCells = 16, nProbe = 4)
-      .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairs(VectorOps.cosineTopK(e, 5, 20))
+    val ivf = pairs(ClusterOps.topKIvf(e, kc = 16, nprobe = 4, k = 5, nQueries = 20))
     val recall = (exact & ivf).size.toDouble / exact.size
     // uniform-random embeddings are the ANN worst case: recall ≈ scanned
     // fraction (4/16 = 25%); require it lands at least in that regime.
     assert(recall >= 0.15, s"IVF recall $recall collapsed below scan fraction")
-    // every IVF hit is a true cosine (no score corruption)
-    assert(ivf.subsetOf(exact) || ivf.nonEmpty)
+    // fixture embeddings are unit-norm, so L2 order is cosine order: probing
+    // every cell is the exact search
+    assert(pairs(ClusterOps.topKIvf(e, kc = 16, nprobe = 16, k = 5, nQueries = 20)) === exact)
   }
 
   test("embedding quantization: reconstruction error is bounded by half a step") {
@@ -434,10 +435,10 @@ class OpsSpec extends SparkSpecBase {
 
   test("IVF index build + probe returns the identical result as the inline IVF") {
     val e = Tables.load(spark, sfDir, "embeddings")
-    VectorOps.buildIvfIndex(e, "ivf_t", nCells = 16, kmeansIters = 2)
-    val probed = VectorOps.probeIvf(e, "ivf_t", 5, 20, 4).collect()
-    val inline = VectorOps.cosineTopKIvf(e, 5, 20, nCells = 16, nProbe = 4,
-      kmeansIters = 2).collect()
+    ClusterOps.buildIvfIndex(e, "ivf_t", kc = 16, iters = 2)
+    val probed = ClusterOps.probeIvf(e, "ivf_t", k = 5, nQueries = 20, nprobe = 4).collect()
+    val inline = ClusterOps.topKIvf(e, kc = 16, nprobe = 4, iters = 2, k = 5,
+      nQueries = 20).collect()
     assert(probed.length === inline.length && probed.nonEmpty)
     probed.zip(inline).foreach { case (a, b) => assert(a === b) }
   }
@@ -3175,7 +3176,6 @@ class OpsSpec extends SparkSpecBase {
     def runOps(): Unit = {
       val emb = Tables.load(spark, sfDir, "embeddings")
       val docs = Tables.load(spark, sfDir, "documents")
-      VectorOps.cosineTopKIvf(emb).collect()
       VectorOps.cosineNearDupLsh(emb).collect()
       TextOps.distDrift(docs, "lang").collect()
       graft.ops.PipelineOps.importanceWeights(docs.withColumn("lang", lit("en"))).collect()

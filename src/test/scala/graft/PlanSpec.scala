@@ -209,26 +209,28 @@ class PlanSpec extends SparkSpecBase {
 
   test("IVF assignment is map-only: no window/aggregate exchange over the N×cells expansion") {
     val e = Tables.load(spark, sfDir, "embeddings")
-    val p = graft.ops.VectorOps.cosineTopKIvf(e, 5, 20)
+    val p = graft.ops.ClusterOps.topKIvf(e, kc = 8, nprobe = 2, k = 5, nQueries = 20)
       .queryExecution.executedPlan.toString
-    // the corpus-side nearest-cell argmax happens in-row (array_max over the
-    // broadcast centroid array); the only Window operator allowed is the
-    // final per-query top-k rank, partitioned by qid (WindowGroupLimit
-    // lines are the top-k pushdown of that same window — not extra windows)
-    val windows = p.linesIterator.count(_.contains("Window ["))
-    assert(windows <= 1, s"IVF regressed to window-based assignment ($windows windows):\n$p")
-    assert(!p.contains("partitionBy(nid") && !p.contains("hashpartitioning(nid"),
-      s"IVF shuffles the corpus expansion:\n$p")
+    // the corpus-side nearest-cell argmin happens in-row (array_min over the
+    // broadcast centroid array); the only windows are the two per-query
+    // ranks — the probe-set rank and the top-k (WindowGroupLimit lines are
+    // their pushdowns) — and both partition by qid
+    val windows = p.linesIterator.filter(l =>
+      l.contains("Window [") || l.contains("WindowGroupLimit [")).toSeq
+    assert(windows.nonEmpty, s"no per-query rank window:\n$p")
+    windows.foreach(w => assert("""\[qid#\d+L\]""".r.findFirstIn(w).isDefined,
+      s"IVF window not partitioned by qid:\n$w\n$p"))
+    assert(!p.contains("hashpartitioning(nid"), s"IVF shuffles the corpus expansion:\n$p")
   }
 
   test("IVF probe prunes the partitioned index scan to the probed cells") {
     val e = Tables.load(spark, sfDir, "embeddings")
-    graft.ops.VectorOps.buildIvfIndex(e, "ivf_plan")
-    val df = graft.ops.VectorOps.probeIvf(e, "ivf_plan")
+    graft.ops.ClusterOps.buildIvfIndex(e, "ivf_plan")
+    val df = graft.ops.ClusterOps.probeIvf(e, "ivf_plan")
     val p = df.queryExecution.executedPlan.toString
     val scanLine = p.linesIterator
       .find(l => l.contains("FileScan") && l.contains("ivf_plan_data")).getOrElse("")
-    // the cell_id join key must reach the scan as a partition filter
+    // the cell join key must reach the scan as a partition filter
     // (dynamic partition pruning from the broadcast probe side)
     assert(scanLine.contains("PartitionFilters: [") &&
       (scanLine.contains("dynamicpruning") || p.contains("dynamicpruning")),

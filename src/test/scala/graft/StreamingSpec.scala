@@ -63,19 +63,29 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text").as[(Long, String)].collect()
+    def pairs(name: String): Set[(Long, Long, Long)] =
+      spark.table(name).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val stream = MemoryStream[(Long, String)]
     stream.addData(rows.toSeq)
     val q = StreamingOps.simhashPairsStream(stream.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("simhash_stream")
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("simhash_stream")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // the TTL'd twin, every event at one time and a TTL past all of them
+    val at = new java.sql.Timestamp(1700000000000L)
+    val ttlStream = MemoryStream[(Long, String, java.sql.Timestamp)]
+    ttlStream.addData(rows.toSeq.map { case (id, text) => (id, text, at) })
+    val qTtl = StreamingOps.simhashPairsStreamTtl(
+        ttlStream.toDF().toDF("doc_id", "text", "ts"), ttlMs = 365L * 24 * 3600 * 1000)
+      .writeStream.format("memory").queryName("simhash_stream_ttl")
+      .outputMode("append").start()
+    try qTtl.processAllAvailable() finally qTtl.stop()
     val batch = graft.ops.DedupOps.simhashPairs64(
         Tables.load(spark, sfDir, "documents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(batch.nonEmpty, "fixture must contain near-dup pairs at radius 3")
-    assert(streamed === batch)
+    assert(pairs("simhash_stream") === batch)
+    assert(pairs("simhash_stream_ttl") === batch)
   }
 
   test("streaming multimodal near-dup pairs equal batch multimodalNearDup across two batches") {

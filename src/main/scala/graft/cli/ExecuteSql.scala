@@ -48,28 +48,31 @@ object ExecuteSql {
   /** Tri-source connection resolution shared by all three CLIs — returns
     * None when no source is given (local session-catalog mode). A partial
     * set of connection flags raises the resolve message instead of
-    * silently running against the local catalog. */
-  private[cli] def connectionOf(p: Map[String, String]): Option[ConnectionConfig] =
+    * silently running against the local catalog. `--url-parameters`
+    * become the connection's JDBC properties. */
+  private[cli] def connectionOf(p: Map[String, String]): Option[ConnectionConfig] = {
+    val params = p.get("url-parameters").fold(Seq.empty[(String, String)])(
+      ConnectionConfig.parseUrlParameters)
     ConnectionConfig.resolve(
       p.get("db-connection-url"), p.get("host"), p.get("port").map(portOf),
       p.get("database"), p.get("username"), p.get("password")) match {
-      case Right(c) => Some(c)
+      case Right(c) => Some(c.copy(urlParameters = params))
       case Left(msg) if connectionFlags.exists(p.contains) =>
         throw new IllegalArgumentException(msg)
       case Left(_) => None
     }
+  }
 
   private def portOf(s: String): Int = s.toIntOption.getOrElse(
     throw new IllegalArgumentException(s"invalid --port '$s' (expected an integer)"))
 
-  private val connectionFlags =
-    Seq("db-connection-url", "host", "port", "database", "username", "password")
+  private val connectionFlags = Seq("db-connection-url", "host", "port",
+    "database", "username", "password", "url-parameters")
 
   def run(spark: SparkSession, query: String, conn: Option[ConnectionConfig]): Unit =
     conn match {
       case Some(c) =>
-        val jc = java.sql.DriverManager.getConnection(
-          c.jdbcUrl, c.username.orNull, c.password.orNull)
+        val jc = c.connect()
         try { val st = jc.createStatement(); try st.execute(query) finally st.close() }
         finally jc.close()
       case None =>

@@ -52,7 +52,8 @@ final case class ConnectionConfig(
     port: Int = 5439,
     database: Option[String] = None,
     username: Option[String] = None,
-    password: Option[String] = None) {
+    password: Option[String] = None,
+    urlParameters: Seq[(String, String)] = Nil) {
 
   /** JDBC URL (`create_connection_url`, `upload_file.py:79-82`; ours emits
     * the JDBC scheme rather than the sqlalchemy dialect scheme). */
@@ -60,11 +61,21 @@ final case class ConnectionConfig(
     s"jdbc:redshift://${host.getOrElse("")}:$port/${database.getOrElse("")}"
   }
 
-  /** Spark JDBC reader/writer options (credentials + driver-agnostic). */
+  /** Spark JDBC reader/writer options (credentials + driver-agnostic).
+    * Spark hands options it does not know to the driver as connection
+    * properties, which is where the `--url-parameters` pairs belong. */
   def jdbcOptions: Map[String, String] =
-    Map("url" -> jdbcUrl) ++
+    urlParameters.toMap ++ Map("url" -> jdbcUrl) ++
       username.map("user" -> _) ++
       password.map("password" -> _)
+
+  /** A raw JDBC connection with the same properties as [[jdbcOptions]]. */
+  def connect(): java.sql.Connection = {
+    val props = new java.util.Properties()
+    (urlParameters ++ username.map("user" -> _) ++ password.map("password" -> _))
+      .foreach { case (k, v) => props.setProperty(k, v) }
+    java.sql.DriverManager.getConnection(jdbcUrl, props)
+  }
 }
 
 object ConnectionConfig {
@@ -92,6 +103,18 @@ object ConnectionConfig {
       "connection required: pass --db-connection-url, or --host with " +
         s"--database and --username, or set $EnvVar")
   }
+
+  /** `--url-parameters` as `k=v[&k=v…]` → the driver's connection
+    * properties, in order. Properties reach any driver; URL suffix syntax
+    * does not (Derby separates with `;`, not `&`). */
+  def parseUrlParameters(s: String): Seq[(String, String)] =
+    s.split("&", -1).toSeq.map { pair =>
+      pair.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"invalid --url-parameters '$s' (expected k=v[&k=v...], got '$pair')")
+      }
+    }
 }
 
 /** Minimal `--flag value` argument parser (no external dependency; the

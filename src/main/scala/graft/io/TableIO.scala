@@ -59,8 +59,7 @@ object TableIO {
     * fold unquoted catalog names.
     */
   private def ensureSchema(c: ConnectionConfig, schema: String): Unit = {
-    val jc = java.sql.DriverManager.getConnection(
-      c.jdbcUrl, c.username.orNull, c.password.orNull)
+    val jc = c.connect()
     try {
       val rs = jc.getMetaData.getSchemas
       var exists = false

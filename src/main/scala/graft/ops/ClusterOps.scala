@@ -149,15 +149,21 @@ object ClusterOps {
     * distances), not just the assignment. The seed is the `k` lowest
     * vec_ids, cid = 0..k-1 in vec_id order. */
   private[graft] def kmeansFit(emb: DataFrame, k: Int, iters: Int,
-                               pruned: Boolean = false): (DataFrame, DataFrame) = {
-    require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got k=$k iters=$iters")
+                               pruned: Boolean = false): (DataFrame, DataFrame) =
     // LIFETIME: the returned assignment reads this cache LAZILY, so the op
     // cannot release it before returning — entries live until the session
     // clears them (the Bench/Verify clearCache contract); a library caller
     // should clearCache() after consuming the result
-    val q = quantized(emb)
-      .selectExpr("vec_id", "xq", "xd", "xx", "sqrt(xx) as sx")
-      .persist()
+    kmeansFitOn(fitInput(emb).persist(), k, iters, pruned)
+
+  /** [[kmeansFit]]'s quantized frame `(vec_id, xq, xd, xx, sx)`. */
+  private def fitInput(emb: DataFrame): DataFrame =
+    quantized(emb).selectExpr("vec_id", "xq", "xd", "xx", "sqrt(xx) as sx")
+
+  /** [[kmeansFit]] over its persisted [[fitInput]] `q`. */
+  private def kmeansFitOn(q: DataFrame, k: Int, iters: Int,
+                          pruned: Boolean): (DataFrame, DataFrame) = {
+    require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got k=$k iters=$iters")
     val seed = q.select("vec_id", "xq").orderBy("vec_id").limit(k).collect()
       .map(r => seedVector(r, 1)).toSeq
     // struct min = (min dist, then min cid) — the tie-break DuckDB's
@@ -609,9 +615,13 @@ object ClusterOps {
     * exactly as the inline [[topKIvf]] at the same `kc`/`iters`. */
   def buildIvfIndex(emb: DataFrame, name: String, kc: Int = 8,
                     iters: Int = 2): Unit = {
-    val (cCells, cAsg) = kmeansFit(emb, kc, iters)
-    cCells.write.mode("overwrite").saveAsTable(s"${name}_cells")
-    graft.io.TableIO.writePartitioned(ivfData(cAsg), s"${name}_data", "cell")
+    // both writes are eager, so the fit's cache is released on return
+    val q = fitInput(emb).persist()
+    try {
+      val (cCells, cAsg) = kmeansFitOn(q, kc, iters, pruned = false)
+      cCells.write.mode("overwrite").saveAsTable(s"${name}_cells")
+      graft.io.TableIO.writePartitioned(ivfData(cAsg), s"${name}_data", "cell")
+    } finally q.unpersist()
   }
 
   /** Probe a [[buildIvfIndex]] index: top-k neighbors of each query vector

@@ -476,10 +476,12 @@ object DedupOps {
       .selectExpr(keys :+ "simhash_bits(hs, 64) as simhash": _*)
   }
 
-  /** All pairs of `sig` (doc_id, simhash) within Hamming ≤ `maxHamming`,
-    * via the candidate block-join + bit_count verification. */
-  private def hammingPairs(sig: DataFrame, maxHamming: Int, bits: Int): DataFrame =
-    blockCandidates(sig, maxHamming, bits)
+  /** All pairs of `sig` (doc_id, [cls,] simhash) within Hamming ≤
+    * `maxHamming`, via the candidate block-join ([[blockCandidates]], same
+    * `bits`/`cls` width rule) + bit_count verification. */
+  private[ops] def hammingPairs(sig: DataFrame, maxHamming: Int, bits: Int,
+                                cls: Option[String] = None): DataFrame =
+    blockCandidates(sig, maxHamming, bits, cls)
       .filter(expr(s"bit_count(x) <= $maxHamming"))
       .selectExpr("doc_a", "doc_b", "cast(bit_count(x) as bigint) as hamming")
       .orderBy("doc_a", "doc_b")
@@ -1002,42 +1004,80 @@ object DedupOps {
   }
 
   /** Pigeonhole candidate generation: pairs agreeing exactly on ≥1 of the
-    * `maxHamming + 1` contiguous blocks of the `bits`-wide signature, each
+    * `maxHamming + 1` blocks ([[blockKeysSql]]) of the signature, each
     * pair emitted ONCE — at its first agreeing block, selected by a pure
-    * codegen'd CASE over the xor (constant block masks), so no distinct()
-    * exchange. Package-visible so OpsSpec can assert the pruning ratio
+    * codegen'd CASE over the xor ([[firstBlockSql]]), so no distinct()
+    * exchange. The signature is `bits` wide, or with a class column `cls`
+    * `cls · bits` wide, and then pairs join within a class only (the
+    * video op's length classes, [[MultimodalOps.multimodalNearDup]]).
+    * Package-visible so OpsSpec can assert the pruning ratio
     * (candidates ≪ N²/2) independently of the Hamming verification.
     */
-  private[graft] def blockCandidates(sig: DataFrame, maxHamming: Int,
-                                     bits: Int): DataFrame = {
+  private[graft] def blockCandidates(sig: DataFrame, maxHamming: Int, bits: Int,
+                                     cls: Option[String] = None): DataFrame = {
     // maxHamming ≥ bits would make nBlocks > bits: zero-width blocks whose
     // mask is 0, so every row joins on a constant key — a silent all-pairs
-    // quadratic shuffle instead of pigeonhole pruning
-    require(maxHamming >= 0 && maxHamming < bits,
+    // quadratic shuffle instead of pigeonhole pruning (a class caller
+    // guards its own minimum width)
+    require(cls.isDefined || maxHamming >= 0 && maxHamming < bits,
       s"maxHamming must be in [0, bits): got $maxHamming for $bits-bit keys")
-    val nBlocks = maxHamming + 1
-    val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
-    def widthMask(i: Int): Long = {
-      val w = bounds(i + 1) - bounds(i)
-      if (w >= 64) -1L else (1L << w) - 1
-    }
-    val blockCols = (0 until nBlocks).map { i =>
-      s"named_struct('blk', $i, 'key', shiftright(simhash, ${bounds(i)}) & ${widthMask(i)}L)"
-    }
-    val firstAgreeingBlock = (0 until nBlocks).map { i =>
-      s"WHEN (x & ${widthMask(i) << bounds(i)}L) = 0 THEN $i"
-    }.mkString("CASE ", " ", " END")
+    val w = cls.fold(s"$bits")(c => s"$c * $bits")
+    val keys = cls.toSeq ++ Seq("blk", "key")
+    val cols = cls.toSeq ++ Seq("doc_id", "simhash")
     // pinned: amplifying self-join ([[LineageUtil.pinJoinParallelism]] —
     // AQE would coalesce the skinny 65k-row exchange to one task)
     val blocks = LineageUtil.pinJoinParallelism(
       sig
-        .selectExpr("doc_id", "simhash", s"explode(array(${blockCols.mkString(", ")})) as b")
-        .selectExpr("doc_id", "simhash", "b.blk as blk", "b.key as key"),
-      "blk", "key")
+        .selectExpr(cols :+ s"explode(${blockKeysSql("simhash", maxHamming, w)}) as b": _*)
+        .selectExpr(cols ++ Seq("b.blk as blk", "b.key as key"): _*),
+      keys: _*)
     blocks.as("a")
-      .join(blocks.as("b"), expr("a.blk = b.blk and a.key = b.key and a.doc_id < b.doc_id"))
-      .selectExpr("a.doc_id as doc_a", "b.doc_id as doc_b", "a.blk as blk",
-        "a.simhash ^ b.simhash as x")
-      .filter(expr(s"($firstAgreeingBlock) = blk"))
+      .join(blocks.as("b"),
+        expr(keys.map(k => s"a.$k = b.$k").mkString("", " and ", " and a.doc_id < b.doc_id")))
+      .selectExpr(cls.map(c => s"a.$c as $c").toSeq ++ Seq("a.doc_id as doc_a",
+        "b.doc_id as doc_b", "a.blk as blk", "a.simhash ^ b.simhash as x"): _*)
+      .filter(expr(s"(${firstBlockSql("x", maxHamming, w)}) = blk"))
   }
+
+  // ---- Pigeonhole geometry (Manku et al., "Detecting Near-Duplicates for
+  // Web Crawling", WWW 2007). At radius h a w-bit signature splits into
+  // n = h + 1 contiguous blocks, block i covering bits [i·w/n, (i+1)·w/n).
+  // Two signatures within the radius agree exactly on ≥ 1 block, and a pair
+  // belongs to its FIRST agreeing block only — the first block on which
+  // their xor is zero — so every join or bucket state emits it once.
+  // Written twice, side by side: SQL (w is an SQL expression; a literal
+  // folds to constant shifts and masks) for the batch join and the
+  // streaming block rows, Scala for the streaming state functions.
+  // Callers keep h < w, so every block is at least one bit wide. ----
+
+  /** SQL: block `i` of `n` of the `w`-bit signature `s`. */
+  private def blockKeySql(s: String, i: Int, n: Int, w: String): String = {
+    def lo(j: Int) = s"cast($j * ($w) div $n as int)"
+    s"(shiftright($s, ${lo(i)}) & shiftrightunsigned(-1L, 64 - (${lo(i + 1)} - ${lo(i)})))"
+  }
+
+  /** Scala: block `i` of `n` of the `w`-bit signature `s`. */
+  private[graft] def blockKey(s: Long, i: Int, n: Int, w: Int): Long = {
+    def lo(j: Int) = j * w / n
+    (s >> lo(i)) & (-1L >>> (64 - (lo(i + 1) - lo(i))))
+  }
+
+  /** SQL array of `(blk, key)` structs: the blocks of `sig` at radius
+    * `maxHamming`. */
+  private[graft] def blockKeysSql(sig: String, maxHamming: Int, w: String): String =
+    (0 to maxHamming)
+      .map(i => s"named_struct('blk', $i, 'key', ${blockKeySql(sig, i, maxHamming + 1, w)})")
+      .mkString("array(", ", ", ")")
+
+  /** SQL: the first block on which the xor `x` is zero, -1 when none.
+    * Unrolled to a flat CASE over the constant block count so it stays in
+    * whole-stage codegen on the join's candidate pairs. */
+  private[graft] def firstBlockSql(x: String, maxHamming: Int, w: String): String =
+    (0 to maxHamming)
+      .map(i => s"WHEN ${blockKeySql(x, i, maxHamming + 1, w)} = 0 THEN $i")
+      .mkString("CASE ", " ", " ELSE -1 END")
+
+  /** Scala: the first block on which the xor `x` is zero, -1 when none. */
+  private[graft] def firstBlock(x: Long, maxHamming: Int, w: Int): Int =
+    (0 to maxHamming).indexWhere(i => blockKey(x, i, maxHamming + 1, w) == 0)
 }

@@ -1,12 +1,13 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.sql.expressions.HashExpressions
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with typed
   * metadata, decoded/feature-extracted partition-wise in fixed-size
@@ -92,6 +93,21 @@ object MultimodalOps {
     } else None
   }
 
+  /** The stub tier's hash: the top 60 bits of md5 — the first 15 hex
+    * chars of the digest, as the oracle's `dkH60` reads them. */
+  private[graft] def h60(bytes: Array[Byte]): Long = HashExpressions.md5h64(bytes) >>> 4
+  private[graft] def h60(s: String): Long = h60(s.getBytes(StandardCharsets.UTF_8))
+
+  /** One document's stub frame decode: every `every`-th of its
+    * `1 + h60(text) % 30` frames as `(frame_idx, features)`, `dim`
+    * doubles in [0, 1) fanned out of md5(text:frame). The one source of
+    * frames for [[frameFeatures]] and [[stubDocSignature]]. */
+  private def stubFrames(text: String, every: Int, dim: Int): Iterator[(Long, Array[Double])] =
+    (0L until 1L + h60(text) % 30L by every.toLong).iterator.map { f =>
+      val h = h60(s"$text:$f")
+      f -> Array.tabulate(dim)(j => ((h >>> (8 * j)) % 1000L) / 1000.0)
+    }
+
   /** Decode one payload to metadata: a REAL header parse when the bytes
     * carry a PNG/GIF/JPEG signature (see [[imageHeader]]), else the
     * deterministic fake — 60 bits of md5(payload) fanned into plausible
@@ -103,9 +119,7 @@ object MultimodalOps {
       case Some((w, h, codec)) =>
         Row(docId, payload.length.toLong, w, h, 1L, codec)
       case None =>
-        val md = MessageDigest.getInstance("MD5")
-        val hex = md.digest(payload).map("%02x".format(_)).mkString
-        val h = java.lang.Long.parseLong(hex.substring(0, 15), 16)
+        val h = h60(payload)
         Row(docId,
           payload.length.toLong,
           64L + h % 1024L,
@@ -150,10 +164,6 @@ object MultimodalOps {
     val src = docs.select(col("doc_id"), col("text"))
     implicit val enc = RowEncoder.encoderFor(audioSchema)
     src.mapPartitions { rows =>
-      val md = MessageDigest.getInstance("MD5") // the per-task "decoder"
-      def h60(s: String): Long = java.lang.Long.parseLong(
-        md.digest(s.getBytes(StandardCharsets.UTF_8))
-          .map("%02x".format(_)).mkString.substring(0, 15), 16)
       rows.grouped(batchSize).flatMap { batch =>
         batch.iterator.flatMap { r =>
           val id = r.getLong(0)
@@ -191,19 +201,11 @@ object MultimodalOps {
     val src = docs.select(col("doc_id"), col("text"))
     implicit val enc = RowEncoder.encoderFor(frameSchema)
     src.mapPartitions { rows =>
-      val md = MessageDigest.getInstance("MD5") // the per-task "codec"
-      def h60(s: String): Long = java.lang.Long.parseLong(
-        md.digest(s.getBytes(StandardCharsets.UTF_8))
-          .map("%02x".format(_)).mkString.substring(0, 15), 16)
       rows.grouped(batchSize).flatMap { batch =>
         batch.iterator.flatMap { r =>
           val id = r.getLong(0)
-          val text = r.getString(1)
-          val nFrames = 1L + h60(text) % 30L
-          (0L until nFrames by every.toLong).iterator.flatMap { f =>
-            val h = h60(s"$text:$f")
-            (0 until dim).iterator.map(j =>
-              Row(id, f, j.toLong, ((h >>> (8 * j)) % 1000L) / 1000.0))
+          stubFrames(r.getString(1), every, dim).flatMap { case (f, feats) =>
+            feats.indices.iterator.map(j => Row(id, f, j.toLong, feats(j)))
           }
         }
       }
@@ -249,18 +251,10 @@ object MultimodalOps {
                                       dim: Int = 4): (Long, Int) = {
     require(every >= 1 && slotBits >= 1 && bits >= slotBits && bits <= 64 &&
       bits % slotBits == 0, s"bad geometry every=$every slotBits=$slotBits bits=$bits")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h60(s: String): Long = java.lang.Long.parseLong(
-      md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.substring(0, 15), 16)
     val nSlots = bits / slotBits
-    val nFrames = 1L + h60(text) % 30L
     var sig = 0L
     var nf = 0
-    var f = 0L
-    while (f < nFrames) {
-      val h = h60(s"$text:$f")
-      val feats = Array.tabulate(dim)(j => ((h >>> (8 * j)) % 1000L) / 1000.0)
+    stubFrames(text, every, dim).foreach { case (f, feats) =>
       var dhash = 0L
       var j = 0
       while (j < dim) {
@@ -274,7 +268,6 @@ object MultimodalOps {
         s"multimodalNearDup: dhash $dhash does not fit slotBits=$slotBits")
       sig |= dhash << (slotBits * slot.toInt)
       nf += 1
-      f += every
     }
     (sig, nf)
   }
@@ -304,7 +297,8 @@ object MultimodalOps {
     * no shingles" precedent. Exhaustiveness within a class is the same
     * pigeonhole argument as [[DedupOps.simhashPairs]]: hamming ≤ h over
     * w occupied bits ⇒ some block of w/(h+1) bits agrees exactly; each
-    * pair is emitted only by its FIRST agreeing block.
+    * pair is emitted only by its FIRST agreeing block — it is the
+    * [[DedupOps.blockCandidates]] join with `nf` as its class column.
     *
     * Scale shape: signatures are 8 bytes/doc built by one (doc, frame)
     * groupBy + one doc groupBy (both all-partial); the pair join never
@@ -333,7 +327,6 @@ object MultimodalOps {
       s"need minSlots >= 1 with minSlots*slotBits > maxHamming (pigeonhole " +
         s"blocks must be non-empty); got minSlots=$minSlots")
     val nSlots = bits / slotBits
-    val nBlocks = maxHamming + 1
     val packed =
       s"""case
          |  when frame_idx div $every >= $nSlots then cast(raise_error(concat(
@@ -362,46 +355,7 @@ object MultimodalOps {
           |  as bigint) else nf0 end as nf""".stripMargin,
         "sig_or as simhash")
       .filter(col("nf") >= minSlots)
-      // occupied width w = nf·slotBits; per-class block i covers
-      // [i·w/nBlocks, (i+1)·w/nBlocks) — all bounds computed in-row
-      .selectExpr("doc_id", "nf", "simhash",
-        s"cast(nf * $slotBits as int) as w")
-    val blocks = graft.ops.LineageUtil.pinJoinParallelism(
-      sig
-        .selectExpr("doc_id", "nf", "simhash", "w",
-          s"explode(sequence(0, ${nBlocks - 1})) as blk")
-        .selectExpr("doc_id", "nf", "simhash", "blk",
-          s"cast(blk * w div $nBlocks as int) as lo",
-          s"cast((blk + 1) * w div $nBlocks - blk * w div $nBlocks as int) as bw")
-        .selectExpr("doc_id", "nf", "simhash", "blk",
-          // bw can reach 64 (maxHamming = 0 over a full-width class),
-          // where shiftleft wraps — mask all bits explicitly there
-          "shiftright(simhash, lo) & " +
-            "(case when bw >= 64 then -1L else shiftleft(1L, bw) - 1 end) as key"),
-      "nf", "blk", "key")
-    // first agreeing block of the xor, under the PAIR's shared class
-    // width — the one block allowed to emit the pair (no distinct()).
-    // Unrolled to a flat CASE over the constant block count (per-row
-    // width arithmetic only) so it stays inside whole-stage codegen —
-    // a higher-order `aggregate` here would run interpreted on every
-    // candidate pair, the hot path of the join.
-    def blockMask(i: Int): String =
-      s"""shiftleft(case when cast(${i + 1} * w div $nBlocks
-         |    - $i * w div $nBlocks as int) >= 64 then -1L
-         |  else shiftleft(1L, cast(${i + 1} * w div $nBlocks
-         |    - $i * w div $nBlocks as int)) - 1 end,
-         |  cast($i * w div $nBlocks as int))""".stripMargin
-    val firstAgree = (0 until nBlocks)
-      .map(i => s"when (x & ${blockMask(i)}) = 0 then $i")
-      .mkString("case ", " ", " else -1 end")
-    blocks.as("a")
-      .join(blocks.as("b"),
-        expr("a.nf = b.nf and a.blk = b.blk and a.key = b.key " +
-          "and a.doc_id < b.doc_id"))
-      .selectExpr("a.doc_id as doc_a", "b.doc_id as doc_b", "a.blk as blk",
-        "a.simhash ^ b.simhash as x", s"cast(a.nf * $slotBits as int) as w")
-      .filter(expr(s"bit_count(x) <= $maxHamming and ($firstAgree) = blk"))
-      .selectExpr("doc_a", "doc_b", "cast(bit_count(x) as bigint) as hamming")
-      .orderBy("doc_a", "doc_b")
+    // per-class blocks over the occupied width nf·slotBits
+    DedupOps.hammingPairs(sig, maxHamming, slotBits, cls = Some("nf"))
   }
 }

@@ -541,28 +541,18 @@ object LocalDml {
     var i = set + 1
     var depth = 0
     var whereAt = -1
-    val commas = Vector.newBuilder[Int]
     while (i < toks.length && whereAt < 0) {
       val t = toks(i)
       if (t.kind == Sym && t.text == "(") depth += 1
       else if (t.kind == Sym && t.text == ")") depth -= 1
-      else if (t.kind == Sym && t.text == "," && depth == 0) commas += i
       else if (t.isWord("where") && depth == 0) whereAt = i
       i += 1
     }
     val end = if (whereAt >= 0) whereAt else toks.length
-    val bounds = (set +: commas.result() :+ end).sliding(2).toSeq
-    val assignments = bounds.map { case Seq(a, b) =>
-      val frag = toks.slice(a + 1, b)
-      val eq = frag.indexWhere(t => t.kind == Sym && t.text == "=")
-      require(eq > 0, s"malformed assignment: ${render(frag)}")
-      val col = render(frag.slice(0, eq)).trim.stripPrefix("`").stripSuffix("`")
-      col.toLowerCase -> render(frag.slice(eq + 1, frag.length)).trim
-    }.toMap
     val pred = if (whereAt >= 0) Some(render(toks.slice(whereAt + 1, toks.length)).trim) else None
     val fields = spark.table(table).schema.fieldNames
-    val unknown = assignments.keySet -- fields.map(_.toLowerCase)
-    require(unknown.isEmpty, s"unknown column(s) in SET: ${unknown.mkString(", ")}")
+    val assignments = parseAssignments(toks.slice(set + 1, end), targetAlias = table,
+      fields = fields.map(_.toLowerCase).toSet)
     val select = fields.map { f =>
       assignments.get(f.toLowerCase) match {
         case Some(e) => pred match {
@@ -716,12 +706,12 @@ object LocalDml {
     else (None, from)
   }
 
-  /** Parse `col = expr [, col = expr]*`. A `target.`/`alias.` qualifier on
-    * the column (Redshift allows `UPDATE SET t.amt = …` in MERGE) is
-    * stripped when it names the target alias; every resulting key must be
-    * a target column, mirroring runUpdate's unknown-column check — a
-    * qualified name that silently matched nothing would otherwise leave
-    * the column unchanged with no error. */
+  /** Parse the `col = expr [, col = expr]*` of an UPDATE or a MERGE's
+    * `UPDATE SET`. A `target.`/`alias.` qualifier on the column (Redshift
+    * allows `UPDATE SET t.amt = …` in MERGE) is stripped when it names the
+    * target alias; every resulting key must be one of `fields` (lower
+    * case) — a qualified name that silently matched nothing would
+    * otherwise leave the column unchanged with no error. */
   private def parseAssignments(frag: Vector[Tok], targetAlias: String,
                                fields: Set[String]): Map[String, String] = {
     var depth = 0

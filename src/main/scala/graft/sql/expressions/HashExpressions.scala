@@ -53,10 +53,13 @@ object HashExpressions {
     * SQL form (`shiftleft(h60, 4) + nibble₁₆`) evaluates md5 twice per
     * token; this kernel is bit-identical (KernelSpec pins it against the
     * composed form) at half the digest work. */
-  def md5h64(s: UTF8String): Long = {
+  def md5h64(s: UTF8String): Long = md5h64(s.getBytes)
+
+  /** [[md5h64]] of raw bytes. */
+  def md5h64(bytes: Array[Byte]): Long = {
     val md = md5Local.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    val d = md.digest(bytes)
     var h = 0L
     var i = 0
     while (i < 8) { h = (h << 8) | (d(i) & 0xffL); i += 1 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.ops.{DedupOps, MultimodalOps}
+
 /** Structured Streaming extension over the `events` schema (SURVEY.md §2.2
   * Streaming). The reference has zero streaming operators — all three
   * blueprints are batch CLIs — so this is the driver's declared extension
@@ -108,13 +110,14 @@ object StreamingOps {
     *
     * Same pigeonhole decomposition as the batch op: the signature splits
     * into `maxHamming + 1` contiguous blocks, and two in-radius signatures
-    * must agree exactly on ≥ 1 block — so the state key is
-    * (block_id, block_key) and an arriving document compares only against
+    * must agree exactly on ≥ 1 block ([[graft.ops.DedupOps.blockKeysSql]])
+    * — so the state key is the block and its key (under the one 64-bit
+    * width class) and an arriving document compares only against
     * its own buckets' members, NEVER the corpus (the streaming analog of
     * the batch equi-join: per-bucket state lookup instead of a shuffle).
     * A pair agreeing on several blocks is emitted only by its FIRST
-    * agreeing block — deterministic from the two signatures alone, the
-    * identical rule the batch op applies — so the union over buckets is
+    * agreeing block ([[graft.ops.DedupOps.firstBlock]], the Scala twin of
+    * the CASE the batch op codegens) — so the union over buckets is
     * exactly the radius's pair set, once each. Delivered in one batch this
     * equals `simhashPairs64` row-for-row (StreamingSpec proves it).
     *
@@ -123,19 +126,44 @@ object StreamingOps {
     * every doc-level dedup state; an event-time TTL composes exactly as in
     * [[dedupExactStreamTtl]] when the stream is unbounded.
     */
-  def simhashPairsStream(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val (blocks, firstBlock) = pigeonhole(maxHamming)
-    val spark = docs.sparkSession
+  def simhashPairsStream(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairsStream(DedupOps.simhash64Sig(docs), simhashRadius(maxHamming), "64")
+
+  /** `maxHamming`, checked against [[DedupOps.simhash64Sig]]'s 64-bit keys. */
+  private def simhashRadius(maxHamming: Int): Int = {
+    require(maxHamming >= 0 && maxHamming < 64,
+      s"maxHamming must be in [0, 64): got $maxHamming")
+    maxHamming
+  }
+
+  /** One row per pigeonhole block of each `(doc_id, simhash, carry…)` of
+    * `sig`, whose signature is `w` bits wide (an SQL expression): `(doc_id,
+    * simhash, carry…, w, blk, key)`, keys from [[DedupOps.blockKeysSql]]. */
+  private def blockRows(sig: DataFrame, maxHamming: Int, w: String,
+                        carry: Seq[String] = Nil): DataFrame = {
+    val cols = Seq("doc_id", "simhash") ++ carry
+    sig.selectExpr(cols ++ Seq(s"cast($w as int) as w",
+        s"explode(${DedupOps.blockKeysSql("simhash", maxHamming, w)}) as b"): _*)
+      .selectExpr(cols ++ Seq("w", "b.blk as blk", "b.key as key"): _*)
+  }
+
+  /** The bucket-state pair loop of the Hamming streams: state is keyed by
+    * (w, blk, key) — the signature width is the length class, so docs of
+    * different widths never meet — and holds the bucket's `(doc_id,
+    * simhash)` members. An arriving doc pairs with each member within
+    * `maxHamming` whose FIRST agreeing block ([[DedupOps.firstBlock]]) is
+    * this bucket's, so a pair is emitted once across all buckets and
+    * batches; a re-delivered doc_id is not a pair. */
+  private def hammingPairsStream(sig: DataFrame, maxHamming: Int, w: String): DataFrame = {
+    val spark = sig.sparkSession
     import spark.implicits._
-    graft.ops.DedupOps.simhash64Sig(docs)
-      .selectExpr("doc_id", "simhash", s"explode($blocks) as b")
-      .selectExpr("doc_id", "simhash", "b.blk as blk", "b.key as key")
-      .as[(Long, Long, Int, Long)]
-      .groupByKey(r => (r._3, r._4))
+    blockRows(sig, maxHamming, w)
+      .as[(Long, Long, Int, Int, Long)]
+      .groupByKey(r => (r._3, r._4, r._5))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: (Int, Long), rows: Iterator[(Long, Long, Int, Long)],
+        (key: (Int, Int, Long), rows: Iterator[(Long, Long, Int, Int, Long)],
          state: GroupState[List[(Long, Long)]]) => {
-          val blk = key._1
+          val (w, blk, _) = key
           // batch members in doc_id order: within one delivery the smaller
           // id is "earlier", matching the batch op's a.doc_id < b.doc_id
           val batch = rows.map(r => (r._1, r._2)).toVector.sortBy(_._1)
@@ -146,7 +174,7 @@ object StreamingOps {
               seen.foreach { case (pid, psig) =>
                 val x = psig ^ sig
                 val h = java.lang.Long.bitCount(x)
-                if (h <= maxHamming && firstBlock(x) == blk)
+                if (h <= maxHamming && DedupOps.firstBlock(x, maxHamming, w) == blk)
                   out += ((math.min(pid, id), math.max(pid, id), h.toLong))
               }
               seen = (id, sig) :: seen
@@ -156,29 +184,6 @@ object StreamingOps {
           out.result().iterator
         })
       .toDF("doc_a", "doc_b", "hamming")
-  }
-
-  /** The pigeonhole split of a 64-bit `simhash` at radius `maxHamming`:
-    * `maxHamming + 1` contiguous blocks. Returns the SQL
-    * array of `(blk, key)` structs, one per block, and the first block on
-    * which two signatures agree (`x` = their xor) — the one bucket allowed
-    * to emit the pair, the same CASE [[graft.ops.DedupOps.blockCandidates]]
-    * codegens; -1 when none agrees. */
-  private def pigeonhole(maxHamming: Int): (String, Long => Int) = {
-    val bits = 64
-    require(maxHamming >= 0 && maxHamming < bits,
-      s"maxHamming must be in [0, $bits): got $maxHamming")
-    val nBlocks = maxHamming + 1
-    val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
-    val masks = (0 until nBlocks).map { i =>
-      val w = bounds(i + 1) - bounds(i)
-      if (w >= 64) -1L else (1L << w) - 1
-    }
-    val blocks = masks.zipWithIndex.map { case (m, i) =>
-      s"named_struct('blk', $i, 'key', shiftright(simhash, ${bounds(i)}) & ${m}L)"
-    }
-    val placed = masks.zip(bounds).map { case (m, b) => m << b }.toArray
-    (blocks.mkString("array(", ", ", ")"), x => placed.indexWhere(p => (x & p) == 0))
   }
 
   /** Streaming ANN candidate MINING for bitext margin alignment — the
@@ -225,7 +230,7 @@ object StreamingOps {
     val spark = emb.sparkSession
     import spark.implicits._
     // lowest band on which the two bit-strings agree — the one bucket
-    // allowed to emit the pair (the `pigeonhole` first-block rule)
+    // allowed to emit the pair (the DedupOps.firstBlock rule)
     def firstBand(x: String, y: String): Int =
       (0 until bands).find(b => x.regionMatches(
         b * rowsPerBand, y, b * rowsPerBand, rowsPerBand)).getOrElse(-1)
@@ -276,9 +281,9 @@ object StreamingOps {
     * STATELESSLY in-row (signature extraction is a pure function of the
     * row's media payload — [[graft.ops.MultimodalOps.stubDocSignature]],
     * where a production decoder swaps in exactly as in `frameFeatures`),
-    * then pairs within `maxHamming` come out of the same pigeonhole
-    * bucket discipline as the text twin — keyed by (length class, block,
-    * key) with blocks over the OCCUPIED width, the batch op's r15
+    * then pairs within `maxHamming` come out of the text twin's bucket
+    * loop — keyed by (length class, block, key), the class being the
+    * OCCUPIED width nf·slotBits the blocks divide, the batch op's r15
     * length-class design (a globally-fixed block range would put every
     * short doc in one all-zero bucket: O(N²) state-bucket scans). Docs
     * below `minSlots` sampled frames are excluded exactly as in batch.
@@ -292,55 +297,16 @@ object StreamingOps {
     require(maxHamming >= 0, s"need maxHamming >= 0; got $maxHamming")
     require(minSlots >= 1 && minSlots * slotBits > maxHamming,
       s"need minSlots >= 1 with minSlots*slotBits > maxHamming; got $minSlots")
-    val nBlocks = maxHamming + 1
-    // per-class block geometry: class width w = nf·slotBits, block i is
-    // [i·w/nBlocks, (i+1)·w/nBlocks) — identical bounds to the batch op
-    def lo(w: Int, i: Int): Int = i * w / nBlocks
-    def mask(w: Int, i: Int): Long = {
-      val bw = lo(w, i + 1) - lo(w, i)
-      if (bw >= 64) -1L else (1L << bw) - 1
-    }
-    def firstBlock(x: Long, w: Int): Int =
-      (0 until nBlocks).find(i => (x & (mask(w, i) << lo(w, i))) == 0).getOrElse(-1)
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id"), col("text"))
+    val sig = docs.select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val (sig, nf) = graft.ops.MultimodalOps.stubDocSignature(
-          text, every, slotBits, bits, dim)
-        if (nf < minSlots) Iterator.empty
-        else {
-          val w = nf * slotBits
-          (0 until nBlocks).iterator.map { i =>
-            (id, sig, nf, i, (sig >> lo(w, i)) & mask(w, i))
-          }
-        }
+        val (sig, nf) = MultimodalOps.stubDocSignature(text, every, slotBits, bits, dim)
+        if (nf < minSlots) Iterator.empty else Iterator((id, sig, nf))
       }
-      .groupByKey(r => (r._3, r._4, r._5))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: (Int, Int, Long), rows: Iterator[(Long, Long, Int, Int, Long)],
-         state: GroupState[List[(Long, Long)]]) => {
-          val (nf, blk, _) = key
-          val w = nf * slotBits
-          val batch = rows.map(r => (r._1, r._2)).toVector.sortBy(_._1)
-          var seen = state.getOption.getOrElse(Nil)
-          val out = Vector.newBuilder[(Long, Long, Long)]
-          batch.foreach { case (id, sig) =>
-            if (!seen.exists(_._1 == id)) {
-              seen.foreach { case (pid, psig) =>
-                val x = psig ^ sig
-                val h = java.lang.Long.bitCount(x)
-                if (h <= maxHamming && firstBlock(x, w) == blk)
-                  out += ((math.min(pid, id), math.max(pid, id), h.toLong))
-              }
-              seen = (id, sig) :: seen
-            }
-          }
-          state.update(seen)
-          out.result().iterator
-        })
-      .toDF("doc_a", "doc_b", "hamming")
+      .toDF("doc_id", "simhash", "nf")
+    hammingPairsStream(sig, maxHamming, s"nf * $slotBits")
   }
 
   /** [[simhashPairsStream]] with an event-time state TTL — the
@@ -358,12 +324,11 @@ object StreamingOps {
     */
   def simhashPairsStreamTtl(docs: DataFrame, ttlMs: Long, maxHamming: Int = 3,
                             watermark: String = "1 hour"): DataFrame = {
-    val (blocks, firstBlock) = pigeonhole(maxHamming)
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.ops.DedupOps.simhash64Sig(docs.withWatermark("ts", watermark), carry = Seq("ts"))
-      .selectExpr("doc_id", "simhash", "ts", s"explode($blocks) as b")
-      .selectExpr("doc_id", "simhash", "ts", "b.blk as blk", "b.key as key")
+    blockRows(DedupOps.simhash64Sig(docs.withWatermark("ts", watermark), carry = Seq("ts")),
+        simhashRadius(maxHamming), "64", carry = Seq("ts"))
+      .selectExpr("doc_id", "simhash", "ts", "blk", "key")
       .as[(Long, Long, java.sql.Timestamp, Int, Long)]
       .groupByKey(r => (r._4, r._5))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
@@ -386,7 +351,7 @@ object StreamingOps {
                   seen.foreach { case (pid, psig, _) =>
                     val x = psig ^ sig
                     val h = java.lang.Long.bitCount(x)
-                    if (h <= maxHamming && firstBlock(x) == blk)
+                    if (h <= maxHamming && DedupOps.firstBlock(x, maxHamming, 64) == blk)
                       out += ((math.min(pid, id), math.max(pid, id), h.toLong))
                   }
                   seen = (id, sig, ts) :: seen

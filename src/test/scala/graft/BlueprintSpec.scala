@@ -266,6 +266,31 @@ class BlueprintSpec extends SparkSpecBase {
     } finally spark.sparkContext.setLogLevel("ERROR") // the CLIs set WARN
   }
 
+  test("--url-parameters reach the driver as connection properties in all three CLIs") {
+    import graft.cli.ExecuteSql
+    System.setProperty("derby.stream.error.file", "/tmp/graft_derby.log")
+    // Derby creates an in-memory database only when the create property is
+    // set; each path below opens its own database, so none rides on another
+    def url(db: String) = s"jdbc:derby:memory:$db"
+    def conn(db: String) = Array("--db-connection-url", url(db), "--url-parameters", "create=true")
+    writeCsv("url_params/src.csv", "id,amt\n1,10.5\n2,20.0\n")
+    try {
+      // raw JDBC statement
+      ExecuteSql.main(Array("--query", "CREATE TABLE up_t (id INT)") ++ conn("graftup1"))
+      // Spark JDBC writer options, then the raw schema probe before a write
+      UploadFile.main(Array("--table-name", "up_t", "--source-folder-name", s"$tmp/url_params",
+        "--source-file-name", "src.csv") ++ conn("graftup2"))
+      UploadFile.main(Array("--table-name", "up_t", "--source-folder-name", s"$tmp/url_params",
+        "--source-file-name", "src.csv", "--schema", "ups") ++ conn("graftup3"))
+      StoreQueryResults.main(Array("--query", """SELECT COUNT(*) AS "n" FROM "ups"."up_t"""",
+        "--destination-file-name", s"$tmp/url_params/out.csv") ++ conn("graftup3"))
+      assert(Files.readAllLines(Paths.get(s"$tmp/url_params/out.csv")).get(1) === "2")
+      val e = intercept[IllegalArgumentException](ExecuteSql.main(Array("--query", "SELECT 1",
+        "--db-connection-url", url("graftup1"), "--url-parameters", "create")))
+      assert(e.getMessage.contains("--url-parameters"), e.getMessage)
+    } finally spark.sparkContext.setLogLevel("ERROR") // the CLIs set WARN
+  }
+
   test("a failing single-file egest or UNLOAD PARALLEL OFF leaves no spill directory") {
     import scala.jdk.CollectionConverters._
     import graft.cli.ExecuteSql

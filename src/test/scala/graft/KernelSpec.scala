@@ -84,10 +84,19 @@ class KernelSpec extends SparkSpecBase {
       .selectExpr(s"explode(${graft.ops.TextOps.wordsExpr("text")}) as w")
       .distinct()
       .selectExpr("md5_h64(w) as kernel",
-        s"${graft.ops.TextOps.h64Reference("w")} as composed")
+        s"${graft.ops.TextOps.h64Reference("w")} as composed", "w")
     val rows = both.collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
+    // the JVM stub-tier h60 (kernel >>> 4) equals the first 15 md5 hex chars
+    val md = java.security.MessageDigest.getInstance("MD5")
+    rows.foreach { r =>
+      val bytes = r.getString(2).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val hex = md.digest(bytes).map("%02x".format(_)).mkString
+      val h60 = java.lang.Long.parseLong(hex.substring(0, 15), 16)
+      assert(graft.ops.MultimodalOps.h60(r.getString(2)) === h60)
+      assert(graft.ops.MultimodalOps.h60(bytes) === h60)
+    }
     // null propagates; full-range: fixture-independent sign coverage via
     // probe strings whose top md5 nibble is ≥ 8 (negative) and < 8
     val r = spark.sql(

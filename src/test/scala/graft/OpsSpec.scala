@@ -443,6 +443,16 @@ class OpsSpec extends SparkSpecBase {
     probed.zip(inline).foreach { case (a, b) => assert(a === b) }
   }
 
+  test("IVF index build releases its fit cache once both tables are written") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    ClusterOps.buildIvfIndex(Tables.load(spark, sfDir, "embeddings"), "ivf_rel", kc = 4, iters = 1)
+    assert(spark.table("ivf_rel_cells").count() === 4L)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"buildIvfIndex left ${sc.getPersistentRDDs.values.map(_.name).mkString(", ")} cached")
+  }
+
   test("embedding LSH near-dup: recall 1.0 with real pruning on planted near-dups") {
     // Deterministic corpus: 120 base vectors from an LCG, plus 10 planted
     // near-dups (base + small perturbation → cosine ≈ 0.99).

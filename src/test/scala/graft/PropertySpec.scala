@@ -275,6 +275,36 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
+  test("pigeonhole geometry: Scala firstBlock and block keys equal the SQL Spark evaluates") {
+    import graft.ops.DedupOps
+    // xors with a few set bits inside the w-bit width (so blocks do agree),
+    // or arbitrary longs
+    val sample: Gen[(Int, Int, Long)] = for {
+      w <- Gen.choose(4, 64)
+      h <- Gen.choose(0, math.min(7, w - 1))
+      bits <- Gen.choose(0, 2 * h + 2).flatMap(n => Gen.listOfN(n, Gen.choose(0, w - 1)))
+      x <- Gen.oneOf(Gen.const(bits.foldLeft(0L)((a, b) => a | (1L << b))), Gen.long)
+    } yield (w, h, x)
+    val cases = (0 until 400).flatMap(i => sample(Gen.Parameters.default, Seed(7L + i)))
+    val firsts = cases.groupBy(_._2).toSeq.flatMap { case (h, rs) =>
+      rs.map { case (w, _, x) => (w, x) }.toDF("w", "x")
+        .selectExpr("w", "x", s"${DedupOps.firstBlockSql("x", h, "w")} as fb",
+          s"transform(${DedupOps.blockKeysSql("x", h, "w")}, b -> b.key) as keys")
+        .collect().toSeq.map { r =>
+          val (w, x) = (r.getInt(0), r.getLong(1))
+          val fb = DedupOps.firstBlock(x, h, w)
+          assert(r.getInt(2) === fb, s"firstBlock w=$w h=$h x=$x")
+          assert(r.getSeq[Long](3) === (0 to h).map(i => DedupOps.blockKey(x, i, h + 1, w)),
+            s"block keys w=$w h=$h x=$x")
+          // pigeonhole: an in-width xor of ≤ h bits leaves some block zero
+          if ((w == 64 || x >>> w == 0) && java.lang.Long.bitCount(x) <= h)
+            assert(fb >= 0, s"no agreeing block w=$w h=$h x=$x")
+          fb
+        }
+    }
+    assert(firsts.contains(-1) && firsts.exists(_ > 0), s"uncovered: ${firsts.distinct}")
+  }
+
   test("rangePrefix equals the per-key running sum on arbitrary tie-collapsed blocks") {
     // The defining law of the range-partitioned prefix primitive every
     // percentile/gini/packing/range-frame path now rides: for ANY set of

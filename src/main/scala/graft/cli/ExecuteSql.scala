@@ -1,5 +1,7 @@
 package graft.cli
 
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
@@ -25,7 +27,7 @@ object ExecuteSql {
     val parsed = ArgParser.parse(args, flags).fold(e => sys.error(e), identity)
     val query = parsed.getOrElse("query", sys.error("--query is required"))
     val conn = connectionOf(parsed)
-    run(GraftSession.get("graft-execute-sql"), query, conn)
+    run(GraftSession.get("graft-execute-sql"), query, conn, parsed.get("schema"))
     println("Your query has been successfully executed.")
   }
 
@@ -69,42 +71,45 @@ object ExecuteSql {
   private val connectionFlags = Seq("db-connection-url", "host", "port",
     "database", "username", "password", "url-parameters")
 
-  def run(spark: SparkSession, query: String, conn: Option[ConnectionConfig]): Unit =
+  /** Runs `query` with `schema` (`--schema`) as its default schema: the
+    * JDBC connection's schema, or locally the current namespace for the
+    * run, restored afterwards. */
+  def run(spark: SparkSession, query: String, conn: Option[ConnectionConfig],
+          schema: Option[String] = None): Unit =
     conn match {
       case Some(c) =>
         val jc = c.connect()
-        try { val st = jc.createStatement(); try st.execute(query) finally st.close() }
-        finally jc.close()
+        try {
+          schema.foreach(jc.setSchema)
+          val st = jc.createStatement(); try st.execute(query) finally st.close()
+        } finally jc.close()
       case None =>
         // Redshift ETL scripts arrive as multi-statement strings
         // (`BEGIN; …; COMMIT;`) — split at depth-0 semicolons OUTSIDE
         // string literals / comments (the tokenizer guarantees that) and
         // run each statement through the full local pipeline in order.
         val toks = tokenize(query)
-        val stmts = Vector.newBuilder[String]
-        var depth = 0
-        var start = 0
-        toks.zipWithIndex.foreach { case (t, i) =>
-          if (t.kind == Sym && t.text == "(") depth += 1
-          else if (t.kind == Sym && t.text == ")") depth -= 1
-          else if (depth == 0 && t.kind == Sym && t.text == ";") {
-            stmts += render(toks.slice(start, i)).trim
-            start = i + 1
-          }
+        val semis = topLevel(toks, 0).filter(i => isSym(toks(i), ";")).toVector
+        val cuts = (-1 +: semis) :+ toks.length
+        val stmts = cuts.sliding(2).map { case Seq(a, b) => render(toks.slice(a + 1, b)).trim }
+        val previous = spark.catalog.currentDatabase
+        schema.foreach { s =>
+          require(spark.catalog.databaseExists(s), s"--schema $s: no such schema in the catalog")
+          spark.catalog.setCurrentDatabase(s)
         }
-        stmts += render(toks.slice(start, toks.length)).trim
         // Redshift TEMP tables are session-scoped: one CLI invocation is
         // one session, so tables created TEMP here are visible to every
         // later statement of this script and dropped when the run ends
         // (success or failure) — the next invocation never sees them.
         fetchLog.clear() // fresh per run; readable by specs afterwards
-        try stmts.result().filter(_.nonEmpty).foreach(runOne(spark, _))
+        try stmts.filter(_.nonEmpty).foreach(runOne(spark, _))
         finally {
           tempTables.forEach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
           tempTables.clear()
           preparedStmts.clear()
           cursors.forEach((_, c) => graft.ops.LineageUtil.freeLocalCheckpoint(c.df))
           cursors.clear()
+          schema.foreach(_ => spark.catalog.setCurrentDatabase(previous))
         }
     }
 
@@ -219,23 +224,28 @@ object ExecuteSql {
     }
   }
 
-  /** Strip [LOCAL] TEMP|TEMPORARY out of CREATE … TABLE and remember the
-    * table name for end-of-run cleanup. Returns the tokens unchanged when
-    * they are not a temp-table DDL. */
-  private def stripTemp(toks: Vector[Tok]): Vector[Tok] = {
-    val c = nextCode(toks, 0)
-    if (c >= toks.length || !toks(c).isWord("create")) return toks
-    var i = nextCode(toks, c + 1)
-    val dropIdx = Vector.newBuilder[Int]
-    if (i < toks.length && toks(i).isWord("local")) { dropIdx += i; i = nextCode(toks, i + 1) }
-    if (i < toks.length && (toks(i).isWord("temp") || toks(i).isWord("temporary"))) {
-      dropIdx += i; i = nextCode(toks, i + 1)
-    } else return toks
-    if (i >= toks.length || !toks(i).isWord("table")) return toks
-    val (name, _) = qualifiedName(toks, nextCode(toks, i + 1))
-    tempTables.add(name)
-    val drops = dropIdx.result().toSet
-    toks.zipWithIndex.collect { case (t, j) if !drops.contains(j) => t }
+  /** Strip [LOCAL] TEMP|TEMPORARY out of CREATE … TABLE; returns the
+    * tokens and the temp table's name, or the tokens unchanged and None
+    * when they are not a temp-table DDL. */
+  private def stripTemp(toks: Vector[Tok]): (Vector[Tok], Option[String]) = {
+    val temp = Set("temp", "temporary")
+    createHeader(toks, "table", {
+      case Seq(t) => temp(t)
+      case Seq("local", t) => temp(t)
+      case _ => false
+    }).fold((toks, Option.empty[String])) { header =>
+      val drops = header.modifiers.toSet
+      (toks.zipWithIndex.collect { case (t, j) if !drops.contains(j) => t }, Some(header.name))
+    }
+  }
+
+  /** `name` with every part quoted, in the current schema when it names
+    * none — the end-of-run DROP then hits the table this run created even
+    * after a later `SET search_path`. */
+  private def pinned(spark: SparkSession, name: String): String = {
+    val parts = spark.sessionState.sqlParser.parseMultipartIdentifier(name)
+    val full = if (parts.length == 1) spark.catalog.currentDatabase +: parts else parts
+    full.map(p => "`" + p.replace("`", "``") + "`").mkString(".")
   }
 
   /** PREPARE / EXECUTE / DEALLOCATE — Redshift's server-side prepared
@@ -314,8 +324,13 @@ object ExecuteSql {
     if (runPrepared(spark, toks) || runCursor(spark, toks)) return
     // rewrite first: SELECT … INTO [TEMP] t becomes CREATE [TEMP] TABLE t
     // AS …, so the TEMP strip/tracking below sees every temp-table form
-    val rtoks = stripTemp(tokenize(RedshiftSql.rewrite(stmt)))
+    val (rtoks, temp) = stripTemp(tokenize(RedshiftSql.rewrite(stmt)))
     val rewritten = render(rtoks)
+    // Only a table this statement creates is the run's to drop: when the
+    // name is taken (or cannot be checked) the CREATE fails or, with IF NOT
+    // EXISTS, does nothing, and the existing table must outlive the run.
+    val created = temp.filterNot(t => Try(spark.catalog.tableExists(t)).getOrElse(true))
+      .map(pinned(spark, _))
     // EXPLAIN over a locally-EMULATED statement (DML/COPY/MV/APPEND)
     // has no Spark plan to show — fail with the reason instead of the
     // opaque ParseException spark.sql would raise on e.g. UPDATE
@@ -336,5 +351,6 @@ object ExecuteSql {
     if (!LocalDml.run(spark, rtoks) && !LocalCopy.run(spark, rtoks) &&
         !LocalMv.run(spark, rtoks))
       spark.sql(rewritten).foreach(_ => ())
+    created.foreach(tempTables.add)
   }
 }

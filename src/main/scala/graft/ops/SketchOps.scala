@@ -260,24 +260,6 @@ object SketchOps {
       .orderBy("grp")
   }
 
-  /** AMS second-frequency-moment sketch (Alon, Matias & Szegedy, STOC'96
-    * — public) per group: F₂ = Σ_x f(x)², the self-join size / repeat
-    * rate of a key column — the statistic a pipeline consults before
-    * committing to a join or a dedup pass. Each of `r` sketch rows keeps
-    * one counter S_j = Σ_x sign_j(x)·f(x) with deterministic ±1 signs
-    * from bit j of the portable md5-h60 hash (pairwise independence from
-    * the hash bits — fixed, so both engines derive identical signs);
-    * E[S_j²] = F₂, and the estimate is the mean of the r squares. All
-    * counters are exact BIGINT sums and r is a power of two, so the one
-    * closing division is exact IEEE — estimate AND exact F₂ hash-gate.
-    *
-    * The sketch is LINEAR (S_j of a union = sum of the parts' S_j —
-    * OpsSpec pins it), which is the 100 TB property: per-partition/day
-    * r-counter sketches combine by vector addition, never rescan. Scale
-    * shape: one map-side explode of r sign rows per input row, a
-    * (grp, j)-keyed partial agg, then an r-row-per-group rollup; the
-    * exact companion is the standard two-level keyed agg. At BIGINT
-    * range, |S_j| ≤ N — overflow-safe to 2⁶³ rows. */
   /** Fixed-grid histogram quantiles per group — the single-pass,
     * mergeable quantile tier next to the exact sort path (q18/q25) and
     * engine-specific approx_percentile: values land in `nb` equal-width
@@ -302,17 +284,8 @@ object SketchOps {
     require(hi > lo && nb > 0 && qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
       s"quantileHist needs hi > lo, nb > 0, qs in (0, 1]; got [$lo,$hi)/$nb $qs")
     import org.apache.spark.sql.expressions.Window
-    // bare decimal literals parse as DECIMAL in both engines — every
-    // constant is cast to double explicitly so the whole estimate tree is
-    // IEEE double arithmetic (and hash-gates as such)
-    val loD = s"cast($lo as double)"
-    val step = s"((cast($hi as double)) - ($loD)) / $nb"
-    val h = df
-      .selectExpr(s"$groupCol as grp", s"cast($valueExpr as double) as v")
-      .selectExpr("grp",
-        s"least(greatest(cast(floor((v - ($loD)) / ($step)) as bigint), 0), ${nb - 1}) as bucket")
-      .groupBy("grp", "bucket").agg(count(lit(1)).as("c"))
-    val cum = h
+    val (loD, step) = histGrid(lo, hi, nb)
+    val cum = histBuckets(df, groupCol, valueExpr, lo, hi, nb)
       .withColumn("cum", sum("c").over(Window.partitionBy("grp").orderBy("bucket")))
       .withColumn("n", sum("c").over(Window.partitionBy("grp")))
     val aggs =
@@ -324,6 +297,27 @@ object SketchOps {
     cum.groupBy("grp").agg(aggs.head, aggs.tail: _*)
       .selectExpr(("grp" +: "n_rows" +: ests): _*)
       .orderBy("grp")
+  }
+
+  /** The grid of [[quantileHist]] as SQL: (lower edge, bucket width). Bare
+    * decimal literals parse as DECIMAL in both engines — every constant is
+    * cast to double explicitly so the whole estimate tree is IEEE double
+    * arithmetic (and hash-gates as such). */
+  private def histGrid(lo: Double, hi: Double, nb: Int): (String, String) = {
+    val loD = s"cast($lo as double)"
+    (loD, s"((cast($hi as double)) - ($loD)) / $nb")
+  }
+
+  /** The bucket-count table of [[quantileHist]]: one (grp, bucket, c) row
+    * per occupied bucket, outliers clamped to the edge buckets — the
+    * bucket-wise additive state the streaming twin accumulates. */
+  private[graft] def histBuckets(df: DataFrame, groupCol: String, valueExpr: String,
+                                 lo: Double, hi: Double, nb: Int): DataFrame = {
+    val (loD, step) = histGrid(lo, hi, nb)
+    df.selectExpr(s"$groupCol as grp", s"cast($valueExpr as double) as v")
+      .selectExpr("grp",
+        s"least(greatest(cast(floor((v - ($loD)) / ($step)) as bigint), 0), ${nb - 1}) as bucket")
+      .groupBy("grp", "bucket").agg(count(lit(1)).as("c"))
   }
 
   /** The d×w Count-Min counter table itself: one (j, b, c) row per
@@ -501,6 +495,24 @@ object SketchOps {
       .selectExpr("grp", "e.j as j", "e.sg as sg")
       .groupBy("grp", "j").agg(sum("sg").as("s"))
 
+  /** AMS second-frequency-moment sketch (Alon, Matias & Szegedy, STOC'96
+    * — public) per group: F₂ = Σ_x f(x)², the self-join size / repeat
+    * rate of a key column — the statistic a pipeline consults before
+    * committing to a join or a dedup pass. Each of `r` sketch rows keeps
+    * one counter S_j = Σ_x sign_j(x)·f(x) with deterministic ±1 signs
+    * from bit j of the portable md5-h60 hash (pairwise independence from
+    * the hash bits — fixed, so both engines derive identical signs);
+    * E[S_j²] = F₂, and the estimate is the mean of the r squares. All
+    * counters are exact BIGINT sums and r is a power of two, so the one
+    * closing division is exact IEEE — estimate AND exact F₂ hash-gate.
+    *
+    * The sketch is LINEAR (S_j of a union = sum of the parts' S_j —
+    * OpsSpec pins it), which is the 100 TB property: per-partition/day
+    * r-counter sketches combine by vector addition, never rescan. Scale
+    * shape: one map-side explode of r sign rows per input row, a
+    * (grp, j)-keyed partial agg, then an r-row-per-group rollup; the
+    * exact companion is the standard two-level keyed agg. At BIGINT
+    * range, |S_j| ≤ N — overflow-safe to 2⁶³ rows. */
   def amsF2(df: DataFrame, groupCol: String, valueExpr: String,
             r: Int = 16): DataFrame = {
     require(r >= 1 && r <= 60 && Integer.bitCount(r) == 1,

@@ -1162,25 +1162,13 @@ object T2 {
     //     NULLed on error events, then last-observation-carried-forward
     //     per user stream — LAST_VALUE … IGNORE NULLS over the running
     //     frame, the one window modifier not covered by q09/q10/q29/q30.
-    // Split: the oracle puts IGNORE NULLS inside the call (DuckDB syntax).
-    QueryDef(
-      "q43_locf",
-      (s, d) => {
-        t(s, d, "events").createOrReplaceTempView("events")
-        s.sql(
-          """SELECT user_id, event_id,
-            |  LAST_VALUE(CASE WHEN event_type <> 'error' THEN value END) IGNORE NULLS
-            |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-            |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_locf
-            |FROM events
-            |ORDER BY user_id, event_id""".stripMargin)
-      },
-      Some("""SELECT user_id, event_id,
-             |  LAST_VALUE(CASE WHEN event_type <> 'error' THEN value END IGNORE NULLS)
-             |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_locf
-             |FROM events
-             |ORDER BY user_id, event_id""".stripMargin)),
+    sql("q43_locf", Seq("events"),
+      """SELECT user_id, event_id,
+        |  LAST_VALUE(CASE WHEN event_type <> 'error' THEN value END IGNORE NULLS)
+        |    OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_locf
+        |FROM events
+        |ORDER BY user_id, event_id""".stripMargin),
 
     // 44. Value-range window frame (RANGE BETWEEN INTERVAL): per-customer
     //     rolling 30-day spend — the frame is defined by the ORDER BY
@@ -1245,37 +1233,19 @@ object T2 {
     //     shifted to exclude the current row. Attributed value sums in
     //     DECIMAL (order-independent), then one cast out. Purchases with
     //     no prior touch (first event of a user) drop, as in the
-    //     standard attribution model. Spark puts IGNORE NULLS after the
-    //     call, DuckDB inside the parens — same semantics (gated by q43).
-    // Split: the oracle puts IGNORE NULLS inside the call (DuckDB syntax).
-    QueryDef(
-      "q48_attribution",
-      (s, d) => {
-        t(s, d, "events").createOrReplaceTempView("events")
-        s.sql(
-          """WITH a AS (SELECT user_id, event_type, value,
-            |    LAST_VALUE(CASE WHEN event_type <> 'purchase' THEN event_type END) IGNORE NULLS
-            |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-            |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS channel
-            |  FROM events)
-            |SELECT channel, COUNT(*) AS conversions,
-            |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS attributed_value
-            |FROM a
-            |WHERE event_type = 'purchase' AND channel IS NOT NULL
-            |GROUP BY channel
-            |ORDER BY channel""".stripMargin)
-      },
-      Some("""WITH a AS (SELECT user_id, event_type, value,
-             |    LAST_VALUE(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
-             |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS channel
-             |  FROM events)
-             |SELECT channel, COUNT(*) AS conversions,
-             |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS attributed_value
-             |FROM a
-             |WHERE event_type = 'purchase' AND channel IS NOT NULL
-             |GROUP BY channel
-             |ORDER BY channel""".stripMargin)),
+    //     standard attribution model.
+    sql("q48_attribution", Seq("events"),
+      """WITH a AS (SELECT user_id, event_type, value,
+        |    LAST_VALUE(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
+        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS channel
+        |  FROM events)
+        |SELECT channel, COUNT(*) AS conversions,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS attributed_value
+        |FROM a
+        |WHERE event_type = 'purchase' AND channel IS NOT NULL
+        |GROUP BY channel
+        |ORDER BY channel""".stripMargin),
 
     // 49. Welch's t over every event-type pair — the A/B-test readout.
     //     Values quantize to 1/128 grid (floor — exact IEEE), moments are

@@ -134,67 +134,57 @@ object LocalDml {
     // ALTER variant that merely CONTAINS an identifier `owner` next to
     // `to` mid-statement on the native-DDL path. The keywords must still
     // sit at paren depth 0.
-    var i = n
-    var depth = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.kind == Sym && t.text == "(") depth += 1
-      else if (t.kind == Sym && t.text == ")") depth -= 1
-      else if (depth == 0 && t.isWord("owner")) {
-        // ADVICE r13: `ALTER TABLE t RENAME [COLUMN] owner TO x` is a real
-        // rename of a column NAMED owner ending in the exact anchored
-        // shape — the preceding code token disambiguates (it's COLUMN or
-        // RENAME there; an object name in the loud-ignore form). ADVICE
-        // r14 anchored this to STATEMENT SHAPE: a RENAME/COLUMN keyword
-        // sitting in the object-name slot (the code token right after the
-        // ALTER <type> token at n — e.g. a table literally named `rename`
-        // in `ALTER TABLE rename OWNER TO bob`) is the object name, not
-        // the rename verb, so the statement stays on the loud-ignore path.
-        def prevCode(p: Int): Int = {
-          var q = p - 1
-          while (q >= 0 && (toks(q).kind == Ws || toks(q).kind == Comment)) q -= 1
-          q
-        }
-        // the object-name slot: first code token after the type keyword(s)
-        val nameSlot = {
-          var s = nextCode(toks, n + 1)
-          if (n < toks.length && toks(n).isWord("materialized") &&
-              s < toks.length && toks(s).isWord("view"))
-            s = nextCode(toks, s + 1)
-          s
-        }
-        // a token is part of the object NAME (not the rename verb) when it
-        // sits in the name slot or continues a qualified name (`s.rename`)
-        def inNamePosition(p: Int): Boolean = p == nameSlot || {
-          val before = prevCode(p)
-          before >= 0 && toks(before).kind == Sym && toks(before).text == "."
-        }
-        val pv = prevCode(i)
-        val precededByRename = pv >= 0 && {
-          if (toks(pv).isWord("column")) {
-            val r = prevCode(pv)
-            r >= 0 && toks(r).isWord("rename") && !inNamePosition(r)
-          } else toks(pv).isWord("rename") && !inNamePosition(pv)
-        }
-        val to = nextCode(toks, i + 1)
-        val principal = if (to < toks.length) nextCode(toks, to + 1) else toks.length
-        val tail = if (principal < toks.length) nextCode(toks, principal + 1) else toks.length
-        val tailIsEnd = tail >= toks.length ||
-          (toks(tail).kind == Sym && toks(tail).text == ";" &&
-            nextCode(toks, tail + 1) >= toks.length)
-        if (!precededByRename &&
-            to < toks.length && toks(to).isWord("to") &&
-            principal < toks.length &&
-            (toks(principal).kind == Word || toks(principal).kind == QIdent) &&
-            tailIsEnd) {
-          System.err.println(
-            "[graft] ALTER … OWNER TO: no local owners — statement ignored")
-          return true
-        }
-      }
-      i += 1
+    // `ALTER TABLE t RENAME [COLUMN] owner TO x` is a real rename of a
+    // column NAMED owner ending in the exact anchored shape — the preceding
+    // code token disambiguates (it's COLUMN or RENAME there; an object name
+    // in the loud-ignore form). A RENAME/COLUMN keyword sitting in the
+    // object-name slot (the code token right after the ALTER <type> token
+    // at n — e.g. a table literally named `rename` in `ALTER TABLE rename
+    // OWNER TO bob`) is the object name, not the rename verb, so the
+    // statement stays on the loud-ignore path.
+    def prevCode(p: Int): Int = {
+      var q = p - 1
+      while (q >= 0 && (toks(q).kind == Ws || toks(q).kind == Comment)) q -= 1
+      q
     }
-    false
+    // the object-name slot: first code token after the type keyword(s)
+    val nameSlot = {
+      var s = nextCode(toks, n + 1)
+      if (n < toks.length && toks(n).isWord("materialized") &&
+          s < toks.length && toks(s).isWord("view"))
+        s = nextCode(toks, s + 1)
+      s
+    }
+    // a token is part of the object NAME (not the rename verb) when it
+    // sits in the name slot or continues a qualified name (`s.rename`)
+    def inNamePosition(p: Int): Boolean = p == nameSlot || {
+      val before = prevCode(p)
+      before >= 0 && toks(before).kind == Sym && toks(before).text == "."
+    }
+    def ownerTo(i: Int): Boolean = toks(i).isWord("owner") && {
+      val pv = prevCode(i)
+      val precededByRename = pv >= 0 && {
+        if (toks(pv).isWord("column")) {
+          val r = prevCode(pv)
+          r >= 0 && toks(r).isWord("rename") && !inNamePosition(r)
+        } else toks(pv).isWord("rename") && !inNamePosition(pv)
+      }
+      val to = nextCode(toks, i + 1)
+      val principal = if (to < toks.length) nextCode(toks, to + 1) else toks.length
+      val tail = if (principal < toks.length) nextCode(toks, principal + 1) else toks.length
+      val tailIsEnd = tail >= toks.length ||
+        (toks(tail).kind == Sym && toks(tail).text == ";" &&
+          nextCode(toks, tail + 1) >= toks.length)
+      !precededByRename &&
+        to < toks.length && toks(to).isWord("to") &&
+        principal < toks.length &&
+        (toks(principal).kind == Word || toks(principal).kind == QIdent) &&
+        tailIsEnd
+    }
+    val ignored = topLevel(toks, n).exists(ownerTo)
+    if (ignored)
+      System.err.println("[graft] ALTER … OWNER TO: no local owners — statement ignored")
+    ignored
   }
 
   /** True for CREATE [OR REPLACE] PROCEDURE / DROP PROCEDURE / CALL. */
@@ -291,7 +281,7 @@ object LocalDml {
   private def runAlterColumns(spark: SparkSession, toks: Vector[Tok], at: Int): Boolean = {
     var i = nextCode(toks, at + 1)
     if (i >= toks.length || !toks(i).isWord("table")) return false
-    val (table, afterT) = tableName(toks, i + 1)
+    val (table, afterT) = qualifiedName(toks, i + 1)
     i = nextCode(toks, afterT)
     if (i >= toks.length) return false
 
@@ -312,7 +302,7 @@ object LocalDml {
       if (j < toks.length && (toks(j).isWord("partition") ||
           toks(j).isWord("constraint"))) return false // native / pass-through
       if (j < toks.length && toks(j).isWord("column")) j = nextCode(toks, j + 1)
-      val (cname, afterC) = tableName(toks, j)
+      val (cname, afterC) = qualifiedName(toks, j)
       val k = nextCode(toks, afterC)
       if (k < toks.length && !(toks(k).isWord("cascade") || toks(k).isWord("restrict")))
         throw new IllegalArgumentException(
@@ -327,7 +317,7 @@ object LocalDml {
     } else if (toks(i).isWord("alter")) {
       var j = nextCode(toks, i + 1)
       if (j < toks.length && toks(j).isWord("column")) j = nextCode(toks, j + 1)
-      val (cname, afterC) = tableName(toks, j)
+      val (cname, afterC) = qualifiedName(toks, j)
       val ty = nextCode(toks, afterC)
       // only TYPE changes need the copy-on-write; COMMENT/other forms are
       // native Spark ALTER COLUMN syntax — pass through
@@ -353,11 +343,11 @@ object LocalDml {
       var j = nextCode(toks, i + 1)
       if (j >= toks.length || !toks(j).isWord("column")) return false // RENAME TO = native
       j = nextCode(toks, j + 1)
-      val (from, afterF) = tableName(toks, j)
+      val (from, afterF) = qualifiedName(toks, j)
       val to = nextCode(toks, afterF)
       require(to < toks.length && toks(to).isWord("to"),
         "ALTER TABLE RENAME COLUMN needs TO <new name>")
-      val (newRaw, _) = tableName(toks, to + 1)
+      val (newRaw, _) = qualifiedName(toks, to + 1)
       val newName = deq(newRaw)
       requireNotMv(spark, table, "ALTER TABLE RENAME COLUMN")
       val df = spark.table(table)
@@ -386,12 +376,12 @@ object LocalDml {
   private def runAlterAppend(spark: SparkSession, toks: Vector[Tok], at: Int): Boolean = {
     var i = nextCode(toks, at + 1)
     if (i >= toks.length || !toks(i).isWord("table")) return false
-    val (target, afterT) = tableName(toks, i + 1)
+    val (target, afterT) = qualifiedName(toks, i + 1)
     i = nextCode(toks, afterT)
     if (i >= toks.length || !toks(i).isWord("append")) return false // native ALTER
     i = nextCode(toks, i + 1)
     require(i < toks.length && toks(i).isWord("from"), "ALTER TABLE APPEND needs FROM <source>")
-    val (source, afterS) = tableName(toks, i + 1)
+    val (source, afterS) = qualifiedName(toks, i + 1)
     var ignoreExtra = false
     var fillTarget = false
     var j = nextCode(toks, afterS)
@@ -459,7 +449,7 @@ object LocalDml {
     if (i < toks.length && (toks(i).isWord("verbose")))
       i = nextCode(toks, i + 1)
     require(i < toks.length, "ANALYZE needs a table name (analyzing every table is not supported)")
-    val (table, afterT) = tableName(toks, i)
+    val (table, afterT) = qualifiedName(toks, i)
     val j = nextCode(toks, afterT)
     // optional (col, col) list; ALL COLUMNS / PREDICATE COLUMNS collect
     // column stats for everything (PREDICATE COLUMNS is Redshift's
@@ -496,7 +486,7 @@ object LocalDml {
            toks(i).isWord("reindex") || toks(i).isWord("recluster")))
       i = nextCode(toks, i + 1)
     require(i < toks.length, "VACUUM needs a table name (vacuuming every table is not supported)")
-    val (table, _) = tableName(toks, i)
+    val (table, _) = qualifiedName(toks, i)
     // `TO threshold PERCENT` / BOOST suffixes are advisory — ignored
     val priorStats = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table)).stats
@@ -525,7 +515,7 @@ object LocalDml {
   private def runDelete(spark: SparkSession, toks: Vector[Tok], at: Int): Unit = {
     val from = nextCode(toks, at + 1)
     require(from < toks.length && toks(from).isWord("from"), "DELETE must be DELETE FROM <table>")
-    val (table, rest) = tableName(toks, from + 1)
+    val (table, rest) = qualifiedName(toks, from + 1)
     requireNotMv(spark, table, "DELETE")
     val pred = whereClause(toks, rest)
     val keep = pred.fold("false")(p => s"NOT coalesce(($p), false)")
@@ -533,21 +523,12 @@ object LocalDml {
   }
 
   private def runUpdate(spark: SparkSession, toks: Vector[Tok], at: Int): Unit = {
-    val (table, afterTable) = tableName(toks, at + 1)
+    val (table, afterTable) = qualifiedName(toks, at + 1)
     requireNotMv(spark, table, "UPDATE")
     val set = nextCode(toks, afterTable)
     require(set < toks.length && toks(set).isWord("set"), "UPDATE must have a SET clause")
     // assignments run up to a depth-0 WHERE (or end of statement)
-    var i = set + 1
-    var depth = 0
-    var whereAt = -1
-    while (i < toks.length && whereAt < 0) {
-      val t = toks(i)
-      if (t.kind == Sym && t.text == "(") depth += 1
-      else if (t.kind == Sym && t.text == ")") depth -= 1
-      else if (t.isWord("where") && depth == 0) whereAt = i
-      i += 1
-    }
+    val whereAt = topLevel(toks, set + 1).find(toks(_).isWord("where")).getOrElse(-1)
     val end = if (whereAt >= 0) whereAt else toks.length
     val pred = if (whereAt >= 0) Some(render(toks.slice(whereAt + 1, toks.length)).trim) else None
     val fields = spark.table(table).schema.fieldNames
@@ -571,26 +552,18 @@ object LocalDml {
   private def runMerge(spark: SparkSession, toks: Vector[Tok], at: Int): Unit = {
     val into = nextCode(toks, at + 1)
     require(into < toks.length && toks(into).isWord("into"), "MERGE must be MERGE INTO")
-    val (target, afterT) = tableName(toks, into + 1)
+    val (target, afterT) = qualifiedName(toks, into + 1)
     requireNotMv(spark, target, "MERGE")
     val (tAlias, afterTA) = optionalAlias(toks, afterT, stop = Set("using"))
     val usingAt = nextCode(toks, afterTA)
     require(usingAt < toks.length && toks(usingAt).isWord("using"), "MERGE needs USING <source>")
-    val (source, afterS) = tableName(toks, usingAt + 1)
+    val (source, afterS) = qualifiedName(toks, usingAt + 1)
     val (sAlias, afterSA) = optionalAlias(toks, afterS, stop = Set("on"))
     val on = nextCode(toks, afterSA)
     require(on < toks.length && toks(on).isWord("on"), "MERGE needs ON <condition>")
 
     // split the remainder into ON-cond + WHEN clauses at depth 0
-    var depth = 0
-    val whenIdx = Vector.newBuilder[Int]
-    for (i <- (on + 1) until toks.length) {
-      val t = toks(i)
-      if (t.kind == Sym && t.text == "(") depth += 1
-      else if (t.kind == Sym && t.text == ")") depth -= 1
-      else if (t.isWord("when") && depth == 0) whenIdx += i
-    }
-    val whens = whenIdx.result()
+    val whens = topLevel(toks, on + 1).filter(toks(_).isWord("when")).toVector
     require(whens.nonEmpty, "MERGE needs at least one WHEN clause")
     val cond = render(toks.slice(on + 1, whens.head)).trim
 
@@ -600,9 +573,7 @@ object LocalDml {
       require(toks(i).isWord("matched"), "WHEN must be WHEN [NOT] MATCHED")
       i = nextCode(toks, i + 1)
       val extra = if (i < b && toks(i).isWord("and")) {
-        val thenAt = (i until b).find(j => toks(j).isWord("then") &&
-          toks.slice(i, j).count(t => t.kind == Sym && t.text == "(") ==
-            toks.slice(i, j).count(t => t.kind == Sym && t.text == ")"))
+        val thenAt = topLevel(toks, i, b).find(toks(_).isWord("then"))
           .getOrElse(sys.error("WHEN … AND needs THEN"))
         val c = render(toks.slice(i + 1, thenAt)).trim
         i = thenAt
@@ -714,15 +685,8 @@ object LocalDml {
     * otherwise leave the column unchanged with no error. */
   private def parseAssignments(frag: Vector[Tok], targetAlias: String,
                                fields: Set[String]): Map[String, String] = {
-    var depth = 0
-    val commas = Vector.newBuilder[Int]
-    for (i <- frag.indices) {
-      val t = frag(i)
-      if (t.kind == Sym && t.text == "(") depth += 1
-      else if (t.kind == Sym && t.text == ")") depth -= 1
-      else if (t.kind == Sym && t.text == "," && depth == 0) commas += i
-    }
-    val assigns = ((-1) +: commas.result() :+ frag.length).sliding(2).toSeq.map { case Seq(a, b) =>
+    val commas = topLevel(frag, 0).filter(i => isSym(frag(i), ",")).toVector
+    val assigns = ((-1) +: commas :+ frag.length).sliding(2).toSeq.map { case Seq(a, b) =>
       val piece = frag.slice(a + 1, b)
       val eq = piece.indexWhere(t => t.kind == Sym && t.text == "=")
       require(eq > 0, s"malformed assignment: ${render(piece)}")
@@ -781,10 +745,6 @@ object LocalDml {
       cat.alterTable(newMeta.copy(properties = newMeta.properties ++ keepProps))
     }
   }
-
-  /** Consume a (possibly schema-qualified, possibly quoted) table name. */
-  private def tableName(toks: Vector[Tok], from: Int): (String, Int) =
-    qualifiedName(toks, from)
 
   private def whereClause(toks: Vector[Tok], from: Int): Option[String] = {
     val w = nextCode(toks, from)

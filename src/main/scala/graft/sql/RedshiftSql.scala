@@ -27,6 +27,10 @@ import SqlTokens._
   *                                   date_trunc(u, b)) — truncation turns
   *                                   Spark's elapsed-complete-units into
   *                                   Redshift's boundary-crossing count
+  *   DATE_PART(part, x) (bare part) → date_part('<PART>', x)
+  *   EXTRACT/DATE_PART(dow …)      → (extract(DAYOFWEEK FROM x) - 1)
+  *   FIRST_VALUE/LAST_VALUE(x IGNORE|RESPECT NULLS)
+  *                                 → FIRST_VALUE/LAST_VALUE(x) IGNORE|RESPECT NULLS
   *   TO_CHAR(ts, 'datefmt')        → date_format(ts, '<java fmt>')
   *   CREATE TABLE … DISTKEY/SORTKEY (table- or column-level)
   *                                 → CLUSTERED BY … SORTED BY … INTO 32
@@ -84,11 +88,13 @@ object RedshiftSql {
     toks = rewriteApproximate(toks)
     toks = rewriteApproxPctDisc(toks)
     toks = rewriteRatioToReport(toks)
+    toks = rewriteNullsModifier(toks)
     toks = rewriteSimilarTo(toks)
     toks = rewritePosixRegex(toks)
     toks = rewriteSimpleCalls(toks)
     toks = rewriteConvert(toks)
     toks = rewriteDateAddDiff(toks)
+    toks = rewriteDateParts(toks)
     toks = rewriteToChar(toks)
     toks = rewriteToDateTs(toks)
     toks = rewriteCreateLike(toks)
@@ -118,6 +124,12 @@ object RedshiftSql {
       else t
     }
 
+  /** The header of a `CREATE [modifiers] TABLE` statement; None for any
+    * other statement, or when no plain name follows (left to Spark). */
+  private def anyCreateTable(toks: Vector[Tok]): Option[CreateHeader] =
+    try createHeader(toks, "table", _ => true)
+    catch { case _: IllegalArgumentException => None }
+
   /** CREATE TABLE physical-layout attributes (Redshift DDL that Spark's
     * parser rejects outright). DISTKEY → bucket column, SORTKEY → in-bucket
     * sort, fixed 32 buckets (bucket count is a Spark-side choice; Redshift
@@ -127,32 +139,12 @@ object RedshiftSql {
     * a type to have been seen first.
     */
   private def rewriteTableAttrs(toks: Vector[Tok]): Vector[Tok] = {
-    val first = nextCode(toks, 0)
-    if (first >= toks.length || !toks(first).isWord("create")) return toks
-    // CREATE [LOCAL|TEMP|TEMPORARY|EXTERNAL …] TABLE
-    var w = nextCode(toks, first + 1)
-    var sawTable = false
-    var guard = 0
-    while (w < toks.length && toks(w).kind == Word && guard < 4 && !sawTable) {
-      if (toks(w).isWord("table")) sawTable = true
-      else { w = nextCode(toks, w + 1); guard += 1 }
-    }
-    if (!sawTable) return toks
     // attrs can only appear after the table name — a table literally NAMED
-    // `distkey`/`backup` must not trigger the attr branches. Skip an
-    // IF NOT EXISTS prefix first, or qualifiedName would take `IF` as the
-    // name and leave the real name inside the attr-scan range.
-    var nameAt = nextCode(toks, w + 1)
-    if (nameAt < toks.length && toks(nameAt).isWord("if")) {
-      val not = nextCode(toks, nameAt + 1)
-      val exists = if (not < toks.length) nextCode(toks, not + 1) else toks.length
-      if (not < toks.length && toks(not).isWord("not") &&
-          exists < toks.length && toks(exists).isWord("exists"))
-        nameAt = nextCode(toks, exists + 1)
+    // `distkey`/`backup` must not trigger the attr branches
+    val afterName = anyCreateTable(toks) match {
+      case Some(h) => h.afterName
+      case None => return toks
     }
-    val afterName =
-      try qualifiedName(toks, nameAt)._2
-      catch { case _: IllegalArgumentException => return toks }
 
     def ident(t: Tok): String = t.kind match {
       case QIdent => t.text.stripPrefix("\"").stripSuffix("\"")
@@ -169,6 +161,8 @@ object RedshiftSql {
     val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
     var insertAt = -1   // out-index for the bucket clause (table-level attrs)
     var colListEnd = -1 // out-index just after the column list's ')'
+    // its own depth count: the column list's depth-1 commas and per-column
+    // token counts drive the state below, which a depth-0 scan cannot see
     var depth = 0
     var seenFirstGroup = false
     var inColList = false
@@ -246,18 +240,9 @@ object RedshiftSql {
         // table-level constraint list item — Redshift documents PK/FK/UNIQUE
         // as informational-only (never enforced), so dropping them preserves
         // Redshift behavior exactly. Swallow the item and one comma.
-        var j = i
-        var d2 = 0
-        var stop = false
-        while (j < toks.length && !stop) {
-          val tj = toks(j)
-          if (tj.kind == Sym && tj.text == "(") d2 += 1
-          else if (tj.kind == Sym && tj.text == ")") {
-            if (d2 == 0) stop = true else d2 -= 1
-          } else if (d2 == 0 && tj.kind == Sym && tj.text == ",") stop = true
-          if (!stop) j += 1
-        }
-        if (j < toks.length && toks(j).kind == Sym && toks(j).text == ",") i = j + 1
+        val j = topLevel(toks, i).find(j => isSym(toks(j), ",") || isSym(toks(j), ")"))
+          .getOrElse(toks.length)
+        if (j < toks.length && isSym(toks(j), ",")) i = j + 1
         else {
           // last item: also drop the comma that preceded it
           while (out.nonEmpty && (out.last.kind == Ws || out.last.kind == Comment))
@@ -312,35 +297,15 @@ object RedshiftSql {
     * caught by Spark's recursion depth limit instead of looping forever.
     */
   private def rewriteConnectBy(toks: Vector[Tok]): Vector[Tok] = {
-    // locate CONNECT BY at paren depth 0
-    var depth = 0
-    var cb = -1
-    var i = 0
-    while (i < toks.length && cb < 0) {
-      val t = toks(i)
-      if (t.kind == Sym && t.text == "(") depth += 1
-      else if (t.kind == Sym && t.text == ")") depth -= 1
-      else if (depth == 0 && t.isWord("connect")) {
+    def findWord(w: String, from: Int, until: Int): Int =
+      topLevel(toks, from, until).find(toks(_).isWord(w)).getOrElse(-1)
+    val cb = topLevel(toks, 0).find { i =>
+      toks(i).isWord("connect") && {
         val by = nextCode(toks, i + 1)
-        if (by < toks.length && toks(by).isWord("by")) cb = i
+        by < toks.length && toks(by).isWord("by")
       }
-      i += 1
-    }
+    }.getOrElse(-1)
     if (cb < 0) return toks
-
-    def findWord(w: String, from: Int, until: Int): Int = {
-      var d = 0
-      var j = from
-      var found = -1
-      while (j < until && found < 0) {
-        val t = toks(j)
-        if (t.kind == Sym && t.text == "(") d += 1
-        else if (t.kind == Sym && t.text == ")") d -= 1
-        else if (d == 0 && t.isWord(w)) found = j
-        j += 1
-      }
-      found
-    }
     val sel = findWord("select", 0, cb)
     val from = findWord("from", sel.max(0), cb)
     require(sel >= 0 && from >= 0, "CONNECT BY needs SELECT … FROM …")
@@ -412,10 +377,11 @@ object RedshiftSql {
     * QUALIFY filter.
     */
   private def rewriteQualify(toks: Vector[Tok]): Vector[Tok] = {
-    // locate the first QUALIFY with a SELECT at the same paren depth
+    // locate the first QUALIFY with a SELECT at the same paren depth; its
+    // own depth count, since it maps every depth to its latest SELECT
     var depth = 0
     val selectAt = scala.collection.mutable.Map.empty[Int, Int]
-    var q = -1; var qDepth = -1; var qSelect = -1
+    var q = -1; var qSelect = -1
     var i = 0
     while (i < toks.length && q < 0) {
       val t = toks(i)
@@ -424,34 +390,15 @@ object RedshiftSql {
       else if (t.isWord("select")) selectAt(depth) = i
       else if (t.isWord("qualify") && selectAt.contains(depth) &&
         nextCode(toks, i + 1) < toks.length) {
-        q = i; qDepth = depth; qSelect = selectAt(depth)
+        q = i; qSelect = selectAt(depth)
       }
       i += 1
     }
     if (q < 0) return toks
-    // block end: the ')'/';'/set-op that closes the SELECT's own block
-    var end = toks.length
-    var tailStart = -1
-    var d = qDepth
-    var j = q + 1
-    var found = false
-    while (j < toks.length && !found) {
-      val t = toks(j)
-      if (t.kind == Sym && t.text == "(") d += 1
-      else if (t.kind == Sym && t.text == ")") {
-        if (d == qDepth) { end = j; found = true } else d -= 1
-      } else if (d == qDepth && t.kind == Sym && t.text == ";") {
-        end = j; found = true
-      } else if (d == qDepth && t.kind == Word &&
-        blockEnders.contains(t.text.toLowerCase)) {
-        end = j; found = true
-      } else if (d == qDepth && tailStart < 0 && t.kind == Word &&
-        (t.isWord("order") || t.isWord("limit") || t.isWord("offset"))) {
-        tailStart = j
-      }
-      j += 1
-    }
-    if (tailStart < 0) tailStart = end
+    val end = blockEnd(toks, q + 1)
+    val tailStart = topLevel(toks, q + 1, end).find { j =>
+      toks(j).isWord("order") || toks(j).isWord("limit") || toks(j).isWord("offset")
+    }.getOrElse(end)
 
     // pull each `f(args) OVER (…)` out of the predicate into a helper column
     val pred = toks.slice(q + 1, tailStart).toBuffer
@@ -501,14 +448,7 @@ object RedshiftSql {
     val outerDistinct = distIdx < inner.length && inner(distIdx).isWord("distinct")
     if (outerDistinct) inner = inner.patch(distIdx, Nil, 1)
     if (nHelpers > 0) {
-      var fd = 0; var f = 0; var fromIdx = -1
-      while (f < inner.length && fromIdx < 0) {
-        val t = inner(f)
-        if (t.kind == Sym && t.text == "(") fd += 1
-        else if (t.kind == Sym && t.text == ")") fd -= 1
-        else if (fd == 0 && t.isWord("from")) fromIdx = f
-        f += 1
-      }
+      val fromIdx = topLevel(inner, 0).find(inner(_).isWord("from")).getOrElse(-1)
       require(fromIdx >= 0, "QUALIFY needs a FROM clause to hoist into")
       inner = inner.patch(fromIdx,
         tokenize(s", ${helpers.result().mkString(", ")} "), 0)
@@ -530,7 +470,6 @@ object RedshiftSql {
   // SELECT TOP n … → SELECT … LIMIT n. The LIMIT lands at the end of the
   // SELECT's own block: before the ')' that closes it, or before a
   // top-level set-op keyword, or at end of statement.
-  private val blockEnders = Set("union", "intersect", "except", "minus")
   private def rewriteTop(toks: Vector[Tok]): Vector[Tok] = {
     val sel = toks.indices.find { i =>
       toks(i).isWord("select") && {
@@ -550,26 +489,8 @@ object RedshiftSql {
         // drop TOP + n (and the whitespace on both sides of them)
         val dropTo = if (v + 1 < toks.length && toks(v + 1).kind == Ws) v + 1 else v
         val without = toks.patch(t, Nil, dropTo - t + 1)
-        // find insertion point scanning from the SELECT
-        var depth = 0
-        var j = i
-        var end = without.length
-        var found = false
-        while (j < without.length && !found) {
-          val tk = without(j)
-          if (tk.kind == Sym && tk.text == "(") depth += 1
-          else if (tk.kind == Sym && tk.text == ")") {
-            if (depth == 0) { end = j; found = true } else depth -= 1
-          } else if (tk.kind == Sym && tk.text == ";" && depth == 0) {
-            end = j; found = true
-          } else if (tk.kind == Word && depth == 0 &&
-            blockEnders.contains(tk.text.toLowerCase) && j > i) {
-            end = j; found = true
-          }
-          j += 1
-        }
         // trim trailing whitespace before the insertion point
-        var e = end
+        var e = blockEnd(without, i)
         while (e > 0 && without(e - 1).kind == Ws) e -= 1
         val inserted = without.patch(e,
           Vector(Tok(Ws, " "), Tok(Word, "LIMIT"), Tok(Ws, " "), Tok(Num, limit)), 0)
@@ -612,16 +533,7 @@ object RedshiftSql {
   private def rewriteSelectInto(toks: Vector[Tok]): Vector[Tok] = {
     val first = nextCode(toks, 0)
     if (first >= toks.length || !toks(first).isWord("select")) return toks
-    var depth = 0
-    var into = -1
-    var i = first
-    while (i < toks.length && into < 0) {
-      val t = toks(i)
-      if (t.kind == Sym && t.text == "(") depth += 1
-      else if (t.kind == Sym && t.text == ")") depth -= 1
-      else if (depth == 0 && t.isWord("into")) into = i
-      i += 1
-    }
+    val into = topLevel(toks, first).find(toks(_).isWord("into")).getOrElse(-1)
     if (into < 0) return toks
     var j = nextCode(toks, into + 1)
     val temp = j < toks.length &&
@@ -716,6 +628,34 @@ object RedshiftSql {
         val win = render(toks.slice(w + 1, we))
         val repl = Tok(Word, s"(($x) / sum($x) OVER ($win))")
         rewriteRatioToReport(toks.patch(i, Vector(repl), we - i + 1))
+    }
+  }
+
+  // FIRST_VALUE/LAST_VALUE(x IGNORE|RESPECT NULLS) OVER (w) — Redshift's
+  // documented form — → FIRST_VALUE/LAST_VALUE(x) IGNORE|RESPECT NULLS OVER
+  // (w), where Spark's parser takes the modifier. Runs after QUALIFY, which
+  // finds a window call by the `)` just before its OVER.
+  private def rewriteNullsModifier(toks: Vector[Tok]): Vector[Tok] = {
+    // (IGNORE|RESPECT, NULLS, the call's ')') when the call at `i` ends so
+    def modifier(i: Int): Option[(Int, Int, Int)] = {
+      if (!toks(i).isWord("first_value") && !toks(i).isWord("last_value")) return None
+      val p = nextCode(toks, i + 1)
+      if (p >= toks.length || !isSym(toks(p), "(")) return None
+      val pe = matchParen(toks, p)
+      topLevel(toks, p + 1, pe).filter(j => toks(j).kind != Ws && toks(j).kind != Comment)
+        .toVector.takeRight(2) match {
+        case Seq(m, n) if (toks(m).isWord("ignore") || toks(m).isWord("respect")) &&
+            toks(n).isWord("nulls") => Some((m, n, pe))
+        case _ => None
+      }
+    }
+    toks.indices.iterator.map(modifier).collectFirst { case Some(h) => h } match {
+      case None => toks
+      case Some((m, n, pe)) =>
+        var s = m
+        while (s > 0 && toks(s - 1).kind == Ws) s -= 1
+        rewriteNullsModifier(toks.take(s) ++ Vector(toks(pe), Tok(Ws, " ")) ++
+          toks.slice(m, n + 1) ++ toks.drop(pe + 1))
     }
   }
 
@@ -946,6 +886,48 @@ object RedshiftSql {
     }
   }
 
+  // DATE_PART/DATEPART(part, x) with a bare part (Redshift's usual form;
+  // Spark reads a bare word there as a column) → the quoted canonical part
+  // from unitAliases. The day-of-week parts in EXTRACT/DATE_PART/DATEPART
+  // → (extract(DAYOFWEEK FROM x) - 1): Redshift numbers Sunday 0, Spark 1.
+  // `from` is where the scan resumes, past the DAYOFWEEK a rewrite emitted.
+  private val dowParts = Set("dow", "dw", "weekday", "dayofweek")
+  private def rewriteDateParts(toks: Vector[Tok], from: Int = 0): Vector[Tok] = {
+    val hit = (from until toks.length).find { i =>
+      (toks(i).isWord("extract") || toks(i).isWord("date_part") || toks(i).isWord("datepart")) && {
+        val p = nextCode(toks, i + 1)
+        p < toks.length && isSym(toks(p), "(")
+      }
+    }
+    hit match {
+      case None => toks
+      case Some(i) =>
+        val p = nextCode(toks, i + 1)
+        val pe = matchParen(toks, p)
+        val u = nextCode(toks, p + 1)
+        val extract = toks(i).isWord("extract")
+        // the operand follows EXTRACT's FROM, or DATE_PART's one comma
+        val sep =
+          if (extract) topLevel(toks, u, pe).find(toks(_).isWord("from"))
+          else Some(topCommas(toks, p, pe)).collect { case Seq(c) => c }
+        val part = toks(u).kind match {
+          case Word => Some(toks(u).text.toLowerCase)
+          case Str if !extract => Some(toks(u).text.stripPrefix("'").stripSuffix("'").toLowerCase)
+          case _ => None
+        }
+        (sep, part) match {
+          case (Some(c), Some(pt)) if dowParts(pt) =>
+            val head = tokenize("(extract(DAYOFWEEK FROM ")
+            rewriteDateParts(toks.take(i) ++ head ++ toks.slice(nextCode(toks, c + 1), pe) ++
+              tokenize(") - 1)") ++ toks.drop(pe + 1), i + head.length)
+          case (Some(_), Some(pt)) if !extract && toks(u).kind == Word =>
+            val canon = unitAliases.getOrElse(pt, toks(u).text)
+            rewriteDateParts(toks.updated(u, Tok(Str, s"'$canon'")), u + 1)
+          case _ => rewriteDateParts(toks, i + 1)
+        }
+    }
+  }
+
   // TO_CHAR(ts, 'YYYY-MM-DD') → date_format(ts, 'yyyy-MM-dd') — only when
   // the format literal contains date tokens (numeric TO_CHAR is native).
   private val dateTokens: Seq[(String, String)] = Seq(
@@ -1135,24 +1117,10 @@ object RedshiftSql {
     * Spark counterpart — Spark copies the full source schema either way).
     */
   private def rewriteCreateLike(toks: Vector[Tok]): Vector[Tok] = {
-    val first = nextCode(toks, 0)
-    if (first >= toks.length || !toks(first).isWord("create")) return toks
-    var w = nextCode(toks, first + 1)
-    var guard = 0
-    while (w < toks.length && toks(w).kind == Word && guard < 4 &&
-        !toks(w).isWord("table")) { w = nextCode(toks, w + 1); guard += 1 }
-    if (w >= toks.length || !toks(w).isWord("table")) return toks
-    var nameAt = nextCode(toks, w + 1)
-    if (nameAt < toks.length && toks(nameAt).isWord("if")) {
-      val not = nextCode(toks, nameAt + 1)
-      val exists = if (not < toks.length) nextCode(toks, not + 1) else toks.length
-      if (not < toks.length && toks(not).isWord("not") &&
-          exists < toks.length && toks(exists).isWord("exists"))
-        nameAt = nextCode(toks, exists + 1)
+    val afterName = anyCreateTable(toks) match {
+      case Some(h) => h.afterName
+      case None => return toks
     }
-    val afterName =
-      try qualifiedName(toks, nameAt)._2
-      catch { case _: IllegalArgumentException => return toks }
     val open = nextCode(toks, afterName)
     if (open >= toks.length || toks(open).text != "(") return toks
     val like = nextCode(toks, open + 1)

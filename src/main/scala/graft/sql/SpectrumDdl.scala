@@ -67,41 +67,20 @@ object SpectrumDdl {
     (sb.toString, i)
   }
 
-  /** Matches `CREATE EXTERNAL <kw>` and returns the index of the token
-    * after `<kw>`; -1 when the statement is something else. */
-  private def afterCreateExternal(toks: Vector[Tok], kw: String): Int = {
-    val c = nextCode(toks, 0)
-    if (c >= toks.length || !toks(c).isWord("create")) return -1
-    val e = nextCode(toks, c + 1)
-    if (e >= toks.length || !toks(e).isWord("external")) return -1
-    val k = nextCode(toks, e + 1)
-    if (k >= toks.length || !toks(k).isWord(kw)) return -1
-    k + 1
-  }
+  /** The header of `CREATE EXTERNAL <kind> [IF NOT EXISTS] <name>`, the
+    * name in its Spark rendering; None when the statement is something
+    * else. */
+  private def createExternal(toks: Vector[Tok], kind: String): Option[CreateHeader] =
+    createHeader(toks, kind, _ == Seq("external"), sparkName)
 
-  /** Consumes an `IF NOT EXISTS` at `from` if present; returns
-    * (clause-or-empty, index after it). */
-  private def ifNotExists(toks: Vector[Tok], from: Int): (String, Int) = {
-    val i = nextCode(toks, from)
-    if (i < toks.length && toks(i).isWord("if")) {
-      val n = nextCode(toks, i + 1)
-      val e = if (n < toks.length) nextCode(toks, n + 1) else toks.length
-      if (n < toks.length && toks(n).isWord("not") &&
-          e < toks.length && toks(e).isWord("exists"))
-        return ("IF NOT EXISTS ", e + 1)
-    }
-    ("", from)
-  }
+  private def ifNotExistsClause(h: CreateHeader): String =
+    if (h.ifNotExists) "IF NOT EXISTS " else ""
 
-  def rewriteExternalSchema(toks: Vector[Tok]): Vector[Tok] = {
-    val after = afterCreateExternal(toks, "schema")
-    if (after < 0) return toks
-    val (ine, nameAt) = ifNotExists(toks, after)
-    val (name, _) = sparkName(toks, nameAt)
+  def rewriteExternalSchema(toks: Vector[Tok]): Vector[Tok] =
     // FROM DATA CATALOG / HIVE METASTORE / … — remote-catalog plumbing with
     // no local counterpart; the schema itself is what queries resolve on
-    tokenize(s"CREATE SCHEMA $ine$name")
-  }
+    createExternal(toks, "schema").fold(toks)(h =>
+      tokenize(s"CREATE SCHEMA ${ifNotExistsClause(h)}${h.name}"))
 
   private val formatMap = Map(
     "parquet" -> "PARQUET", "textfile" -> "CSV", "orc" -> "ORC", "json" -> "JSON")
@@ -154,10 +133,11 @@ object SpectrumDdl {
   }
 
   def rewriteExternalTable(toks: Vector[Tok]): Vector[Tok] = {
-    val after = afterCreateExternal(toks, "table")
-    if (after < 0) return toks
-    val (ine, nameAt) = ifNotExists(toks, after)
-    val (name, afterName) = sparkName(toks, nameAt)
+    val head = createExternal(toks, "table") match {
+      case Some(h) => h
+      case None => return toks
+    }
+    val (name, afterName) = (head.name, head.afterName)
     val open = nextCode(toks, afterName)
     require(open < toks.length && toks(open).kind == Sym && toks(open).text == "(",
       s"CREATE EXTERNAL TABLE $name: expected a column list")
@@ -302,7 +282,8 @@ object SpectrumDdl {
     val tblProps =
       if (props.isEmpty) "" else s" TBLPROPERTIES (${props.mkString(", ")})"
     tokenize(
-      s"CREATE TABLE $ine$name ($allCols) USING $format$options$partitioned " +
+      s"CREATE TABLE ${ifNotExistsClause(head)}$name ($allCols) " +
+        s"USING $format$options$partitioned " +
         s"LOCATION $loc$tblProps")
   }
 }

@@ -208,14 +208,84 @@ object SqlTokens {
     (sb.toString, i)
   }
 
-  /** Indices of depth-1 commas between a '(' at `open` and its match. */
-  def topCommas(toks: Vector[Tok], open: Int, close: Int): Seq[Int] = {
-    var depth = 0
-    (open to close).filter { i =>
-      val t = toks(i)
-      if (t.kind == Sym && t.text == "(") { depth += 1; false }
-      else if (t.kind == Sym && t.text == ")") { depth -= 1; false }
-      else t.kind == Sym && t.text == "," && depth == 1
+  /** Indices in `[from, until)` of the tokens at paren depth 0 relative to
+    * `from` — the one depth rule every clause scan uses. A `(` is yielded
+    * and its span skipped through the matching `)`; a `)` with no open `(`
+    * closes the enclosing block and is the last index yielded; an unclosed
+    * `(` hides the rest. Depth counts `(`/`)` Sym tokens only: string
+    * literals, quoted identifiers and comments are single tokens, so a
+    * paren inside one never counts. */
+  def topLevel(toks: Vector[Tok], from: Int, until: Int = Int.MaxValue): Iterator[Int] =
+    new Iterator[Int] {
+      private val end = math.min(until, toks.length)
+      private var i = from // the next index to yield
+      def hasNext: Boolean = i < end
+      def next(): Int = {
+        val at = i
+        i = at + 1
+        if (isSym(toks(at), ")")) i = end
+        else if (isSym(toks(at), "(")) {
+          var depth = 1
+          while (i < end && depth > 0) {
+            if (isSym(toks(i), "(")) depth += 1
+            else if (isSym(toks(i), ")")) depth -= 1
+            i += 1
+          }
+        }
+        at
+      }
     }
+
+  def isSym(t: Tok, s: String): Boolean = t.kind == Sym && t.text == s
+
+  private val setOps = Set("union", "intersect", "except", "minus")
+
+  /** End of the SELECT block starting at `from`: the `)` that closes it, a
+    * depth-0 `;` or set operator, or the end of the tokens. */
+  def blockEnd(toks: Vector[Tok], from: Int): Int =
+    topLevel(toks, from).find { j =>
+      val t = toks(j)
+      isSym(t, ")") || isSym(t, ";") || (t.kind == Word && setOps.contains(t.text.toLowerCase))
+    }.getOrElse(toks.length)
+
+  /** Indices of depth-1 commas between a '(' at `open` and its match. */
+  def topCommas(toks: Vector[Tok], open: Int, close: Int): Seq[Int] =
+    topLevel(toks, open + 1, close).filter(i => isSym(toks(i), ",")).toVector
+
+  /** The index just past an `IF NOT EXISTS` starting at the first code
+    * token at or after `from`; -1 when there is none. */
+  private def ifNotExists(toks: Vector[Tok], from: Int): Int = {
+    val i = nextCode(toks, from)
+    val n = if (i < toks.length && toks(i).isWord("if")) nextCode(toks, i + 1) else toks.length
+    val e = if (n < toks.length && toks(n).isWord("not")) nextCode(toks, n + 1) else toks.length
+    if (e < toks.length && toks(e).isWord("exists")) e + 1 else -1
+  }
+
+  /** A parsed `CREATE [modifier…] <kind> [IF NOT EXISTS] <name>` header:
+    * the modifier words' indices, the name as `nameOf` rendered it and the
+    * index after it. */
+  final case class CreateHeader(modifiers: Vector[Int], ifNotExists: Boolean,
+                                name: String, afterName: Int)
+
+  /** Parses the header of a `CREATE … <kind>` statement. Up to four
+    * modifier words (LOCAL, TEMP, EXTERNAL, …) may precede `kind`; None
+    * when the statement does not begin that way or `accept` rejects the
+    * lower-cased modifiers. A missing name raises from `nameOf`. */
+  def createHeader(toks: Vector[Tok], kind: String, accept: Seq[String] => Boolean,
+                   nameOf: (Vector[Tok], Int) => (String, Int) = qualifiedName)
+      : Option[CreateHeader] = {
+    val c = nextCode(toks, 0)
+    if (c >= toks.length || !toks(c).isWord("create")) return None
+    var modifiers = Vector.empty[Int]
+    var w = nextCode(toks, c + 1)
+    while (w < toks.length && toks(w).kind == Word && modifiers.length < 4 &&
+        !toks(w).isWord(kind)) {
+      modifiers :+= w; w = nextCode(toks, w + 1)
+    }
+    if (w >= toks.length || !toks(w).isWord(kind) ||
+        !accept(modifiers.map(toks(_).text.toLowerCase))) return None
+    val ine = ifNotExists(toks, w + 1)
+    val (name, afterName) = nameOf(toks, if (ine >= 0) ine else w + 1)
+    Some(CreateHeader(modifiers, ine >= 0, name, afterName))
   }
 }

@@ -478,27 +478,6 @@ object StreamingOps {
            |  as int) as keep""".stripMargin)
   }
 
-  /** Streaming heavy hitters — the online half of
-    * [[graft.ops.SketchOps.heavyHitters]], same share-threshold contract:
-    * the capacity-k Misra-Gries summary runs as a streaming aggregation,
-    * so each micro-batch folds its tokens into map-side partial summaries
-    * that merge into the ONE state-store buffer with the PODS'12 offset
-    * rule — the state is O(k) forever, regardless of stream length, and
-    * the total token count `n` rides in the same buffer (no second
-    * pass, mirroring the batch op).
-    *
-    * What a stream CAN'T do is the batch op's exact rescore — that pass
-    * re-reads the corpus, and the stream's history is gone. The output is
-    * instead the guaranteed-candidate form every streaming HH system
-    * settles for: each emitted token carries its MG count `cnt_lo` and
-    * `cnt_hi = cnt_lo + ⌊n/(k+1)⌋` with true count ∈ [cnt_lo, cnt_hi],
-    * and the emitted set is a SUPERSET of the tokens with true share ≥
-    * `minShare` (k+1 > 1/share makes a miss impossible — the same
-    * capacity guarantee the batch op relies on for its candidate pass).
-    * Downstream exactness, where needed, is a batch rescore over the
-    * archived corpus — the lambda shape every production HH pipeline
-    * uses. Run with Complete/Update output (global aggregate).
-    */
   /** Streaming KMV distinct-count sketch — the online half of
     * [[graft.ops.SketchOps.kmvDistinct]]: per group, the k smallest
     * DISTINCT md5-h60 hashes of the value accumulate as a typed
@@ -605,11 +584,7 @@ object StreamingOps {
                      depth: Int = 4, width: Int = 64): DataFrame = {
     require(depth >= 1 && width >= 2,
       s"countMin needs depth >= 1, width >= 2; got $depth x $width")
-    df.selectExpr(s"cast(($valueExpr) as string) as v")
-      .selectExpr(s"""explode(transform(sequence(0, ${depth - 1}), j ->
-        |  struct(j, pmod(${graft.ops.TextOps.h60(s"concat(cast(j as string), ':', v)")}, $width) as b))) as e""".stripMargin)
-      .selectExpr("e.j as j", "e.b as b")
-      .groupBy("j", "b").agg(count(lit(1)).as("c"))
+    graft.ops.SketchOps.cmSketch(df, valueExpr, depth, width)
   }
 
   /** Streaming fixed-grid histogram — the online half of
@@ -624,12 +599,7 @@ object StreamingOps {
   def quantileHistStream(df: DataFrame, groupCol: String, valueExpr: String,
                          lo: Double, hi: Double, nb: Int): DataFrame = {
     require(hi > lo && nb > 0, s"quantileHist needs hi > lo, nb > 0; got [$lo,$hi)/$nb")
-    val loD = s"cast($lo as double)"
-    val step = s"((cast($hi as double)) - ($loD)) / $nb"
-    df.selectExpr(s"$groupCol as grp", s"cast($valueExpr as double) as v")
-      .selectExpr("grp",
-        s"least(greatest(cast(floor((v - ($loD)) / ($step)) as bigint), 0), ${nb - 1}) as bucket")
-      .groupBy("grp", "bucket").agg(count(lit(1)).as("c"))
+    graft.ops.SketchOps.histBuckets(df, groupCol, valueExpr, lo, hi, nb)
   }
 
   /** Streaming t-digest quantiles — the online half of
@@ -710,6 +680,27 @@ object StreamingOps {
     // so a tie/null-handling tweak can never silently split the twins
     graft.ops.SlidingOps.frameBlocks(df, key, vCol, sumExpr)
 
+  /** Streaming heavy hitters — the online half of
+    * [[graft.ops.SketchOps.heavyHitters]], same share-threshold contract:
+    * the capacity-k Misra-Gries summary runs as a streaming aggregation,
+    * so each micro-batch folds its tokens into map-side partial summaries
+    * that merge into the ONE state-store buffer with the PODS'12 offset
+    * rule — the state is O(k) forever, regardless of stream length, and
+    * the total token count `n` rides in the same buffer (no second
+    * pass, mirroring the batch op).
+    *
+    * What a stream CAN'T do is the batch op's exact rescore — that pass
+    * re-reads the corpus, and the stream's history is gone. The output is
+    * instead the guaranteed-candidate form every streaming HH system
+    * settles for: each emitted token carries its MG count `cnt_lo` and
+    * `cnt_hi = cnt_lo + ⌊n/(k+1)⌋` with true count ∈ [cnt_lo, cnt_hi],
+    * and the emitted set is a SUPERSET of the tokens with true share ≥
+    * `minShare` (k+1 > 1/share makes a miss impossible — the same
+    * capacity guarantee the batch op relies on for its candidate pass).
+    * Downstream exactness, where needed, is a batch rescore over the
+    * archived corpus — the lambda shape every production HH pipeline
+    * uses. Run with Complete/Update output (global aggregate).
+    */
   def heavyHittersStream(docs: DataFrame, minShare: Double,
                          k0: Int = 0): DataFrame = {
     require(minShare > 0 && minShare < 1, s"minShare in (0,1), got $minShare")

@@ -327,4 +327,43 @@ class BlueprintSpec extends SparkSpecBase {
     assert(parallel.contains("NA") && parallel.contains("\"1\""), parallel)
     assert(Files.readString(out.resolve("one.csv")) === parallel)
   }
+
+  test("ExecuteSql --schema runs a local script in that schema and restores the current one") {
+    import graft.cli.ExecuteSql
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val before = spark.catalog.currentDatabase
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS es_local")
+    spark.sql("DROP TABLE IF EXISTS es_local.es_t")
+    try {
+      ExecuteSql.main(Array("--query", "CREATE TABLE es_t (id INT); INSERT INTO es_t VALUES (1)",
+        "--schema", "es_local"))
+      assert(spark.table("es_local.es_t").count() === 1)
+      assert(spark.catalog.currentDatabase === before)
+      val e = intercept[IllegalArgumentException](
+        ExecuteSql.main(Array("--query", "SELECT 1", "--schema", "es_missing")))
+      assert(e.getMessage.contains("--schema"), e.getMessage)
+      assert(spark.catalog.currentDatabase === before)
+    } finally {
+      spark.sparkContext.setLogLevel("ERROR") // the CLIs set WARN
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+    }
+  }
+
+  test("ExecuteSql --schema sets the JDBC connection's schema") {
+    import graft.cli.ExecuteSql
+    System.setProperty("derby.stream.error.file", "/tmp/graft_derby.log")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val conn = Array("--db-connection-url", "jdbc:derby:memory:graftes1",
+      "--url-parameters", "create=true")
+    try {
+      ExecuteSql.main(Array("--query", """CREATE SCHEMA "es_s"""") ++ conn)
+      ExecuteSql.main(Array("--query", "CREATE TABLE es_t (id INT)", "--schema", "es_s") ++ conn)
+      StoreQueryResults.main(Array("--query", """SELECT COUNT(*) AS "n" FROM "es_s".es_t""",
+        "--destination-file-name", s"$tmp/es/out.csv") ++ conn)
+      assert(Files.readAllLines(Paths.get(s"$tmp/es/out.csv")).get(1) === "0")
+    } finally {
+      spark.sparkContext.setLogLevel("ERROR")
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+    }
+  }
 }

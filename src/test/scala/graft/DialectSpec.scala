@@ -2407,4 +2407,117 @@ class DialectSpec extends SparkSpecBase {
     assert(Files.readAllLines(out).size === 3)
     spark.sql("DROP TABLE cur_shim")
   }
+
+  test("depth-0 scan: nested and quoted parens, an unmatched ')', the until bound, blockEnd") {
+    import graft.sql.SqlTokens._
+    def top(s: String, from: Int = 0, until: Int = Int.MaxValue): Seq[String] = {
+      val toks = tokenize(s)
+      topLevel(toks, from, until).map(toks(_)).filter(_.kind != Ws).map(_.text).toSeq
+    }
+    // a '(' is yielded and its span skipped, however deep; an unclosed one
+    // hides the rest
+    assert(top("a (b (c) d) e") === Seq("a", "(", "e"))
+    assert(top("a (b c") === Seq("a", "("))
+    // a paren inside a string literal or a comment is not a paren
+    assert(top("a '(' b /* ( */ c -- (\nd") ===
+      Seq("a", "'('", "b", "/* ( */", "c", "-- (", "d"))
+    // a ')' with no open '(' closes the enclosing block: yielded, then the end
+    assert(top("a) b (c") === Seq("a", ")"))
+    assert(top("(x, (y), z) w", from = 1) === Seq("x", ",", "(", ",", "z", ")"))
+    // `until` is exclusive
+    assert(top("a b c", until = 2) === Seq("a"))
+    assert(topCommas(tokenize("(x, f(y, z), w)"), 0, 14) === Seq(2, 11))
+
+    def end(s: String): String = {
+      val toks = tokenize(s)
+      val e = blockEnd(toks, 0)
+      if (e == toks.length) "<end>" else render(toks.drop(e))
+    }
+    assert(end("SELECT a FROM (SELECT b FROM t) s) x") === ") x")
+    assert(end("SELECT a FROM t WHERE b IN (1, 2); SELECT c") === "; SELECT c")
+    Seq("UNION", "intersect", "EXCEPT", "Minus").foreach { op =>
+      assert(end(s"SELECT a FROM (SELECT b FROM t $op SELECT c FROM u) s $op SELECT d") ===
+        s"$op SELECT d")
+    }
+    assert(end("SELECT a FROM t") === "<end>")
+  }
+
+  test("EXTRACT day-of-week parts count Sunday as 0, as Redshift does") {
+    // 2024-01-07 is a Sunday, 2024-01-13 a Saturday
+    val r = sql1("SELECT EXTRACT(DOW FROM DATE '2024-01-07') AS a, " +
+      "EXTRACT(dw FROM DATE '2024-01-13') * 10 AS b, " +
+      "EXTRACT(WEEKDAY FROM TIMESTAMP '2024-01-08 10:00:00') AS c, " +
+      "EXTRACT(dayofweek FROM DATE '2024-01-13') AS d")
+    assert((r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) === (0, 60, 1, 6))
+  }
+
+  test("DATE_PART and DATEPART day-of-week parts count Sunday as 0") {
+    val r = sql1("SELECT DATE_PART('dow', DATE '2024-01-13') AS a, " +
+      "datepart('weekday', DATE '2024-01-07') AS b, " +
+      "DATE_PART(dow, DATE '2024-01-13') AS c, DATEPART(dw, DATE '2024-01-08') AS d")
+    assert((r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) === (6, 0, 6, 1))
+  }
+
+  test("DATE_PART with a bare part resolves it through the Redshift unit aliases") {
+    assert(rewrite("SELECT DATE_PART(year, d), DATEPART(mon, d) FROM t") ===
+      "SELECT DATE_PART('YEAR', d), DATEPART('MONTH', d) FROM t")
+    val r = sql1("SELECT DATE_PART(year, DATE '2024-03-13') AS y, " +
+      "DATEPART(qtr, DATE '2024-03-13') AS q, DATE_PART(d, DATE '2024-03-13') AS dd, " +
+      "DATE_PART(h, TIMESTAMP '2024-03-13 10:20:30') AS hh, " +
+      "DATE_PART(doy, DATE '2024-03-13') AS doy")
+    assert((r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)) ===
+      (2024, 1, 13, 10, 73))
+  }
+
+  test("FIRST_VALUE/LAST_VALUE(x IGNORE|RESPECT NULLS) OVER moves the modifier after the call") {
+    assert(rewrite("SELECT LAST_VALUE(f(x) IGNORE NULLS) OVER (ORDER BY i) FROM t") ===
+      "SELECT LAST_VALUE(f(x)) IGNORE NULLS OVER (ORDER BY i) FROM t")
+    val rows = spark.sql(rewrite(
+      """SELECT i,
+        |  LAST_VALUE(x IGNORE NULLS) OVER (ORDER BY i
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS l,
+        |  FIRST_VALUE(x IGNORE NULLS) OVER (ORDER BY i
+        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS f,
+        |  FIRST_VALUE(x RESPECT NULLS) OVER (ORDER BY i
+        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS r
+        |FROM VALUES (1, 5), (2, NULL), (3, 7) AS t(i, x)
+        |ORDER BY i""".stripMargin)).collect()
+      .map(r => (r.getInt(1), r.getInt(2), Option(r.get(3))))
+    assert(rows.toSeq === Seq((5, 5, Some(5)), (5, 7, None), (7, 7, Some(7))))
+  }
+
+  test("CREATE TEMP TABLE IF NOT EXISTS is dropped with the run too") {
+    spark.sql("DROP TABLE IF EXISTS tt_ine")
+    graft.cli.ExecuteSql.run(spark, "CREATE TEMP TABLE IF NOT EXISTS tt_ine (a INT)", None)
+    assert(!spark.catalog.tableExists("tt_ine"))
+  }
+
+  test("CREATE TEMP TABLE over a taken name leaves the existing table and its rows") {
+    spark.sql("DROP TABLE IF EXISTS tt_kept")
+    spark.sql("CREATE TABLE tt_kept USING parquet AS SELECT 7 AS a")
+    try {
+      graft.cli.ExecuteSql.run(spark, "CREATE TEMP TABLE IF NOT EXISTS tt_kept (a INT)", None)
+      intercept[Exception](
+        graft.cli.ExecuteSql.run(spark, "CREATE TEMP TABLE tt_kept (a INT)", None))
+      assert(spark.table("tt_kept").collect().map(_.getInt(0)).toSeq === Seq(7))
+    } finally spark.sql("DROP TABLE IF EXISTS tt_kept")
+  }
+
+  test("a temp table is dropped from its own schema after SET search_path") {
+    val home = spark.catalog.currentDatabase
+    spark.sql("CREATE DATABASE IF NOT EXISTS tt_sp")
+    spark.sql(s"DROP TABLE IF EXISTS $home.tt_x")
+    spark.sql("DROP TABLE IF EXISTS tt_sp.tt_x")
+    spark.sql("CREATE TABLE tt_sp.tt_x USING parquet AS SELECT 7 AS a")
+    try {
+      graft.cli.ExecuteSql.run(spark,
+        "CREATE TEMP TABLE tt_x (a INT); SET search_path TO tt_sp", None)
+      assert(!spark.catalog.tableExists(s"$home.tt_x"))
+      assert(spark.table("tt_sp.tt_x").collect().map(_.getInt(0)).toSeq === Seq(7))
+    } finally {
+      spark.catalog.setCurrentDatabase(home)
+      spark.sql(s"DROP TABLE IF EXISTS $home.tt_x")
+      spark.sql("DROP DATABASE IF EXISTS tt_sp CASCADE")
+    }
+  }
 }

@@ -8,7 +8,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 /** Exact per-group percentiles via distributed sort + rank — the
   * bounded-memory scale path for MEDIAN / PERCENTILE_CONT / PERCENTILE_DISC
   * (SURVEY §2.3 q18/q25; the reference reaches them through the `--query`
-  * pass-through, `execute_sql.py:64,77`).
+  * pass-through, `execute_sql.py:64,77`). SQL text reaches it through
+  * [[graft.plans.ExactPercentileRule]], which plans those aggregates and
+  * whole-partition percentile windows onto [[rankedPass]]; DataFrame
+  * callers use [[sortedPercentiles]].
   *
   * Spark's exact `percentile`/`percentile_cont` aggregate buffers every
   * value of a group in executor memory (an ObjectHashAggregate over an
@@ -153,187 +156,78 @@ object PercentileOps {
   /** Per-`key` exact percentiles for `specs`, plus a trailing `n_rows`
     * count of ALL group rows (null values included — matching
     * `COUNT(*)` next to a percentile aggregate). Output columns:
-    * key, specs.map(_.out) in order, n_rows.
-    *
-    * `bracketAccuracy` (default 0 = off) enables GK-BRACKETED EXACT
-    * SELECTION — the scan-bound tier (VERDICT r17 #5). The default path
-    * ranks EVERY tie-collapsed (key, value) block through [[rangePrefix]],
-    * which for a near-unique value column shuffles the whole corpus three
-    * times just to read ~3 ranks per group. With bracketing, a first pass
-    * computes per-group counts and a Greenwald-Khanna sketch
-    * (`approx_percentile`, relative rank error ε = 1/bracketAccuracy),
-    * whose DETERMINISTIC error bound brackets every requested rank inside
-    * a narrow value window; a second pass tags each value as below-mass
-    * (−∞), in-window (itself), between-windows (the window-gap midpoint)
-    * or above-mass (+∞) and tie-collapses THAT — so the block table
-    * entering [[rangePrefix]] holds only ~4·ε·n ranks of real values per
-    * window plus three sentinel blocks, and no full-corpus shuffle exists
-    * anywhere. Results are BIT-IDENTICAL to the unbracketed path by
-    * construction, not by sketch accuracy: the sentinel masses restore
-    * every in-window block's exact global rank interval wherever the
-    * sketch bounds happen to fall, so the selected values (and the shared
-    * interpolation arithmetic) cannot depend on the sketch. Rank coverage
-    * is guaranteed: window quantile bounds sit 2ε outside each requested
-    * p, GK caps rank error at ε·n, and target ranks sit within 1 of p·n
-    * — so the window covers them whenever ε·n ≥ 4; groups smaller than
-    * 4·bracketAccuracy rows skip bracketing entirely (the tag degenerates
-    * to the identity, reproducing the unbracketed blocks). Degenerate
-    * sketch geometry is equally safe: overlapping windows make the gap
-    * branch unreachable, and a gap midpoint that rounds onto a window
-    * edge merges gap mass into an edge block whose extended rank interval
-    * contains no target rank (gaps sit strictly between per-spec
-    * coverage regions). ±Infinity and NaN data values are OUT OF CONTRACT
-    * on the bracketed path (they collide with the sentinels; the
-    * unbracketed path remains available for such data). Cost model at
-    * 100 TB: two O(n) scans + sketch memory O(bracketAccuracy) per task
-    * vs window volume ~ε·n per group — pick bracketAccuracy ~ √n to
-    * balance — PLUS the per-group stats table (O(#groups × window
-    * bounds)) that folds back onto the values: it carries no broadcast
-    * hint precisely so Spark shuffle-joins it when #groups is large and
-    * lets AQE promote it to a broadcast only when it measures small
-    * (ADVICE r18 — a forced broadcast here would exceed the driver
-    * budget at high key cardinality, where this tier matters most).
-    * AQE DEPENDENCY (ADVICE r19): with spark.sql.adaptive.enabled=false
-    * that promotion never happens and the fold-in is a full shuffle of
-    * the corpus-sized `vals` relation against the stats rows — the
-    * null-safe <=> join condition also rules out bucketed-join reuse —
-    * so every measured number below assumes AQE on (GraftSession's and
-    * stock Spark's default); non-AQE sessions should use the
-    * unbracketed path. MEASURED (r18, sf3 = 18M rows, local[32], warm, full q31
-    * shape): 13.4 s bracketed vs 12.4 s unbracketed — local parity, NOT
-    * a win, because an in-process shuffle of a 300 MB column costs ~as
-    * little as the GK sketch build; the tier exists for the
-    * network-bound regime (a real cluster shuffling the corpus three
-    * times vs re-scanning it twice), so no fixture-gated query routes
-    * through it by default. OpsSpec pins bracketed ≡ unbracketed
-    * bit-for-bit on both the fixture and a tie/small-group stress
-    * frame. */
-  def sortedPercentiles(df: DataFrame, key: String, specs: Seq[PSpec],
-                        bracketAccuracy: Int = 0): DataFrame = {
+    * key, specs.map(_.out) in order, n_rows. */
+  def sortedPercentiles(df: DataFrame, key: String, specs: Seq[PSpec]): DataFrame = {
     require(specs.nonEmpty, "sortedPercentiles needs at least one spec")
     require(specs.map(_.out).distinct.length == specs.length,
       "duplicate output column names")
     val nRows = df.groupBy(col(key)).agg(count(lit(1)).as("n_rows"))
-
-    // one tie-collapsed ranked pass per distinct value column (each needs
-    // its own order); keep spec order for the final projection
-    val perCol: Seq[DataFrame] = specs.groupBy(_.valueCol).toSeq.map {
-      case (vc, colSpecs) =>
-        val vals = df
-          .filter(col(vc).isNotNull)
-          .select(col(key), col(vc).cast(DoubleType).as("__v"))
-        val blocks =
-          if (bracketAccuracy <= 0)
-            vals.groupBy(col(key), col("__v")).agg(count(lit(1)).as("__cnt"))
-          else {
-            val eps = 1.0 / bracketAccuracy
-            // per-spec quantile windows [p−2ε, p+2ε], sorted and merged
-            // when overlapping (GK monotonicity then keeps the bracket
-            // value array non-decreasing window to window)
-            val wins = colSpecs.map(s =>
-                (math.max(0.0, s.p - 2 * eps), math.min(1.0, s.p + 2 * eps)))
-              .sortBy(_._1)
-              .foldLeft(List.empty[(Double, Double)]) {
-                case ((la, lb) :: t, (a, b)) if a <= lb =>
-                  (la, math.max(lb, b)) :: t
-                case (acc, w) => w :: acc
-              }.reverse
-            val qArr = wins.flatMap(w => Seq(w._1, w._2))
-            val stats = vals.groupBy(col(key)).agg(
-              count(lit(1)).as("__gn"),
-              expr(s"approx_percentile(__v, array(${qArr.mkString(", ")}), " +
-                s"$bracketAccuracy)").as("__br"))
-            val tag = {
-              val sb = new StringBuilder(s"case when __gn < ${4L * bracketAccuracy} then __v")
-              wins.indices.foreach { i =>
-                val lo = s"element_at(__br, ${2 * i + 1})"
-                val hi = s"element_at(__br, ${2 * i + 2})"
-                val sentinel =
-                  if (i == 0) "double('-Infinity')"
-                  else s"(element_at(__br, ${2 * i}) + $lo) / 2"
-                sb ++= s" when __v < $lo then $sentinel when __v <= $hi then __v"
-              }
-              sb ++= " else double('Infinity') end"
-              sb.toString
-            }
-            // NULL-SAFE fold-in (ADVICE r18): a SQL window ranks the
-            // null-key group (all nulls are peers) and the unbracketed
-            // path keeps it, so the bracketed path must too — a plain
-            // equi-join would silently drop it and break the documented
-            // bit-identity between the two tiers. No broadcast hint
-            // (ADVICE r18): stats is one row per GROUP, so at high key
-            // cardinality a forced broadcast is corpus-sized and blows
-            // the driver exactly where this tier is meant to shine; AQE
-            // converts the shuffle join to a broadcast at runtime
-            // whenever the aggregate is actually small.
-            // COST-MODEL CAVEAT (ADVICE r19): that runtime conversion is
-            // the ONLY thing keeping this fold-in off a corpus-sized
-            // shuffle of `vals` at low group counts — the null-safe <=>
-            // condition also disqualifies bucketed-join reuse, so with
-            // spark.sql.adaptive.enabled=false the plan degrades to a
-            // full SortMergeJoin of the corpus against the stats rows.
-            // The bracketed tier's published parity numbers (13.4 s at
-            // sf3) assume AQE on, which GraftSession (and any stock
-            // Spark 3.2+ session) enables by default; a session that
-            // turns AQE off should expect this tier to lose its edge
-            // and prefer the unbracketed rank-window path instead.
-            vals.join(stats.withColumnRenamed(key, "__bkey"),
-                col(key) <=> col("__bkey"))
-              .selectExpr(key, s"$tag as __v")
-              .groupBy(col(key), col("__v")).agg(count(lit(1)).as("__cnt"))
-          }
-        val cum = rangePrefix(blocks, key, "__v", "__cnt")
-
-        // a tie block covers ranks (__cum − __cnt, __cum]; a wanted rank
-        // selects the block's value iff it falls in that interval (the
-        // value at any covered rank is the block's value, so the result
-        // is independent of intra-tie order — same contract row_number
-        // gave, without materializing per-row ranks)
-        def hit(r: Column): Column =
-          r > col("__cum") - col("__cnt") && r <= col("__cum")
-        def loRank(p: Double): Column =
-          floor(lit(p) * (col("__n") - 1)).cast(LongType) + 1
-        def hiRank(p: Double): Column =
-          ceil(lit(p) * (col("__n") - 1)).cast(LongType) + 1
-        def discRank(p: Double): Column =
-          greatest(lit(1L), ceil(lit(p) * col("__n")).cast(LongType))
-        val wanted = colSpecs.map { s =>
-          if (s.disc) hit(discRank(s.p))
-          else hit(loRank(s.p)) || hit(hiRank(s.p))
-        }.reduce(_ || _)
-
-        val aggs = colSpecs.flatMap { s =>
-          if (s.disc)
-            Seq(max(when(hit(discRank(s.p)), col("__v"))).as(s.out))
-          else Seq(
-            max(when(hit(loRank(s.p)), col("__v"))).as(s"__lo_${s.out}"),
-            max(when(hit(hiRank(s.p)), col("__v"))).as(s"__hi_${s.out}"))
-        }
-        val agged = cum.filter(wanted)
-          .groupBy(col(key))
-          .agg(max(col("__n")).as("__nv"), aggs: _*)
-
-        // CONT interpolation — the same double arithmetic as Spark's
-        // Percentile.getPercentile: (higher−pos)·lower + (pos−lower)·higher
-        val outCols: Seq[Column] = colSpecs.map { s =>
-          if (s.disc) col(s.out)
-          else {
-            val pos = lit(s.p) * (col("__nv") - 1).cast(DoubleType)
-            val lo = col(s"__lo_${s.out}")
-            val hi = col(s"__hi_${s.out}")
-            when(floor(pos) === ceil(pos), lo)
-              .otherwise((ceil(pos) - pos) * lo + (pos - floor(pos)) * hi)
-              .as(s.out)
-          }
-        }
-        agged.select(col(key) +: outCols: _*)
+    // one ranked pass per distinct value column (each needs its own
+    // order); keep spec order for the final projection
+    val perCol = specs.groupBy(_.valueCol).toSeq.map { case (vc, colSpecs) =>
+      rankedPass(df.filter(col(vc).isNotNull)
+        .select(col(key), col(vc).cast(DoubleType).as("__v")), key, colSpecs)
     }
-
     // per-column aggregates are one row per group — these joins broadcast.
     // Left joins from the full key set: a group whose values are all NULL
     // still appears, with NULL percentiles (the SQL aggregate's behavior).
     perCol.foldLeft(nRows)((acc, pc) => acc.join(pc, Seq(key), "left"))
       .select(col(key) +: specs.map(s => col(s.out)) :+ col("n_rows"): _*)
+  }
+
+  /** The rank stage: per-`key` percentiles `specs` of the non-null DOUBLE
+    * column `__v` of `vals` (the specs' `valueCol` is not read). Output:
+    * key, specs.map(_.out); a key with no row in `vals` has no row here.
+    * [[sortedPercentiles]] and [[graft.plans.ExactPercentileRule]] (SQL
+    * text) both plan through it. */
+  private[graft] def rankedPass(vals: DataFrame, key: String,
+                                specs: Seq[PSpec]): DataFrame = {
+    val blocks = vals.groupBy(col(key), col("__v")).agg(count(lit(1)).as("__cnt"))
+    val cum = rangePrefix(blocks, key, "__v", "__cnt")
+
+    // a tie block covers ranks (__cum − __cnt, __cum]; a wanted rank
+    // selects the block's value iff it falls in that interval (the
+    // value at any covered rank is the block's value, so the result
+    // is independent of intra-tie order — same contract row_number
+    // gave, without materializing per-row ranks)
+    def hit(r: Column): Column =
+      r > col("__cum") - col("__cnt") && r <= col("__cum")
+    def loRank(p: Double): Column =
+      floor(lit(p) * (col("__n") - 1)).cast(LongType) + 1
+    def hiRank(p: Double): Column =
+      ceil(lit(p) * (col("__n") - 1)).cast(LongType) + 1
+    def discRank(p: Double): Column =
+      greatest(lit(1L), ceil(lit(p) * col("__n")).cast(LongType))
+    val wanted = specs.map { s =>
+      if (s.disc) hit(discRank(s.p))
+      else hit(loRank(s.p)) || hit(hiRank(s.p))
+    }.reduce(_ || _)
+
+    val aggs = specs.flatMap { s =>
+      if (s.disc)
+        Seq(max(when(hit(discRank(s.p)), col("__v"))).as(s.out))
+      else Seq(
+        max(when(hit(loRank(s.p)), col("__v"))).as(s"__lo_${s.out}"),
+        max(when(hit(hiRank(s.p)), col("__v"))).as(s"__hi_${s.out}"))
+    }
+    val agged = cum.filter(wanted)
+      .groupBy(col(key))
+      .agg(max(col("__n")).as("__nv"), aggs: _*)
+
+    // CONT interpolation — the same double arithmetic as Spark's
+    // Percentile.getPercentile: (higher−pos)·lower + (pos−lower)·higher
+    val outCols: Seq[Column] = specs.map { s =>
+      if (s.disc) col(s.out)
+      else {
+        val pos = lit(s.p) * (col("__nv") - 1).cast(DoubleType)
+        val lo = col(s"__lo_${s.out}")
+        val hi = col(s"__hi_${s.out}")
+        when(floor(pos) === ceil(pos), lo)
+          .otherwise((ceil(pos) - pos) * lo + (pos - floor(pos)) * hi)
+          .as(s.out)
+      }
+    }
+    agged.select(col(key) +: outCols: _*)
   }
 
   /** One weighted discrete percentile: the smallest value whose

@@ -29,6 +29,9 @@ import SqlTokens._
   *                                   Redshift's boundary-crossing count
   *   DATE_PART(part, x) (bare part) → date_part('<PART>', x)
   *   EXTRACT/DATE_PART(dow …)      → (extract(DAYOFWEEK FROM x) - 1)
+  *   EXTRACT/DATE_PART(epoch …)    → (unix_micros(CAST(x AS TIMESTAMP)) / 1e6)
+  *   EXTRACT/DATE_PART(ms|us …)    → CAST(extract(SECOND FROM x) * 1000[000]
+  *                                   AS BIGINT)
   *   FIRST_VALUE/LAST_VALUE(x IGNORE|RESPECT NULLS)
   *                                 → FIRST_VALUE/LAST_VALUE(x) IGNORE|RESPECT NULLS
   *   TO_CHAR(ts, 'datefmt')        → date_format(ts, '<java fmt>')
@@ -888,10 +891,20 @@ object RedshiftSql {
 
   // DATE_PART/DATEPART(part, x) with a bare part (Redshift's usual form;
   // Spark reads a bare word there as a column) → the quoted canonical part
-  // from unitAliases. The day-of-week parts in EXTRACT/DATE_PART/DATEPART
-  // → (extract(DAYOFWEEK FROM x) - 1): Redshift numbers Sunday 0, Spark 1.
-  // `from` is where the scan resumes, past the DAYOFWEEK a rewrite emitted.
+  // from unitAliases. The parts Spark's EXTRACT lacks or numbers otherwise,
+  // in EXTRACT/DATE_PART/DATEPART, wrap the operand x instead (`from` is
+  // where the scan resumes, past what a rewrite emitted):
+  //   day of week → (extract(DAYOFWEEK FROM x) - 1): Redshift numbers Sunday 0
+  //   epoch       → DOUBLE seconds since 1970-01-01 00:00 (session zone UTC)
+  //   ms, us      → the seconds field with its fraction, in ms or µs (BIGINT)
   private val dowParts = Set("dow", "dw", "weekday", "dayofweek")
+  private def partWrap(part: String): Option[(String, String)] =
+    if (dowParts(part)) Some(("(extract(DAYOFWEEK FROM ", ") - 1)"))
+    else if (part == "epoch") Some(("(unix_micros(CAST(", " AS TIMESTAMP)) / 1e6)"))
+    else unitAliases.get(part).collect {
+      case "MILLISECOND" => ("CAST(extract(SECOND FROM ", ") * 1000 AS BIGINT)")
+      case "MICROSECOND" => ("CAST(extract(SECOND FROM ", ") * 1000000 AS BIGINT)")
+    }
   private def rewriteDateParts(toks: Vector[Tok], from: Int = 0): Vector[Tok] = {
     val hit = (from until toks.length).find { i =>
       (toks(i).isWord("extract") || toks(i).isWord("date_part") || toks(i).isWord("datepart")) && {
@@ -916,10 +929,11 @@ object RedshiftSql {
           case _ => None
         }
         (sep, part) match {
-          case (Some(c), Some(pt)) if dowParts(pt) =>
-            val head = tokenize("(extract(DAYOFWEEK FROM ")
+          case (Some(c), Some(pt)) if partWrap(pt).isDefined =>
+            val (open, close) = partWrap(pt).get
+            val head = tokenize(open)
             rewriteDateParts(toks.take(i) ++ head ++ toks.slice(nextCode(toks, c + 1), pe) ++
-              tokenize(") - 1)") ++ toks.drop(pe + 1), i + head.length)
+              tokenize(close) ++ toks.drop(pe + 1), i + head.length)
           case (Some(_), Some(pt)) if !extract && toks(u).kind == Word =>
             val canon = unitAliases.getOrElse(pt, toks(u).text)
             rewriteDateParts(toks.updated(u, Tok(Str, s"'$canon'")), u + 1)

@@ -153,7 +153,8 @@ object StreamingOps {
     * simhash)` members. An arriving doc pairs with each member within
     * `maxHamming` whose FIRST agreeing block ([[DedupOps.firstBlock]]) is
     * this bucket's, so a pair is emitted once across all buckets and
-    * batches; a re-delivered doc_id is not a pair. */
+    * batches; a re-delivered doc_id is not a pair. Members are keyed by
+    * doc_id, so the re-delivery check is a lookup, not a scan. */
   private def hammingPairsStream(sig: DataFrame, maxHamming: Int, w: String): DataFrame = {
     val spark = sig.sparkSession
     import spark.implicits._
@@ -162,22 +163,22 @@ object StreamingOps {
       .groupByKey(r => (r._3, r._4, r._5))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: (Int, Int, Long), rows: Iterator[(Long, Long, Int, Int, Long)],
-         state: GroupState[List[(Long, Long)]]) => {
+         state: GroupState[Map[Long, Long]]) => {
           val (w, blk, _) = key
           // batch members in doc_id order: within one delivery the smaller
           // id is "earlier", matching the batch op's a.doc_id < b.doc_id
           val batch = rows.map(r => (r._1, r._2)).toVector.sortBy(_._1)
-          var seen = state.getOption.getOrElse(Nil)
+          var seen = state.getOption.getOrElse(Map.empty[Long, Long])
           val out = Vector.newBuilder[(Long, Long, Long)]
           batch.foreach { case (id, sig) =>
-            if (!seen.exists(_._1 == id)) { // a re-delivered doc_id is not a pair
+            if (!seen.contains(id)) { // a re-delivered doc_id is not a pair
               seen.foreach { case (pid, psig) =>
                 val x = psig ^ sig
                 val h = java.lang.Long.bitCount(x)
                 if (h <= maxHamming && DedupOps.firstBlock(x, maxHamming, w) == blk)
                   out += ((math.min(pid, id), math.max(pid, id), h.toLong))
               }
-              seen = (id, sig) :: seen
+              seen = seen.updated(id, sig)
             }
           }
           state.update(seen)
@@ -333,7 +334,7 @@ object StreamingOps {
       .groupByKey(r => (r._4, r._5))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (key: (Int, Long), rows: Iterator[(Long, Long, java.sql.Timestamp, Int, Long)],
-         state: GroupState[List[(Long, Long, Long)]]) => {
+         state: GroupState[Map[Long, (Long, Long)]]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             val blk = key._1
@@ -341,25 +342,27 @@ object StreamingOps {
             // prune members the watermark has already aged out — keeps a
             // hot bucket from pinning cold members past their horizon
             val horizon = state.getCurrentWatermarkMs - ttlMs
-            var seen = state.getOption.getOrElse(Nil).filter(_._3 >= horizon)
+            // members keyed by doc_id: (simhash, last event time)
+            var seen = state.getOption.getOrElse(Map.empty[Long, (Long, Long)])
+              .filter(_._2._2 >= horizon)
             val out = Vector.newBuilder[(Long, Long, Long)]
             batch.foreach { case (id, sig, ts) =>
-              seen.find(_._1 == id) match {
-                case Some(prev) => // re-delivery refreshes recency, no pair
-                  if (ts > prev._3) seen = (id, sig, ts) :: seen.filterNot(_._1 == id)
+              seen.get(id) match {
+                case Some((_, prevTs)) => // re-delivery refreshes recency, no pair
+                  if (ts > prevTs) seen = seen.updated(id, (sig, ts))
                 case None =>
-                  seen.foreach { case (pid, psig, _) =>
+                  seen.foreach { case (pid, (psig, _)) =>
                     val x = psig ^ sig
                     val h = java.lang.Long.bitCount(x)
                     if (h <= maxHamming && DedupOps.firstBlock(x, maxHamming, 64) == blk)
                       out += ((math.min(pid, id), math.max(pid, id), h.toLong))
                   }
-                  seen = (id, sig, ts) :: seen
+                  seen = seen.updated(id, (sig, ts))
               }
             }
             state.update(seen)
             state.setTimeoutTimestamp(math.max(
-              seen.iterator.map(_._3).max + ttlMs,
+              seen.valuesIterator.map(_._2).max + ttlMs,
               state.getCurrentWatermarkMs + 1))
             out.result().iterator
           }

@@ -2469,6 +2469,19 @@ class DialectSpec extends SparkSpecBase {
       (2024, 1, 13, 10, 73))
   }
 
+  test("EXTRACT/DATE_PART epoch, millisecond and microsecond parts take DuckDB's values") {
+    // Spark's EXTRACT has none of these fields (INVALID_EXTRACT_FIELD)
+    val ts = "TIMESTAMP '2009-09-09 12:08:43.101'"
+    val r = sql1(s"SELECT EXTRACT(EPOCH FROM $ts) AS e, DATE_PART(epoch, $ts) AS e2, " +
+      s"DATE_PART(ms, $ts) AS ms, DATE_PART('milliseconds', $ts) AS ms2, " +
+      s"EXTRACT(us FROM $ts) AS us, DATEPART(microsecond, $ts) AS us2, " +
+      "DATE_PART('epoch', DATE '2024-01-07') AS de")
+    assert((r.getDouble(0), r.getDouble(1)) === (1252498123.101, 1252498123.101))
+    assert((r.getLong(2), r.getLong(3)) === (43101L, 43101L))
+    assert((r.getLong(4), r.getLong(5)) === (43101000L, 43101000L))
+    assert(r.getDouble(6) === 1704585600.0)
+  }
+
   test("FIRST_VALUE/LAST_VALUE(x IGNORE|RESPECT NULLS) OVER moves the modifier after the call") {
     assert(rewrite("SELECT LAST_VALUE(f(x) IGNORE NULLS) OVER (ORDER BY i) FROM t") ===
       "SELECT LAST_VALUE(f(x)) IGNORE NULLS OVER (ORDER BY i) FROM t")

@@ -750,9 +750,16 @@ class OpsSpec extends SparkSpecBase {
 
   test("sorted percentiles are BIT-identical to the buffering aggregate") {
     // q25_within_group_sorted (PercentileOps rank path, O(1) per-group
-    // memory) vs q25_within_group (Spark's buffering percentile_cont/disc):
-    // same interpolation arithmetic → exact double equality, not epsilon.
-    val buffered = SparkEntry.queries("q25_within_group")(spark, sfDir).collect()
+    // memory) vs Spark's buffering percentile/percentile_disc in the array
+    // form ExactPercentileRule leaves alone: same interpolation
+    // arithmetic → exact double equality, not epsilon.
+    Tables.load(spark, sfDir, "lineitem").createOrReplaceTempView("lineitem")
+    val buffered = spark.sql(
+      """SELECT l_returnflag, pc[0] AS p25, pc[1] AS p75, pd[0] AS p50_disc, n_rows FROM (
+        |  SELECT l_returnflag, percentile(l_extendedprice, array(0.25, 0.75)) AS pc,
+        |         percentile_disc(array(0.5)) WITHIN GROUP (ORDER BY l_extendedprice) AS pd,
+        |         CAST(COUNT(*) AS BIGINT) AS n_rows
+        |  FROM lineitem GROUP BY l_returnflag) ORDER BY l_returnflag""".stripMargin).collect()
     val sorted = SparkEntry.queries("q25_within_group_sorted")(spark, sfDir).collect()
     assert(buffered.length === sorted.length && buffered.nonEmpty)
     buffered.zip(sorted).foreach { case (b, s) =>
@@ -765,8 +772,15 @@ class OpsSpec extends SparkSpecBase {
 
   test("q18 sorted twin is BIT-identical to the buffering median/percentile") {
     // multi-value-column shape: median(l_quantity) + two percentiles of
-    // l_extendedprice → two ranked passes joined back on the group key
-    val buffered = SparkEntry.queries("q18_percentiles")(spark, sfDir).collect()
+    // l_extendedprice → two ranked passes joined back on the group key;
+    // the reference is the buffering array form
+    Tables.load(spark, sfDir, "lineitem").createOrReplaceTempView("lineitem")
+    val buffered = spark.sql(
+      """SELECT l_returnflag, mq[0] AS med_qty, pp[0] AS p25_price, pp[1] AS p75_price,
+        |       n_rows FROM (
+        |  SELECT l_returnflag, percentile(l_quantity, array(0.5)) AS mq,
+        |         percentile(l_extendedprice, array(0.25, 0.75)) AS pp, COUNT(*) AS n_rows
+        |  FROM lineitem GROUP BY l_returnflag) ORDER BY l_returnflag""".stripMargin).collect()
     val sorted = SparkEntry.queries("q18_percentiles_sorted")(spark, sfDir).collect()
     assert(buffered.length === sorted.length && buffered.nonEmpty)
     buffered.zip(sorted).foreach { case (b, s) =>
@@ -792,49 +806,6 @@ class OpsSpec extends SparkSpecBase {
     assert(out(1).getDouble(1) === 10.0 && out(1).getDouble(2) === 10.0)
     assert(out(2).isNullAt(1) && out(2).isNullAt(2)) // nulls, group kept
     assert(out.map(_.getLong(3)).toSeq === Seq(4L, 1L, 2L)) // COUNT(*) incl nulls
-  }
-
-  test("GK-bracketed percentiles are bit-identical to the unbracketed rank path") {
-    import graft.ops.PercentileOps.{sortedPercentiles, PSpec}
-    // fixture lineitem: accuracy 50 puts the small-group fallback at 200
-    // rows, so every returnflag group (sf0.01: ~20k rows) actually
-    // exercises the bracket/sentinel machinery, not the fallback
-    val l = Tables.load(spark, sfDir, "lineitem")
-    val specs = Seq(
-      PSpec("l_extendedprice", 0.25, "p25"),
-      PSpec("l_extendedprice", 0.75, "p75"),
-      PSpec("l_quantity", 0.5, "medq", disc = true))
-    val plain = sortedPercentiles(l, "l_returnflag", specs)
-      .orderBy("l_returnflag").collect()
-    val br = sortedPercentiles(l, "l_returnflag", specs, bracketAccuracy = 50)
-      .orderBy("l_returnflag").collect()
-    assert(plain.toSeq === br.toSeq) // exact doubles — selection is sketch-independent
-    // stress frame: heavy ties AT the bracket region, a small group that
-    // takes the fallback (n < 4·accuracy), negatives, an all-null group,
-    // and a NULL-KEY group large enough to run the bracket machinery —
-    // the bracketed path's stats fold-in join must be null-safe or this
-    // whole group silently vanishes (ADVICE r18)
-    val rows = (for {
-      g <- Seq("big", "tied", null: String)
-      i <- 1 to 900
-    } yield {
-      val v: java.lang.Double =
-        if (g == "tied") (if (i < 500) 7.0 else (i % 31).toDouble)
-        else if (g == null) (i * 37 % 541).toDouble
-        else (i * 131 % 977) - 400.0
-      (g, v)
-    }) ++ Seq(("small", java.lang.Double.valueOf(3.0)),
-      ("small", java.lang.Double.valueOf(9.0)),
-      ("nul", null: java.lang.Double))
-    val df = rows.toDF("k", "v")
-    val sspecs = Seq(PSpec("v", 0.1, "p10"), PSpec("v", 0.5, "p50"),
-      PSpec("v", 0.5, "p50d", disc = true), PSpec("v", 0.9, "p90"))
-    val p2 = sortedPercentiles(df, "k", sspecs).orderBy("k").collect()
-    val b2 = sortedPercentiles(df, "k", sspecs, bracketAccuracy = 100)
-      .orderBy("k").collect()
-    assert(p2.toSeq === b2.toSeq)
-    assert(b2.count(_.isNullAt(0)) === 1) // the null-key group survives
-    assert(b2.length === 5)               // big, tied, small, nul, NULL
   }
 
   test("span dedup finds planted cross-document paragraphs with exact boundaries") {
@@ -3123,6 +3094,58 @@ class OpsSpec extends SparkSpecBase {
         |         approx_percentile(v, array(0.25, 0.75), 100) AS ap
         |  FROM pct_t GROUP BY g) ORDER BY g""".stripMargin).collect()
     assert(merged.toSeq == reference.toSeq)
+
+    // ExactPercentileRule shapes, each against the buffering array form:
+    // a NULL-key group (large enough to rank across partitions), two
+    // grouping keys, PERCENTILE_DISC, a FILTER'd percentile, COUNT/SUM
+    // beside the percentiles, a global aggregate over empty input, a
+    // whole-partition MEDIAN window and a CTE input
+    val wide = df.union((1 to 300).map(i =>
+        (null: String, java.lang.Double.valueOf((i * 37 % 541).toDouble))).toDF("g", "v"))
+      .withColumn("g2", expr("cast(coalesce(v, 0) as bigint) % 2"))
+      .repartition(3)
+    wide.createOrReplaceTempView("pct_w")
+    def same(viaRule: String, buffered: String): Seq[Row] = {
+      val ruled = spark.sql(viaRule)
+      val p = ruled.queryExecution.executedPlan.toString
+      assert(!p.contains("ObjectHashAggregate") && !p.contains("percentile("),
+        s"the rank path did not take:\n$p")
+      val got = ruled.collect().toSeq
+      assert(got == spark.sql(buffered).collect().toSeq, viaRule)
+      got
+    }
+    val grouped = same(
+      """SELECT g, g2, MEDIAN(v) AS med,
+        |  PERCENTILE_CONT(0.1) WITHIN GROUP (ORDER BY v) AS p10,
+        |  PERCENTILE_DISC(0.5) WITHIN GROUP (ORDER BY v) AS d50,
+        |  PERCENTILE_DISC(0.9) WITHIN GROUP (ORDER BY v) AS d90,
+        |  percentile(v, 0.75) FILTER (WHERE v > 0) AS p75_pos,
+        |  COUNT(*) AS n, SUM(v) AS s
+        |FROM pct_w GROUP BY g, g2 ORDER BY g, g2""".stripMargin,
+      """SELECT g, g2, pc[0] AS med, pc[1] AS p10, pd[0] AS d50, pd[1] AS d90,
+        |  pf[0] AS p75_pos, n, s FROM (
+        |  SELECT g, g2, percentile(v, array(0.5, 0.1)) AS pc,
+        |    percentile_disc(array(0.5, 0.9)) WITHIN GROUP (ORDER BY v) AS pd,
+        |    percentile(v, array(0.75)) FILTER (WHERE v > 0) AS pf,
+        |    COUNT(*) AS n, SUM(v) AS s
+        |  FROM pct_w GROUP BY g, g2) ORDER BY g, g2""".stripMargin)
+    assert(grouped.exists(_.isNullAt(0))) // the NULL-key groups survive
+    val empty = same(
+      "SELECT MEDIAN(v) AS med, COUNT(*) AS n FROM pct_w WHERE v > 1e9",
+      "SELECT percentile(v, array(0.5))[0] AS med, COUNT(*) AS n FROM pct_w WHERE v > 1e9")
+    assert(empty === Seq(Row(null, 0L))) // one row over empty input
+    same(
+      """SELECT g, v, MEDIAN(v) OVER (PARTITION BY g) AS med FROM pct_w
+        |ORDER BY g, v""".stripMargin,
+      """SELECT g, v, percentile(v, array(0.5)) OVER (PARTITION BY g)[0] AS med
+        |FROM pct_w ORDER BY g, v""".stripMargin)
+    // a CTE as the percentile's input (the passes read its body)
+    same(
+      """WITH t AS (SELECT g, v * 2 AS w FROM pct_w)
+        |SELECT g, MEDIAN(w) AS med, COUNT(*) AS n FROM t GROUP BY g ORDER BY g""".stripMargin,
+      """WITH t AS (SELECT g, v * 2 AS w FROM pct_w)
+        |SELECT g, percentile(w, array(0.5))[0] AS med, COUNT(*) AS n FROM t
+        |GROUP BY g ORDER BY g""".stripMargin)
   }
 
   test("percentile merge eligibility: FILTER clauses and mixed accuracies stay apart") {
@@ -3141,12 +3164,13 @@ class OpsSpec extends SparkSpecBase {
         })
       }.flatten.distinct.size
     }
-    // a FILTER'd aggregate sees different rows — must NOT merge with the
-    // unfiltered one (and the values must stay right)
+    // a FILTER'd aggregate sees different rows — it takes its own ranked
+    // pass, so neither exact percentile leaves a buffer (and the values
+    // must stay right)
     val filtered =
       """SELECT g, percentile(v, 0.25) FILTER (WHERE v > 0) AS p25_pos,
         |       percentile(v, 0.75) AS p75 FROM pct_t2 GROUP BY g ORDER BY g""".stripMargin
-    assert(buffers(filtered) == 2, "FILTER'd percentile must keep its own buffer")
+    assert(buffers(filtered) == 0, "exact percentiles must take the rank path")
     val viaFilter = spark.sql(filtered).collect()
     val manual = spark.sql(
       """SELECT t.g, p.p25_pos, t.p75 FROM

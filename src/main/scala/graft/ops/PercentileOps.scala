@@ -8,10 +8,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 /** Exact per-group percentiles via distributed sort + rank — the
   * bounded-memory scale path for MEDIAN / PERCENTILE_CONT / PERCENTILE_DISC
   * (SURVEY §2.3 q18/q25; the reference reaches them through the `--query`
-  * pass-through, `execute_sql.py:64,77`). SQL text reaches it through
-  * [[graft.plans.ExactPercentileRule]], which plans those aggregates and
-  * whole-partition percentile windows onto [[rankedPass]]; DataFrame
-  * callers use [[sortedPercentiles]].
+  * pass-through, `execute_sql.py:64,77`).
   *
   * Spark's exact `percentile`/`percentile_cont` aggregate buffers every
   * value of a group in executor memory (an ObjectHashAggregate over an
@@ -171,17 +168,17 @@ object PercentileOps {
     // per-column aggregates are one row per group — these joins broadcast.
     // Left joins from the full key set: a group whose values are all NULL
     // still appears, with NULL percentiles (the SQL aggregate's behavior).
-    perCol.foldLeft(nRows)((acc, pc) => acc.join(pc, Seq(key), "left"))
-      .select(col(key) +: specs.map(s => col(s.out)) :+ col("n_rows"): _*)
+    // NULL-SAFE on the key: the NULL key is a group of its own, as in SQL.
+    perCol.foldLeft(nRows) { (acc, pc) =>
+        acc.join(pc.withColumnRenamed(key, "__pkey"), col(key) <=> col("__pkey"), "left")
+          .drop("__pkey")
+      }.select(col(key) +: specs.map(s => col(s.out)) :+ col("n_rows"): _*)
   }
 
   /** The rank stage: per-`key` percentiles `specs` of the non-null DOUBLE
     * column `__v` of `vals` (the specs' `valueCol` is not read). Output:
-    * key, specs.map(_.out); a key with no row in `vals` has no row here.
-    * [[sortedPercentiles]] and [[graft.plans.ExactPercentileRule]] (SQL
-    * text) both plan through it. */
-  private[graft] def rankedPass(vals: DataFrame, key: String,
-                                specs: Seq[PSpec]): DataFrame = {
+    * key, specs.map(_.out); a key with no row in `vals` has no row here. */
+  private def rankedPass(vals: DataFrame, key: String, specs: Seq[PSpec]): DataFrame = {
     val blocks = vals.groupBy(col(key), col("__v")).agg(count(lit(1)).as("__cnt"))
     val cum = rangePrefix(blocks, key, "__v", "__cnt")
 

@@ -3,72 +3,101 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, ApproximatePercentile, Complete}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, ApproximatePercentile, Complete, Percentile}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
 
-/** Optimizer rule merging multiple `approx_percentile` aggregates over the
-  * same value column and accuracy into ONE shared sketch.
+/** Optimizer rule merging multiple percentile aggregates over the same
+  * value column into ONE shared buffer.
   *
-  * `approx_percentile(x, 0.25, 10000)` next to `approx_percentile(x, 0.75,
-  * 10000)` — the column-profiling shape, which reaches this engine
-  * verbatim through the reference's generic SQL pass-through
-  * (`execute_sql.py:64,77`) — analyzes to independent
-  * [[ApproximatePercentile]] aggregates, each building its own
-  * Greenwald-Khanna sketch of the whole column. Spark's own
-  * `ApproximatePercentile` already evaluates an array of percentages over
-  * one sketch, so this rule rewrites each scalar occurrence to
-  * `GetArrayItem` over one shared array-percentage aggregate. Values are
-  * identical: the merged aggregate queries the SAME sketch the scalar
-  * form would have built. (Exact percentiles never get here:
-  * [[ExactPercentileRule]] plans them onto the rank path at analysis.)
+  * `PERCENTILE_CONT(0.25) WITHIN GROUP (ORDER BY x)` next to
+  * `PERCENTILE_CONT(0.75) WITHIN GROUP (ORDER BY x)` — the standard
+  * column-profiling shape, which reaches this engine verbatim through
+  * the reference's generic SQL pass-through surface
+  * (`execute_sql.py:64,77` executes arbitrary user SQL; the percentile
+  * shape is the usage pattern, not text in that file) — analyzes to two
+  * independent
+  * [[Percentile]] aggregates, and Spark's ObjectHashAggregate then
+  * builds the (value → count) OpenHashMap buffer once PER AGGREGATE:
+  * the whole column is buffered, shuffled, and merged k times for k
+  * requested percentages. Spark's own `Percentile` already supports an
+  * array percentage evaluating every requested fraction over one shared
+  * buffer (`Percentile.getPercentiles` walks the sorted counts once), so
+  * the k-buffer plan is pure waste — this rule rewrites each scalar
+  * occurrence to `GetArrayItem` over one shared array-percentage
+  * aggregate. Values are bit-identical: the merged aggregate runs the
+  * SAME `getPercentile` interpolation over the SAME buffer the scalar
+  * form would have built. [[ApproximatePercentile]] gets the identical
+  * treatment (same child + same accuracy → one Greenwald-Khanna sketch
+  * queried at every percentage instead of k duplicate sketches).
   *
   * Physical dedup rides the planner's own contract: every rewritten
   * occurrence references the SAME `AggregateExpression` object, and
   * `PhysicalAggregation` collects aggregate functions up to semantic
-  * equality — one sketch in the physical plan (PlanSpec pins this).
+  * equality — one buffer in the physical plan (PlanSpec pins this).
   *
-  * Eligibility is narrow and idempotent: a scalar DOUBLE literal
-  * percentage (an array form is already merged — the rewrite output
-  * no-ops), non-DISTINCT, unfiltered, and ≥2 distinct percentages sharing
-  * the same (child, accuracy) up to canonicalization.
+  * Eligibility is narrow and idempotent: exact [[Percentile]] or
+  * [[ApproximatePercentile]] with a scalar DOUBLE literal percentage
+  * (an array form is already merged — the rewrite output no-ops),
+  * non-DISTINCT, unfiltered, and ≥2 distinct percentages sharing the
+  * same (child, frequency/accuracy, reverse) up to canonicalization.
+  * At 100 TB the win is a k-fold cut of the dominant shuffle: a
+  * 5-point profile of a hot column ships one buffer set instead of
+  * five.
   */
 object MergePercentileRule extends Rule[LogicalPlan] {
 
-  /** Merge key: the sketch identity. */
-  private case class Key(child: Expression, accuracy: Expression)
+  /** Merge key: the buffer identity. `kind` separates the exact
+    * count-map buffer from the approx sketch; `aux` is the frequency
+    * (exact) or accuracy (approx) expression; `reverse` is the exact
+    * form's tie-break direction. */
+  private case class Key(kind: String, child: Expression, aux: Expression,
+                         reverse: Boolean)
 
   private def scalarPct(e: Expression): Option[Double] = e match {
     case Literal(d: Double, DoubleType) => Some(d)
     case _ => None
   }
 
-  /** (merge key, percentage, sketch) when this aggregate is merge-eligible. */
-  private def eligible(ae: AggregateExpression): Option[(Key, Double, ApproximatePercentile)] =
+  /** (merge key, percentage) when this aggregate is merge-eligible. */
+  private def eligible(ae: AggregateExpression): Option[(Key, Double)] =
     if (ae.isDistinct || ae.filter.isDefined) None
     else ae.aggregateFunction match {
+      case p: Percentile =>
+        scalarPct(p.percentageExpression).map(d =>
+          (Key("exact", p.child.canonicalized,
+            p.frequencyExpression.canonicalized, p.reverse), d))
       case p: ApproximatePercentile =>
         scalarPct(p.percentageExpression).map(d =>
-          (Key(p.child.canonicalized, p.accuracyExpression.canonicalized), d, p))
+          (Key("approx", p.child.canonicalized,
+            p.accuracyExpression.canonicalized, reverse = false), d))
       case _ => None
     }
 
   /** The array-percentage twin of `proto`, evaluating `ps` in order. */
-  private def arrayForm(proto: ApproximatePercentile, ps: Seq[Double]): AggregateFunction =
-    new ApproximatePercentile(proto.child,
-      CreateArray(ps.map(Literal(_, DoubleType))), proto.accuracyExpression)
+  private def arrayForm(proto: AggregateFunction, ps: Seq[Double]): AggregateFunction = {
+    val arr = CreateArray(ps.map(Literal(_, DoubleType)))
+    proto match {
+      case p: Percentile =>
+        Percentile(p.child, arr, p.frequencyExpression, 0, 0, p.reverse)
+      case p: ApproximatePercentile =>
+        new ApproximatePercentile(p.child, arr, p.accuracyExpression)
+      case other =>
+        throw new IllegalStateException(s"not a percentile: $other")
+    }
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case agg: Aggregate =>
-      // pass 1: group eligible scalar percentiles by sketch identity
+      // pass 1: group eligible scalar percentiles by buffer identity
       val pcts = mutable.LinkedHashMap[Key, mutable.LinkedHashSet[Double]]()
-      val first = mutable.LinkedHashMap[Key, ApproximatePercentile]()
+      val first = mutable.LinkedHashMap[Key, AggregateFunction]()
       agg.aggregateExpressions.foreach(_.foreach {
         case ae: AggregateExpression =>
-          eligible(ae).foreach { case (k, d, p) =>
+          eligible(ae).foreach { case (k, d) =>
             pcts.getOrElseUpdate(k, mutable.LinkedHashSet.empty) += d
-            first.getOrElseUpdate(k, p)
+            first.getOrElseUpdate(k, ae.aggregateFunction)
           }
         case _ =>
       })
@@ -77,7 +106,7 @@ object MergePercentileRule extends Rule[LogicalPlan] {
       else {
         // one shared array-percentage AggregateExpression per key; every
         // occurrence below references the SAME object so the planner's
-        // semantic dedup collapses them to one physical sketch
+        // semantic dedup collapses them to one physical buffer
         val merged: Map[Key, (AggregateExpression, Seq[Double])] =
           mergeable.map { case (k, ps) =>
             val list = ps.toSeq
@@ -90,7 +119,7 @@ object MergePercentileRule extends Rule[LogicalPlan] {
         // (ADVICE r17 — the guard+get form evaluated it twice)
         val rewritten = agg.aggregateExpressions.map(_.transform {
           case ae: AggregateExpression =>
-            eligible(ae).flatMap { case (k, d, _) =>
+            eligible(ae).flatMap { case (k, d) =>
               merged.get(k).map { case (m, list) =>
                 GetArrayItem(m, Literal(list.indexOf(d))): Expression
               }

@@ -20,7 +20,7 @@ import graft.sql.RedshiftSql
   * and a one-line `Split:` comment says why: the oracle text does not run
   * unchanged on Spark (DuckDB-only syntax or semantics), the Spark side is
   * itself the point (a self-certifying sketch bound, a dialect construct
-  * the rewriter translates, a DataFrame entry point it gates), or the shared text
+  * the rewriter translates, a plan shape PlanSpec pins), or the shared text
   * runs more than 1.2× slower than the Spark side in the sf0.1 bench.
   *
   * Canonicalization contract shared with the DuckDB oracles (QueryDef doc):
@@ -367,9 +367,11 @@ object T2 {
              |GROUP BY user_id, session_id
              |ORDER BY user_id, session_id""".stripMargin)),
 
-    // 18. MEDIAN / PERCENTILE_CONT: exact percentiles per group. The
-    //     percentiles plan onto PercentileOps' rank path (ExactPercentileRule):
-    //     one ranked pass per value column, joined back on the group key.
+    // 18. MEDIAN / PERCENTILE_CONT: exact percentiles per group, in the
+    //     Redshift spelling both engines accept. MergePercentileRule
+    //     (GraftExtensions) collapses the two extendedprice percentiles
+    //     into ONE shared array buffer — PlanSpec pins that exactly one
+    //     Percentile aggregate survives per value column here.
     sql("q18_percentiles", Seq("lineitem"),
       """SELECT l_returnflag,
         |       MEDIAN(l_quantity) AS med_qty,
@@ -380,12 +382,13 @@ object T2 {
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin),
 
-    // 18b. approx_percentile scale twin of q18: a bounded
-    //      Greenwald-Khanna-style sketch per group instead of an exact
-    //      rank. The sketch values are engine-specific, so the
+    // 18b. approx_percentile scale twin of q18: the exact sort-based
+    //      percentile buffers every group value (memory-unsafe at 100×
+    //      scale); approx_percentile keeps a bounded Greenwald-Khanna-style
+    //      sketch per group. The sketch values are engine-specific, so the
     //      gate is SELF-CERTIFYING (VERDICT r15 #5): the query emits the
     //      EXACT percentiles (through PercentileOps' bounded-memory rank
-    //      path, the plan q18's text gets) plus
+    //      path — bit-equal to the buffering aggregate, q18c's gate) plus
     //      one boolean per sketch value asserting |approx − exact| ≤
     //      5%·|exact| + 1e-9 (the OpsSpec bound), and the oracle expects
     //      literal TRUE — a drifting sketch flips the boolean and fails
@@ -426,12 +429,15 @@ object T2 {
              |GROUP BY l_returnflag
              |ORDER BY l_returnflag""".stripMargin)),
 
-    // 18c. q18's median + two percentiles through the DataFrame entry
-    //      point `PercentileOps.sortedPercentiles` (the one ProfileOps and
-    //      SketchOps call) — the same rank stage q18's text plans onto.
-    //      Exercises the multi-value-column case (l_quantity AND
-    //      l_extendedprice → two ranked passes); shares q18's oracle.
-    // Split: the Spark side gates the sortedPercentiles DataFrame entry point.
+    // 18c. EXACT bounded-memory twin of q18 (VERDICT r7 #2): the same
+    //      median + two percentiles through PercentileOps' rank path —
+    //      windows + plain HashAggregate, O(1) per-group memory — instead
+    //      of the buffering median/percentile ObjectHashAggregate that
+    //      OOMs on a hot group at 100×. Exercises the multi-value-column
+    //      case (l_quantity AND l_extendedprice → two ranked passes).
+    //      Exact → shares q18's full hash oracle; OpsSpec additionally
+    //      asserts bit-equality against the buffering aggregate.
+    // Split: the Spark side is the rank path PlanSpec pins; QUANTILE_CONT oracle.
     QueryDef(
       "q18_percentiles_sorted",
       (s, d) => {
@@ -593,22 +599,35 @@ object T2 {
              |GROUP BY o_orderstatus
              |ORDER BY o_orderstatus""".stripMargin)),
 
-    // 24. MEDIAN as a window function (Redshift's `MEDIAN(x) OVER
-    //     (PARTITION BY k)`): ExactPercentileRule plans the whole-partition
-    //     window as the per-key rank-path aggregate joined back null-safe
-    //     on k — no Window holds a partition in one task, and AQE
-    //     broadcasts the tiny per-key side at runtime. The synthetic
-    //     fixture has duplicate (orderkey, linenumber) pairs, so the
-    //     tie-break spans every column (identical rows are interchangeable).
-    sql("q24_median_window", Seq("lineitem"),
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity,
-        |       MEDIAN(l_quantity) OVER (PARTITION BY l_returnflag) AS med_qty
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, l_returnflag, l_quantity""".stripMargin),
+    // 24. MEDIAN as a window function (Redshift allows `MEDIAN(x) OVER
+    //     (PARTITION BY k)`; Spark does not) — the documented rewrite
+    //     (SURVEY §2.2 window 🔧): exact per-group median once via groupBy,
+    //     broadcast-joined back to the rows. One aggregation + a broadcast
+    //     — strictly cheaper than a per-row window sort at any scale.
+    // Split: PlanSpec pins a medians broadcast the MEDIAN() OVER text does not plan.
+    QueryDef(
+      "q24_median_window",
+      (s, d) => {
+        val l = t(s, d, "lineitem")
+        val med = l.groupBy(col("l_returnflag"))
+          .agg(expr("median(l_quantity)").as("med_qty"))
+        l.select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
+            col("l_quantity"))
+          .join(broadcast(med), Seq("l_returnflag"))
+          .selectExpr("l_orderkey", "l_linenumber", "l_returnflag",
+            "l_quantity", "med_qty")
+          // the synthetic fixture has duplicate (orderkey, linenumber)
+          // pairs, so the tie-break must span every column (identical
+          // rows are then interchangeable — hash-stable)
+          .orderBy("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
+      },
+      Some("""SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity,
+             |       MEDIAN(l_quantity) OVER (PARTITION BY l_returnflag) AS med_qty
+             |FROM lineitem
+             |ORDER BY l_orderkey, l_linenumber, l_returnflag, l_quantity""".stripMargin)),
 
     // 25. Ordered-set aggregates with WITHIN GROUP (Redshift
-    //     PERCENTILE_CONT / PERCENTILE_DISC), planned onto the rank path
-    //     (ExactPercentileRule): one ranked pass serves all three.
+    //     PERCENTILE_CONT / PERCENTILE_DISC), one text both engines run.
     sql("q25_within_group", Seq("lineitem"),
       """SELECT l_returnflag,
         |  PERCENTILE_CONT(0.25) WITHIN GROUP (ORDER BY l_extendedprice) AS p25,
@@ -617,9 +636,11 @@ object T2 {
         |  CAST(COUNT(*) AS BIGINT) AS n_rows
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    // 25b. approx_percentile scale twin of q25 (VERDICT r4 #4): a bounded
-    //      sketch per group instead of an exact rank. Self-certifying gate
-    //      (VERDICT r15 #5, the q18b pattern): exact percentiles through the
+    // 25b. approx_percentile scale twin of q25 (VERDICT r4 #4): the exact
+    //      WITHIN GROUP ordered-set aggregates buffer every group value —
+    //      memory-unsafe under 100× group-cardinality skew; this twin keeps
+    //      a bounded sketch per group. Self-certifying gate (VERDICT r15
+    //      #5, the q18b pattern): exact percentiles through the
     //      bounded-memory rank path + one TRUE-expected boolean per sketch
     //      value at the OpsSpec 5% bound — full rows+schema+hash gate.
     // Split: a self-certifying sketch bound; shared, the oracle's TRUEs are vacuous.
@@ -707,10 +728,14 @@ object T2 {
              |      FROM b2)
              |ORDER BY event_id, pos""".stripMargin)),
 
-    // 25c. q25's PERCENTILE_CONT/DISC results through the DataFrame entry
-    //      point `PercentileOps.sortedPercentiles` — the same rank stage
-    //      q25's text plans onto; shares q25's oracle.
-    // Split: the Spark side gates the sortedPercentiles DataFrame entry point.
+    // 25c. Bounded-memory EXACT scale twin of q25: the same
+    //      PERCENTILE_CONT/DISC results via distributed sort + rank
+    //      (graft.ops.PercentileOps) instead of Spark's buffering
+    //      ObjectHashAggregate, which holds every group value on one
+    //      executor — the 100 TB hot-group OOM. Exact (not approximate),
+    //      so it shares q25's full hash oracle; OpsSpec additionally
+    //      asserts bit-equality against the buffering aggregate.
+    // Split: the Spark side is the rank path PlanSpec pins; quantile_cont oracle.
     QueryDef(
       "q25_within_group_sorted",
       (s, d) => {
@@ -791,23 +816,44 @@ object T2 {
         |             ORDER BY o_totalprice, o_orderkey)
         |ORDER BY o_orderkey""".stripMargin),
 
-    // 31. Per-row PERCENTILE_CONT / PERCENTILE_DISC of the row's group
-    //     (Redshift allows the ordered-set aggregates with OVER; DuckDB
-    //     does not, so the shared text is the aggregate joined back). The
-    //     percentiles plan onto the rank path (ExactPercentileRule), so
-    //     nothing holds a group in memory; AQE broadcasts the O(groups)
-    //     side at runtime. Duplicate (orderkey, linenumber) pairs exist in
-    //     the fixture; remaining ties are full-row-identical.
-    sql("q31_percentile_window", Seq("lineitem"),
-      """WITH p AS (SELECT l_returnflag,
-        |    PERCENTILE_CONT(0.25) WITHIN GROUP (ORDER BY l_extendedprice) AS p25_price,
-        |    PERCENTILE_CONT(0.75) WITHIN GROUP (ORDER BY l_extendedprice) AS p75_price,
-        |    PERCENTILE_DISC(0.5) WITHIN GROUP (ORDER BY l_quantity) AS med_qty_disc
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag, l.l_extendedprice,
-        |  p.p25_price, p.p75_price, p.med_qty_disc
-        |FROM lineitem l JOIN p ON p.l_returnflag = l.l_returnflag
-        |ORDER BY l.l_orderkey, l.l_linenumber, l.l_returnflag, l.l_extendedprice""".stripMargin),
+    // 31. PERCENTILE_CONT / PERCENTILE_DISC as window functions — Redshift
+    //     allows its ordered-set aggregates with an OVER clause
+    //     (reachable via the pass-through, execute_sql.py:77). Same
+    //     rewrite as q24's MEDIAN-over: ONE per-key percentile pass + a
+    //     broadcast join back, instead of a per-row window that re-buffers
+    //     every group per partition. The percentile side runs through the
+    //     bounded-memory rank path (PercentileOps — bit-identical to the
+    //     buffering aggregate), so NOTHING in this plan holds a group in
+    //     memory: rank windows spill, the join side is O(groups). At sf3
+    //     the floor is the gated 18M-row output sort itself (output
+    //     volume, sublinear ~3.5x growth on 30x data in the r18 sweep).
+    // Split: quantile_cont OVER oracle; the Spark side is PlanSpec's broadcast.
+    QueryDef(
+      "q31_percentile_window",
+      (s, d) => {
+        import graft.ops.PercentileOps.{sortedPercentiles, PSpec}
+        val l = t(s, d, "lineitem")
+        val pct = sortedPercentiles(l, "l_returnflag", Seq(
+            PSpec("l_extendedprice", 0.25, "p25_price"),
+            PSpec("l_extendedprice", 0.75, "p75_price"),
+            PSpec("l_quantity", 0.5, "med_qty_disc", disc = true)))
+          .drop("n_rows")
+        l.select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
+            col("l_extendedprice"))
+          .join(broadcast(pct), Seq("l_returnflag"))
+          .selectExpr("l_orderkey", "l_linenumber", "l_returnflag",
+            "l_extendedprice", "p25_price", "p75_price", "med_qty_disc")
+          // duplicate (orderkey, linenumber) pairs exist in the fixture;
+          // remaining ties are full-row-identical → hash-stable
+          .orderBy("l_orderkey", "l_linenumber", "l_returnflag",
+            "l_extendedprice")
+      },
+      Some("""SELECT l_orderkey, l_linenumber, l_returnflag, l_extendedprice,
+             |  quantile_cont(l_extendedprice, 0.25) OVER (PARTITION BY l_returnflag) AS p25_price,
+             |  quantile_cont(l_extendedprice, 0.75) OVER (PARTITION BY l_returnflag) AS p75_price,
+             |  quantile_disc(l_quantity, 0.5) OVER (PARTITION BY l_returnflag) AS med_qty_disc
+             |FROM lineitem
+             |ORDER BY l_orderkey, l_linenumber, l_returnflag, l_extendedprice""".stripMargin)),
 
     // 32. UNPIVOT (columns → rows) — the q23 PIVOT's inverse, previously
     //     spec-only; the SQL-standard form both engines parse.
@@ -975,20 +1021,41 @@ object T2 {
         |ORDER BY cd, day_off""".stripMargin),
 
     // 39. Winsorization (robust-stats clamp): per-group p05/p95 through
-    //     the bounded-memory rank path (ExactPercentileRule), joined back,
-    //     values clamped, decimal-exact sums.
-    sql("q39_winsorize", Seq("lineitem"),
-      """WITH p AS (SELECT l_returnflag,
-        |    PERCENTILE_CONT(0.05) WITHIN GROUP (ORDER BY l_extendedprice) AS p05,
-        |    PERCENTILE_CONT(0.95) WITHIN GROUP (ORDER BY l_extendedprice) AS p95
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l.l_returnflag,
-        |  CAST(SUM(CAST(least(greatest(l_extendedprice, p05), p95) AS DECIMAL(18,6))) AS DOUBLE) AS sum_winsor,
-        |  CAST(SUM(CASE WHEN l_extendedprice < p05 OR l_extendedprice > p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem l JOIN p ON p.l_returnflag = l.l_returnflag
-        |GROUP BY l.l_returnflag
-        |ORDER BY l.l_returnflag""".stripMargin),
+    //     the bounded-memory rank path (PercentileOps — no per-group
+    //     buffering), broadcast back, values clamped, decimal-exact sums.
+    //     The q18 gate already proves the rank-path percentiles are
+    //     bit-equal to DuckDB's QUANTILE_CONT, so the clamped sums gate.
+    // Split: the oracle uses DuckDB's QUANTILE_CONT.
+    QueryDef(
+      "q39_winsorize",
+      (s, d) => {
+        import graft.ops.PercentileOps
+        val l = t(s, d, "lineitem")
+        val pcts = PercentileOps.sortedPercentiles(l, "l_returnflag", Seq(
+          PercentileOps.PSpec("l_extendedprice", 0.05, "p05"),
+          PercentileOps.PSpec("l_extendedprice", 0.95, "p95")))
+          .select("l_returnflag", "p05", "p95")
+        l.join(broadcast(pcts), Seq("l_returnflag"))
+          .selectExpr("l_returnflag",
+            "least(greatest(l_extendedprice, p05), p95) as clipped",
+            "cast(l_extendedprice < p05 or l_extendedprice > p95 as int) as is_clip")
+          .groupBy(col("l_returnflag"))
+          .agg(dsum(col("clipped")).as("sum_winsor"),
+            sum(col("is_clip")).cast("long").as("n_clipped"),
+            count(lit(1)).as("n_rows"))
+          .orderBy(col("l_returnflag"))
+      },
+      Some("""WITH p AS (SELECT l_returnflag,
+             |    QUANTILE_CONT(l_extendedprice, 0.05) AS p05,
+             |    QUANTILE_CONT(l_extendedprice, 0.95) AS p95
+             |  FROM lineitem GROUP BY l_returnflag)
+             |SELECT l.l_returnflag,
+             |  CAST(SUM(CAST(least(greatest(l_extendedprice, p05), p95) AS DECIMAL(18,6))) AS DOUBLE) AS sum_winsor,
+             |  CAST(SUM(CASE WHEN l_extendedprice < p05 OR l_extendedprice > p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped,
+             |  COUNT(*) AS n_rows
+             |FROM lineitem l JOIN p ON p.l_returnflag = l.l_returnflag
+             |GROUP BY l.l_returnflag
+             |ORDER BY l.l_returnflag""".stripMargin)),
 
     // 40. Calendar gap-filling: per user, a complete daily spine from
     //     first to last activity (explode(sequence(date, date)) — a

@@ -50,11 +50,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plain-SQL range joins → bucketed equi joins, opt-in via
     // spark.graft.rangeJoin.bucketWidth (see graft.plans.RangeJoinRule)
     ext.injectOptimizerRule(graft.plans.RangeJoinRule.apply)
-    // exact MEDIAN / PERCENTILE_CONT|DISC aggregates and whole-partition
-    // percentile windows → the PercentileOps rank path; post-hoc, so it
-    // sees the analyzer's percentile classes (graft.plans.ExactPercentileRule)
-    ext.injectPostHocResolutionRule(graft.plans.ExactPercentileRule.apply)
-    // k approx_percentile sketches over one column → ONE shared sketch
+    // k exact percentiles over one column → ONE shared buffer
     // (see graft.plans.MergePercentileRule)
     ext.injectOptimizerRule(_ => graft.plans.MergePercentileRule)
   }

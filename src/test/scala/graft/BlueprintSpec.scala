@@ -130,40 +130,6 @@ class BlueprintSpec extends SparkSpecBase {
     assert(lines.get(0) === "o_orderkey,o_totalprice")
   }
 
-  test("store query results: MEDIAN() OVER text takes the rank path, not a Window percentile") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    spark.createDataFrame(Seq[(String, java.lang.Double)](("a", 1.0), ("a", 4.0),
-        ("a", 2.0), ("a", 3.0), ("b", 10.0), (null, 7.0), (null, 5.0), ("c", null)))
-      .toDF("k", "v").createOrReplaceTempView("med_t")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val dest = StoreQueryResults.run(spark,
-        "SELECT k, v, MEDIAN(v) OVER (PARTITION BY k) AS med FROM med_t ORDER BY k, v",
-        s"$tmp/out", "median_over.csv", header = true)
-      // a NULL key is a partition of its own; an all-NULL one has a NULL median
-      assert(Files.readAllLines(Paths.get(dest)).toArray.toSeq === Seq("k,v,med",
-        ",5.0,6.0", ",7.0,6.0", "a,1.0,2.5", "a,2.0,2.5", "a,3.0,2.5", "a,4.0,2.5",
-        "b,10.0,10.0", "c,,"))
-      // listener events arrive on the listener bus, after the write returns
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      val seen = plans.toArray.map(_.toString)
-      seen.foreach { p =>
-        assert(!p.contains("ObjectHashAggregate"), p)
-        assert("(?i)\\b(percentile|median)\\(".r.findFirstIn(p).isEmpty,
-          s"a percentile operator ran:\n$p")
-      }
-      assert(seen.exists(_.contains("HashAggregate")), seen.mkString("\n"))
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   test("store query results honors file-header=false (fixing the reference bug)") {
     Tables.registerAll(spark, sfDir)
     val dest = StoreQueryResults.run(spark,

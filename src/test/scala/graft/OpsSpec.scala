@@ -750,16 +750,9 @@ class OpsSpec extends SparkSpecBase {
 
   test("sorted percentiles are BIT-identical to the buffering aggregate") {
     // q25_within_group_sorted (PercentileOps rank path, O(1) per-group
-    // memory) vs Spark's buffering percentile/percentile_disc in the array
-    // form ExactPercentileRule leaves alone: same interpolation
-    // arithmetic → exact double equality, not epsilon.
-    Tables.load(spark, sfDir, "lineitem").createOrReplaceTempView("lineitem")
-    val buffered = spark.sql(
-      """SELECT l_returnflag, pc[0] AS p25, pc[1] AS p75, pd[0] AS p50_disc, n_rows FROM (
-        |  SELECT l_returnflag, percentile(l_extendedprice, array(0.25, 0.75)) AS pc,
-        |         percentile_disc(array(0.5)) WITHIN GROUP (ORDER BY l_extendedprice) AS pd,
-        |         CAST(COUNT(*) AS BIGINT) AS n_rows
-        |  FROM lineitem GROUP BY l_returnflag) ORDER BY l_returnflag""".stripMargin).collect()
+    // memory) vs q25_within_group (Spark's buffering percentile_cont/disc):
+    // same interpolation arithmetic → exact double equality, not epsilon.
+    val buffered = SparkEntry.queries("q25_within_group")(spark, sfDir).collect()
     val sorted = SparkEntry.queries("q25_within_group_sorted")(spark, sfDir).collect()
     assert(buffered.length === sorted.length && buffered.nonEmpty)
     buffered.zip(sorted).foreach { case (b, s) =>
@@ -772,15 +765,8 @@ class OpsSpec extends SparkSpecBase {
 
   test("q18 sorted twin is BIT-identical to the buffering median/percentile") {
     // multi-value-column shape: median(l_quantity) + two percentiles of
-    // l_extendedprice → two ranked passes joined back on the group key;
-    // the reference is the buffering array form
-    Tables.load(spark, sfDir, "lineitem").createOrReplaceTempView("lineitem")
-    val buffered = spark.sql(
-      """SELECT l_returnflag, mq[0] AS med_qty, pp[0] AS p25_price, pp[1] AS p75_price,
-        |       n_rows FROM (
-        |  SELECT l_returnflag, percentile(l_quantity, array(0.5)) AS mq,
-        |         percentile(l_extendedprice, array(0.25, 0.75)) AS pp, COUNT(*) AS n_rows
-        |  FROM lineitem GROUP BY l_returnflag) ORDER BY l_returnflag""".stripMargin).collect()
+    // l_extendedprice → two ranked passes joined back on the group key
+    val buffered = SparkEntry.queries("q18_percentiles")(spark, sfDir).collect()
     val sorted = SparkEntry.queries("q18_percentiles_sorted")(spark, sfDir).collect()
     assert(buffered.length === sorted.length && buffered.nonEmpty)
     buffered.zip(sorted).foreach { case (b, s) =>
@@ -806,6 +792,16 @@ class OpsSpec extends SparkSpecBase {
     assert(out(1).getDouble(1) === 10.0 && out(1).getDouble(2) === 10.0)
     assert(out(2).isNullAt(1) && out(2).isNullAt(2)) // nulls, group kept
     assert(out.map(_.getLong(3)).toSeq === Seq(4L, 1L, 2L)) // COUNT(*) incl nulls
+
+    // the NULL key is a group of its own with its real percentiles, as in
+    // SQL: the fold-in joins are null-safe (the group spans partitions)
+    val withNull = df.union((1 to 301).map(i =>
+      (null: String, java.lang.Double.valueOf(i.toDouble))).toDF("k", "v")).repartition(3)
+    val nk = sortedPercentiles(withNull, "k", Seq(
+        PSpec("v", 0.5, "med"), PSpec("v", 0.5, "med_d", disc = true)))
+      .filter(col("k").isNull).collect()
+    assert(nk.length === 1)
+    assert((nk(0).getDouble(1), nk(0).getDouble(2), nk(0).getLong(3)) === (151.0, 151.0, 301L))
   }
 
   test("span dedup finds planted cross-document paragraphs with exact boundaries") {
@@ -3095,23 +3091,18 @@ class OpsSpec extends SparkSpecBase {
         |  FROM pct_t GROUP BY g) ORDER BY g""".stripMargin).collect()
     assert(merged.toSeq == reference.toSeq)
 
-    // ExactPercentileRule shapes, each against the buffering array form:
-    // a NULL-key group (large enough to rank across partitions), two
-    // grouping keys, PERCENTILE_DISC, a FILTER'd percentile, COUNT/SUM
-    // beside the percentiles, a global aggregate over empty input, a
-    // whole-partition MEDIAN window and a CTE input
+    // more shapes, each against the array form: a NULL-key group (large
+    // enough to span partitions), two grouping keys, PERCENTILE_DISC, a
+    // FILTER'd percentile, COUNT/SUM beside the percentiles, a global
+    // aggregate over empty input and a whole-partition MEDIAN window
     val wide = df.union((1 to 300).map(i =>
         (null: String, java.lang.Double.valueOf((i * 37 % 541).toDouble))).toDF("g", "v"))
       .withColumn("g2", expr("cast(coalesce(v, 0) as bigint) % 2"))
       .repartition(3)
     wide.createOrReplaceTempView("pct_w")
-    def same(viaRule: String, buffered: String): Seq[Row] = {
-      val ruled = spark.sql(viaRule)
-      val p = ruled.queryExecution.executedPlan.toString
-      assert(!p.contains("ObjectHashAggregate") && !p.contains("percentile("),
-        s"the rank path did not take:\n$p")
-      val got = ruled.collect().toSeq
-      assert(got == spark.sql(buffered).collect().toSeq, viaRule)
+    def same(text: String, arrayForm: String): Seq[Row] = {
+      val got = spark.sql(text).collect().toSeq
+      assert(got == spark.sql(arrayForm).collect().toSeq, text)
       got
     }
     val grouped = same(
@@ -3139,13 +3130,6 @@ class OpsSpec extends SparkSpecBase {
         |ORDER BY g, v""".stripMargin,
       """SELECT g, v, percentile(v, array(0.5)) OVER (PARTITION BY g)[0] AS med
         |FROM pct_w ORDER BY g, v""".stripMargin)
-    // a CTE as the percentile's input (the passes read its body)
-    same(
-      """WITH t AS (SELECT g, v * 2 AS w FROM pct_w)
-        |SELECT g, MEDIAN(w) AS med, COUNT(*) AS n FROM t GROUP BY g ORDER BY g""".stripMargin,
-      """WITH t AS (SELECT g, v * 2 AS w FROM pct_w)
-        |SELECT g, percentile(w, array(0.5))[0] AS med, COUNT(*) AS n FROM t
-        |GROUP BY g ORDER BY g""".stripMargin)
   }
 
   test("percentile merge eligibility: FILTER clauses and mixed accuracies stay apart") {
@@ -3164,13 +3148,12 @@ class OpsSpec extends SparkSpecBase {
         })
       }.flatten.distinct.size
     }
-    // a FILTER'd aggregate sees different rows — it takes its own ranked
-    // pass, so neither exact percentile leaves a buffer (and the values
-    // must stay right)
+    // a FILTER'd aggregate sees different rows — must NOT merge with the
+    // unfiltered one (and the values must stay right)
     val filtered =
       """SELECT g, percentile(v, 0.25) FILTER (WHERE v > 0) AS p25_pos,
         |       percentile(v, 0.75) AS p75 FROM pct_t2 GROUP BY g ORDER BY g""".stripMargin
-    assert(buffers(filtered) == 0, "exact percentiles must take the rank path")
+    assert(buffers(filtered) == 2, "FILTER'd percentile must keep its own buffer")
     val viaFilter = spark.sql(filtered).collect()
     val manual = spark.sql(
       """SELECT t.g, p.p25_pos, t.p75 FROM

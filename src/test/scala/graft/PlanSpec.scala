@@ -10,13 +10,6 @@ class PlanSpec extends SparkSpecBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
-  /** The adaptive plan after the query ran: AQE's runtime join choices. */
-  private def finalPlan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.collect()
-    df.queryExecution.executedPlan.toString
-  }
-
   test("q02 join chain broadcasts the dim tables and never goes cartesian") {
     val p = plan("q02_join_chain")
     assert(p.contains("BroadcastHashJoin"), s"dims must broadcast:\n$p")
@@ -252,7 +245,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("q24 median-window rewrite broadcasts the tiny per-group medians") {
-    val p = finalPlan("q24_median_window")
+    val p = plan("q24_median_window")
     assert(p.contains("BroadcastHashJoin"), s"medians side must broadcast:\n$p")
   }
 
@@ -279,7 +272,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("q31 percentile-window rewrite broadcasts, never buffers a group") {
-    val p = finalPlan("q31_percentile_window")
+    val p = plan("q31_percentile_window")
     assert(p.contains("BroadcastHashJoin"),
       s"percentile side must broadcast:\n$p")
     // the per-row result comes from a broadcast join of O(groups) rows, and
@@ -339,8 +332,9 @@ class PlanSpec extends SparkSpecBase {
       s"buffering aggregate crept back in:\n$p")
     assert(p.linesIterator.exists(_.contains("Window [")), p)
     assert(p.contains("HashAggregate"), p)
-    // and q25's WITHIN GROUP text takes the same rank path (ExactPercentileRule)
-    assert(!plan("q25_within_group").contains("ObjectHashAggregate"))
+    // and the baseline q25 really does take the buffering path (the
+    // contrast this gate encodes)
+    assert(plan("q25_within_group").contains("ObjectHashAggregate"))
   }
 
   test("span dedup candidates come from a fingerprint group-by, never a pair join") {
@@ -362,7 +356,7 @@ class PlanSpec extends SparkSpecBase {
       s"buffering aggregate crept back in:\n$p")
     assert(p.linesIterator.exists(_.contains("Window [")), p)
     assert(p.contains("HashAggregate"), p)
-    assert(!plan("q18_percentiles").contains("ObjectHashAggregate"))
+    assert(plan("q18_percentiles").contains("ObjectHashAggregate"))
   }
 
   test("stratified sample pushes the rank limit below the exchange (WindowGroupLimit)") {
@@ -563,21 +557,27 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("MergePercentileRule: multi-percentile profiling shares ONE buffer per column") {
-    // q25b requests three approx percentiles of l_extendedprice at one
-    // accuracy. Unmerged, each builds its own sketch of the column; the
-    // rule must collapse them to one array-percentage aggregate. Red if
-    // the rule stops firing (distinct buffers) or starts duplicating
-    // (distinct resultIds for the same merge key).
+    // q18 (DataFrame form) and q25 (Redshift WITHIN GROUP text) each
+    // request two exact percentiles of l_extendedprice. Unmerged, the
+    // ObjectHashAggregate buffers + shuffles the column once PER
+    // percentile; the rule must collapse them to one array-percentage
+    // aggregate. Red if the rule stops firing (2 distinct buffers) or
+    // starts duplicating (distinct resultIds for the same merge key).
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile}
-    // (query, expected merged percentage count)
-    val cases = Seq(("q25_within_group_approx", 3)) // one GK sketch, 3 fractions
-    for ((name, nPct) <- cases) {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile, Percentile}
+    // (query, expected merged percentage count, exact?)
+    val cases = Seq(
+      ("q18_percentiles", 2, true), // 0.25 + 0.75 of extendedprice
+      ("q25_within_group", 2, true), // CONT 0.25 + 0.75 (DISC 0.5 stays apart)
+      ("q25_within_group_approx", 3, false)) // one GK sketch, 3 fractions
+    for ((name, nPct, exact) <- cases) {
       val opt = SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
       val onPrice = opt.collect { case a: Aggregate =>
         a.aggregateExpressions.flatMap(_.collect {
           case ae: AggregateExpression => ae.aggregateFunction match {
-            case p: ApproximatePercentile if
+            case p: Percentile if exact &&
+                p.child.toString.contains("l_extendedprice") => Some((ae, p.percentageExpression))
+            case p: ApproximatePercentile if !exact &&
                 p.child.toString.contains("l_extendedprice") => Some((ae, p.percentageExpression))
             case _ => None
           }
@@ -598,20 +598,6 @@ class PlanSpec extends SparkSpecBase {
         case e => e.children.size
       }
       assert(got == nPct, s"$name: expected $nPct merged fractions, got $got")
-    }
-  }
-
-  test("percentile SQL texts plan onto the rank path: no buffering aggregate, no percentile") {
-    // q18, q24, q25, q31 and q39 are one Redshift text each; ExactPercentileRule
-    // must leave no ObjectHashAggregate, no percentile aggregate and no
-    // Window percentile in the executed plan
-    val percentileCall = "(?i)\\b(percentile|percentile_cont|percentile_disc|median)\\(".r
-    for (name <- Seq("q18_percentiles", "q24_median_window", "q25_within_group",
-        "q31_percentile_window", "q39_winsorize")) {
-      val p = plan(name)
-      assert(!p.contains("ObjectHashAggregate"), s"$name buffers a group:\n$p")
-      assert(percentileCall.findFirstIn(p).isEmpty, s"$name kept a percentile call:\n$p")
-      assert(p.contains("HashAggregate"), p)
     }
   }
 }
